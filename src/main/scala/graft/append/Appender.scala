@@ -1,6 +1,6 @@
 package graft.append
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model._
@@ -42,26 +42,19 @@ final case class AppendResult(firstRevision: Long, lastRevision: Long,
  * transaction + UNIQUE(stream, revision) constraint. A parquet log has no
  * compare-and-swap, so this appender assumes a single writer per log (the
  * normal Spark deployment: one ingest job per table; use a
- * transactional table format for multi-writer). The max-revision /
- * max-position lookups are one small aggregation per call — at scale
- * they'd come from the writer's own watermark state (SURVEY.md §7.3), not
- * a log scan.
+ * transactional table format for multi-writer).
+ *
+ * Cost: an [[append]] (and [[delete]] / [[tombstone]]) reads every
+ * precondition — the stream's revision, the global high-water position,
+ * the tombstone flag and the (stream, uuid) conflicts — in ONE global
+ * aggregate over the log (one scan, 2 Spark jobs under AQE), replays the
+ * checks on the driver, and writes the rows as one parquet file (1 job).
+ * At scale the state would come from the writer's own watermark and key
+ * state (SURVEY.md §7.3), not a log scan.
  */
 object Appender {
 
   private val requiredMeta = Seq("type", "content-type") // streams.go:205-209
-
-  /** Current max revision of a stream, -1 if the stream doesn't exist
-    * (ref streams.go:61-91) — and the global high-water position. */
-  def currentState(log: DataFrame, stream: String): (Long, Long) = {
-    val row: Row = log
-      .agg(
-        max(when(col("stream") === stream, col("revision"))).as("rev"),
-        max(col("position")).as("pos")
-      )
-      .head()
-    (if (row.isNullAt(0)) -1L else row.getLong(0), if (row.isNullAt(1)) 0L else row.getLong(1))
-  }
 
   private def checkRevision(stream: String, current: Long, expected: ExpectedRevision): Unit = {
     val ok = expected match {
@@ -76,21 +69,6 @@ object Appender {
   private def validate(events: Seq[ProposedEvent]): Unit =
     for (e <- events; k <- requiredMeta if !e.metadata.contains(k)) throw MissingMetadata(k)
 
-  /** Duplicate (stream, uuid) detection — the reference's PK on
-    * (stream, uuid) surfaces `ErrConflict` on a replayed append
-    * (`backend/backend.go:48,316-329`). One filtered lookup against the
-    * log per append call; at scale this comes from the single writer's
-    * own key state (bloom/watermark), not a log scan. */
-  private def checkConflicts(log: DataFrame, stream: String, events: Seq[ProposedEvent]): Unit = {
-    val dupInBatch = events.groupBy(_.uuid).collectFirst { case (u, es) if es.size > 1 => u }
-    dupInBatch.foreach(u => throw EventConflict(stream, u))
-    val uuids = events.map(_.uuid)
-    val existing = log
-      .filter(col("stream") === stream && col("uuid").isin(uuids: _*))
-      .select("uuid").limit(1).collect()
-    if (existing.nonEmpty) throw EventConflict(stream, existing(0).getString(0))
-  }
-
   /**
    * Append a batch of proposed events to `stream` in the parquet log at
    * `logDir`, enforcing the expected-revision precondition. `nowNanos`
@@ -103,30 +81,61 @@ object Appender {
     appendInternal(spark, logDir, stream, events, expected, nowNanos)
   }
 
-  /** Shared append path (markers skip user-metadata validation). */
+  /** Shared append path (markers skip user-metadata validation). Every
+    * precondition comes from one aggregate; the checks then replay in the
+    * reference's order — tombstone, expected revision, then the (stream,
+    * uuid) PK at insert time (streams.go, backend.go:316-329): a uuid
+    * twice in the call, then one already in the stream. The smallest such
+    * uuid is reported, so the error is deterministic. */
   private def appendInternal(spark: SparkSession, logDir: String, stream: String,
                              events: Seq[ProposedEvent], expected: ExpectedRevision,
                              nowNanos: Long): AppendResult = {
     require(events.nonEmpty, "empty append")
-    val log = readLog(spark, logDir)
-    if (isTombstoned(log, stream)) throw StreamDeleted(stream)
-    val (currentRev, maxPos) = currentState(log, stream)
+    val inStream = col("stream") === stream
+    val state = readLog(spark, logDir)
+      .agg(
+        max(when(inStream, col("revision"))),
+        max(col("position")),
+        max(when(inStream && col("event_type") === TombstoneMarker, true)),
+        min(when(inStream && col("uuid").isin(events.map(_.uuid).distinct: _*), col("uuid"))))
+      .head()
+    if (!state.isNullAt(2)) throw StreamDeleted(stream)
+    val currentRev = if (state.isNullAt(0)) -1L else state.getLong(0)
+    val maxPos = if (state.isNullAt(1)) 0L else state.getLong(1)
     checkRevision(stream, currentRev, expected)
-    // after the precondition, like the reference (revision check in
-    // streams.go, PK conflict at insert time)
-    checkConflicts(log, stream, events)
-
-    val created = (nowNanos / 100L).toString // 100-ns ticks, streams.go:151
-    import spark.implicits._
-    val rows = events.zipWithIndex.map { case (e, i) =>
-      (stream, e.uuid, e.eventType, e.data,
-        e.metadata + ("created" -> created), e.customMetadata,
-        currentRev + 1L + i, maxPos + 1L + i)
-    }.toDF("stream", "uuid", "event_type", "data", "metadata", "custom_metadata",
-      "revision", "position")
-    rows.write.mode("append").parquet(logDir)
+    events.groupBy(_.uuid).collect { case (u, es) if es.size > 1 => u }.minOption
+      .foreach(u => throw EventConflict(stream, u))
+    if (!state.isNullAt(3)) throw EventConflict(stream, state.getString(3))
+    write(spark, logDir, logRows(stream, events, currentRev, maxPos, nowNanos))
     AppendResult(currentRev + 1L, currentRev + events.size,
       maxPos + 1L, maxPos + events.size)
+  }
+
+  private type LogRow = (String, String, String, String, Map[String, String], Option[String], Long, Long)
+
+  /** Server-assigned rows: dense revisions after `currentRev`, dense
+    * positions after `maxPos`, `created` in 100-ns ticks (streams.go:150-151). */
+  private def logRows(stream: String, events: Seq[ProposedEvent], currentRev: Long,
+                      maxPos: Long, nowNanos: Long): Seq[LogRow] = {
+    val created = (nowNanos / 100L).toString
+    events.zipWithIndex.map { case (e, i) =>
+      (stream, e.uuid, e.eventType, e.data, e.metadata + ("created" -> created),
+        e.customMetadata, currentRev + 1L + i, maxPos + 1L + i)
+    }
+  }
+
+  /** The one log writer. parallelize, NOT a local Seq toDF: a LocalRelation
+    * embeds every row in the serialized plan and encodes+writes them in ONE
+    * task, which at throughput-tier sink triggers (100k+ rows) makes the
+    * parquet encode the bottleneck; an RDD ships rows as blocks and spreads
+    * the encode across up to 8 tasks. A call under 20k rows is one slice,
+    * so it writes exactly one parquet file. */
+  private def write(spark: SparkSession, logDir: String, rows: Seq[LogRow]): Unit = {
+    import spark.implicits._
+    spark.sparkContext.parallelize(rows, math.max(1, math.min(8, rows.size / 10000)))
+      .toDF("stream", "uuid", "event_type", "data", "metadata", "custom_metadata",
+        "revision", "position")
+      .write.mode("append").parquet(logDir)
   }
 
   // system event types for the stream-lifecycle markers (the reference
@@ -135,10 +144,6 @@ object Appender {
   // EventStoreDB's semantics: soft delete truncates, tombstone is final)
   val DeletedMarker = "$deleted"
   val TombstoneMarker = "$tombstoned"
-
-  private def isTombstoned(log: DataFrame, stream: String): Boolean =
-    log.filter(col("stream") === stream && col("event_type") === TombstoneMarker)
-      .limit(1).count() > 0
 
   private def marker(uuid: String, tpe: String): ProposedEvent =
     ProposedEvent(uuid, tpe, "",
@@ -177,7 +182,6 @@ object Appender {
         throw EventConflict(s, u)
       }
     val log = readLog(spark, logDir)
-    val created = (nowNanos / 100L).toString
     import spark.implicits._
     // Precondition state for ALL touched streams in TWO jobs (not three
     // per stream): one grouped aggregation for global max position +
@@ -205,8 +209,7 @@ object Appender {
       .select("stream", "uuid").collect()
       .map(r => (r.getString(0), r.getString(1))).toSet
     val results = Seq.newBuilder[(String, AppendResult)]
-    val rows =
-      Seq.newBuilder[(String, String, String, String, Map[String, String], Option[String], Long, Long)]
+    val rows = Seq.newBuilder[LogRow]
     // running per-stream revision across the call: a stream appearing in
     // two batches of one call continues its dense sequence (one tx)
     val revs = scala.collection.mutable.Map.empty[String, Long]
@@ -214,35 +217,16 @@ object Appender {
       if (streamInfo.get(stream).exists(_._2)) throw StreamDeleted(stream)
       val currentRev = revs.getOrElse(stream, streamInfo.get(stream).fold(-1L)(_._1))
       checkRevision(stream, currentRev, expected)
-      events.groupBy(_.uuid).collectFirst { case (u, es) if es.size > 1 =>
-        throw EventConflict(stream, u)
-      }
       events.collectFirst {
         case e if conflictPairs((stream, e.uuid)) => throw EventConflict(stream, e.uuid)
       }
-      events.zipWithIndex.foreach { case (e, i) =>
-        rows += ((stream, e.uuid, e.eventType, e.data,
-          e.metadata + ("created" -> created), e.customMetadata,
-          currentRev + 1L + i, maxPos + 1L + i))
-      }
+      rows ++= logRows(stream, events, currentRev, maxPos, nowNanos)
       results += stream -> AppendResult(currentRev + 1L, currentRev + events.size,
         maxPos + 1L, maxPos + events.size)
       revs(stream) = currentRev + events.size
       maxPos += events.size
     }
-    // parallelize, NOT a local Seq toDF: a LocalRelation embeds every row
-    // in the serialized plan and encodes+writes them in ONE task, which
-    // at throughput-tier triggers (100k+ rows) makes the parquet encode
-    // the sink's bottleneck. An RDD ships rows as blocks and spreads the
-    // encode/write across tasks — position/revision assignment above
-    // stays the sequential driver fold (the single-writer contract), but
-    // nothing downstream of it needs to be single-threaded.
-    val assigned = rows.result()
-    val slices = math.max(1, math.min(8, assigned.size / 10000))
-    spark.sparkContext.parallelize(assigned, slices)
-      .toDF("stream", "uuid", "event_type", "data", "metadata", "custom_metadata",
-        "revision", "position")
-      .write.mode("append").parquet(logDir)
+    write(spark, logDir, rows.result())
     results.result()
   }
 

@@ -17,11 +17,13 @@ import graft.model.{AnyRevision, EventConflict}
  * Exactly-once without a ledger: Structured Streaming redelivers the
  * last uncommitted micro-batch on restart, and the appender's
  * `(stream, uuid)` conflict check (the reference's PK,
- * `backend.go:48,316-329`) rejects the replay — [[EventConflict]] on a
- * redelivered batch means "already applied", so the sink treats it as
- * success. The micro-batch is written as ONE `batchAppend` call (a
- * single parquet append), so a batch is either fully applied or not at
- * all — there is no partial-replay state.
+ * `backend.go:48,316-329`) rejects the replay. The micro-batch is
+ * written as ONE `batchAppend` call (a single parquet append), so a batch
+ * is either fully applied or not at all — there is no partial-replay
+ * state. An [[EventConflict]] is therefore success only when every
+ * (stream, uuid) of the batch is already in the log; any other conflict
+ * (an in-batch duplicate, applied pairs mixed with new ones) fails the
+ * trigger loudly, with nothing written.
  *
  * Scale: revision assignment is inherently a per-stream sequential fold
  * (the single-writer contract, SURVEY §2.1), so the sink drains each
@@ -34,7 +36,8 @@ object LogSink {
 
   /** Apply one micro-batch: group by stream (event order within a stream
     * = ascending `orderCol`), one transactional batchAppend; a replayed
-    * batch surfaces as an event conflict and is skipped. */
+    * batch surfaces as an event conflict and is skipped, any other
+    * conflict is rethrown. */
   def applyBatch(spark: SparkSession, logDir: String, batch: DataFrame,
                  orderCol: String): Unit = {
     val rows = batch
@@ -60,8 +63,26 @@ object LogSink {
             AnyRevision: graft.model.ExpectedRevision)
         }
       try Appender.batchAppend(spark, logDir, batches)
-      catch { case _: EventConflict => () } // redelivered micro-batch: already applied
+      catch { // redelivered micro-batch: already applied; any other conflict propagates
+        case _: EventConflict if alreadyApplied(spark, logDir,
+          rows.toSeq.map(r => (r.getString(0), r.getString(1)))) => ()
+      }
     }
+  }
+
+  /** True when EVERY (stream, uuid) of the batch is already in the log:
+    * only then is a conflict a redelivered, fully applied micro-batch. A
+    * batch that repeats a pair, or mixes applied and new pairs, is not
+    * (batchAppend wrote none of it). One broadcast lookup, on the conflict
+    * path only; the log's (stream, uuid) pairs are unique, so the matches
+    * of the distinct pairs number the batch's rows exactly when the rows
+    * are distinct and all present. */
+  private def alreadyApplied(spark: SparkSession, logDir: String,
+                             pairs: Seq[(String, String)]): Boolean = {
+    import spark.implicits._
+    Appender.readLog(spark, logDir)
+      .join(broadcast(pairs.distinct.toDF("stream", "uuid")), Seq("stream", "uuid"))
+      .count() == pairs.size
   }
 
   /** Start the sink: `src` must provide (stream, uuid, event_type, data)

@@ -2,6 +2,8 @@ package graft.append
 
 import java.nio.file.Files
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
 import graft.SparkSpec
 import graft.model._
 
@@ -61,7 +63,7 @@ class AppenderSpec extends SparkSpec {
     // Exact match + Any: ok
     Appender.append(spark, dir, "s", events(1), ExactRevision(1))
     Appender.append(spark, dir, "s", events(1), AnyRevision)
-    assert(Appender.currentState(Appender.readLog(spark, dir), "s")._1 == 3L)
+    assert(graft.log.EventLog.maxRevision(Appender.readLog(spark, dir), "s").head().getLong(0) == 3L)
   }
 
   test("duplicate (stream, uuid) append → EventConflict (backend.go:48,316-329)") {
@@ -83,6 +85,76 @@ class AppenderSpec extends SparkSpec {
     intercept[EventConflict](Appender.batchAppend(spark, dir, Seq(
       ("b1", Seq(e.copy(uuid = "x")), AnyRevision),
       ("b1", Seq(e.copy(uuid = "x")), AnyRevision))))
+  }
+
+  test("one append to a non-empty log runs at most 3 Spark jobs and adds exactly one parquet file") {
+    val dir = freshLog()
+    Appender.append(spark, dir, "s", events(40), NoStream)
+    Appender.append(spark, dir, "t", events(3), NoStream)
+    def parquetFiles = new java.io.File(dir).listFiles().count(_.getName.endsWith(".parquet"))
+    val filesBefore = parquetFiles
+    // jobs are tagged by a local property; a sentinel job submitted after the
+    // append returns is delivered after every append job's start event
+    val phase = "graft.test.phase"
+    val appendJobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(phase))) match {
+          case Some("append")   => appendJobs.incrementAndGet()
+          case Some("sentinel") => sentinelSeen.countDown()
+          case _                =>
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(phase, "append")
+      val r = Appender.append(spark, dir, "s", events(4), ExactRevision(39))
+      assert(r == AppendResult(40L, 43L, 44L, 47L))
+      sc.setLocalProperty(phase, "sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      assert(sentinelSeen.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener never saw the sentinel job")
+    } finally {
+      sc.setLocalProperty(phase, null)
+      sc.removeSparkListener(listener)
+    }
+    assert(appendJobs.get() <= 3, s"append ran ${appendJobs.get()} jobs")
+    assert(parquetFiles == filesBefore + 1)
+  }
+
+  test("precedence: a tombstoned stream reports StreamDeleted before a wrong revision") {
+    val dir = freshLog()
+    Appender.append(spark, dir, "s", events(2), NoStream)
+    Appender.tombstone(spark, dir, "s", nowNanos = 7L)
+    intercept[StreamDeleted](Appender.append(spark, dir, "s", events(1), ExactRevision(99)))
+  }
+
+  test("precedence: a wrong revision is reported before a replayed uuid") {
+    val dir = freshLog()
+    val first = events(2)
+    Appender.append(spark, dir, "s", first, NoStream)
+    val e = intercept[WrongExpectedRevision](Appender.append(spark, dir, "s", first.take(1), ExactRevision(5)))
+    assert(e.current == Some(1L))
+  }
+
+  test("precedence: a wrong revision is reported before an in-batch duplicate") {
+    val dir = freshLog()
+    Appender.append(spark, dir, "s", events(1), NoStream)
+    val dup = events(1)
+    val e = intercept[WrongExpectedRevision](Appender.append(spark, dir, "s", dup ++ dup, ExactRevision(5)))
+    assert(e.current == Some(0L))
+  }
+
+  test("EventConflict reports the smallest uuid already in the stream") {
+    val dir = freshLog()
+    def ev(u: String) = ProposedEvent(u, "t", "{}", Map("type" -> "t", "content-type" -> "ct"))
+    val inLog = Seq("m", "g", "q", "x", "c", "w", "k", "t", "e", "p", "h", "s")
+    Appender.append(spark, dir, "s", inLog.map(ev))
+    val proposed = Seq("z", "new") ++ inLog.filterNot(_ == "c").reverse
+    val c = intercept[EventConflict](Appender.append(spark, dir, "s", proposed.map(ev)))
+    assert(c.stream == "s" && c.uuid == "e")
+    assert(Appender.readLog(spark, dir).count() == inLog.size)
   }
 
   test("custom_metadata is persisted and round-trips (backend.go:43)") {

@@ -176,6 +176,25 @@ class StreamingSpec extends SparkSpec {
       "replayed micro-batch must not double-append")
   }
 
+  test("log sink: a batch mixing applied and new events, or repeating one, throws and writes nothing") {
+    import spark.implicits._
+    val logDir = Files.createTempDirectory("sinklog-mixed").toString
+    LogSink.applyBatch(spark, logDir,
+      Seq(SinkRow("a", "u1", "t", "d1", 1), SinkRow("b", "u2", "t", "d2", 1)).toDF(), "ord")
+    def count = graft.append.Appender.readLog(spark, logDir).count()
+    assert(count == 2L)
+    // one applied pair beside a new one: not a redelivery, the new event must not be lost silently
+    val mixed = Seq(SinkRow("a", "u1", "t", "d1", 1), SinkRow("a", "u3", "t", "d3", 2)).toDF()
+    val c = intercept[EventConflict](LogSink.applyBatch(spark, logDir, mixed, "ord"))
+    assert(c.stream == "a" && c.uuid == "u1")
+    assert(count == 2L, "a rejected micro-batch must write nothing")
+    // every pair applied, but one repeated: no batch with a duplicate was ever applied
+    val repeated = Seq(SinkRow("a", "u1", "t", "d1", 1), SinkRow("a", "u1", "t", "d1", 2),
+      SinkRow("b", "u2", "t", "d2", 1)).toDF()
+    intercept[EventConflict](LogSink.applyBatch(spark, logDir, repeated, "ord"))
+    assert(count == 2L)
+  }
+
   test("ingest dedup by content: identical payloads under fresh uuids dropped") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
