@@ -2,8 +2,12 @@
 # Run a graft main class directly on the compiled classes (no sbt lock,
 # no sbt startup): mirrors build.sbt's fork JVM flags. Usage:
 #   scripts/run_main.sh graft.Bench [args...]
-# Env knobs pass through (SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS,
-# SPARK_DRIVER_MEM, SPARK_GRAFT_TWIN_TRIGGERS, SPARK_GRAFT_SCALE_ONLY...).
+# Env knobs pass through: SPARK_GRAFT_CPUS (every main), SPARK_DRIVER_MEM
+# (heap), SPARK_GRAFT_SF_DIR (Bench, ColdAttrib), SPARK_GRAFT_BENCH_ONLY
+# (Bench), SPARK_GRAFT_VERIFY_ONLY (Verify), SPARK_GRAFT_WIDEN (Par's
+# fan-out width), SPARK_GRAFT_SCALE_ONLY and SPARK_GRAFT_TWIN_TRIGGERS
+# (ScaleProbe), SPARK_GRAFT_INGEST_ONLY and SPARK_GRAFT_INGEST_TRACE
+# (IngestProbe); the launcher's own are below.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 MAIN="$1"; shift
@@ -40,8 +44,7 @@ if [[ "$APP_CP" == *.jar ]]; then
   elif [[ -f "$JSA" && -z "${SPARK_GRAFT_NO_CDS:-}" ]]; then
     # staleness check: -Xshare:auto ignores an archive trained on an
     # older jar SILENTLY, forfeiting the measured ~9% cold win with no
-    # signal — warn so the operator reruns scripts/gen_cds.sh (Bench
-    # also records cds_archive_loaded from /proc/self/maps per sweep)
+    # signal — warn so the operator reruns scripts/gen_cds.sh
     if [[ "$JSA" -ot "$JAR" ]]; then
       echo "[run_main] WARNING: CDS archive $JSA is older than $JAR — a stale archive is silently ignored; rerun scripts/gen_cds.sh" >&2
     fi

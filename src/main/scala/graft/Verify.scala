@@ -1,26 +1,17 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+
+import scala.util.control.NonFatal
+
+import org.json4s.{JObject, JString}
+import org.json4s.jackson.JsonMethods.compact
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // tolerate either fixture encoding of `ts`: timestamp[us] loads
-      // natively; legacy timestamp[ns] loads as long and Fixture.raw
-      // normalizes it to µs TimestampType
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // codegen working set resident across the 249 queries (see Bench)
-      .config("spark.sql.codegen.cache.maxEntries", "20000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.envCpus(4))
     new java.io.File(outDir).mkdirs()
     // dev: SPARK_GRAFT_VERIFY_ONLY=q1,q2 restricts the set (same contract
     // as Bench's SPARK_GRAFT_BENCH_ONLY); the driver sets neither
@@ -33,37 +24,22 @@ object Verify {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         System.err.println(f"[verify] $name ok (${(System.nanoTime() - t0) / 1e9}%.1fs)")
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         // a failed query must not vanish from the correctness report (a
         // missing output dir is silently skipped by the compare): write a
         // 1-row sentinel result so the compare records a loud mismatch,
         // and collect the message for errors.json
         failed(name) = s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(500)}"
         System.err.println(s"[verify] $name FAILED: ${e.getMessage}")
-        try {
-          import spark.implicits._
-          Seq(failed(name)).toDF("_verify_error")
-            .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-        } catch { case _: Throwable => () }
+        import spark.implicits._
+        Seq(failed(name)).toDF("_verify_error")
+          .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    val errJson = failed.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/errors.json"), errJson)
+    def json(m: Iterable[(String, String)]): String =
+      compact(JObject(m.toList.map { case (k, v) => k -> JString(v) }))
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json(SparkEntry.oracleSql))
+    Files.writeString(Paths.get(s"$outDir/errors.json"), json(failed))
     if (failed.nonEmpty)
       System.err.println(s"[verify] ${failed.size} queries FAILED: ${failed.keys.mkString(", ")}")
     spark.stop()

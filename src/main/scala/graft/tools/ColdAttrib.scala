@@ -1,6 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
+
+import graft.util.ProcStat.{cpuNs, gcMs, jitMs}
 
 /**
  * COLD-pass attribution harness (dev tool behind the r13→r14 cold-axis
@@ -26,31 +28,10 @@ import org.apache.spark.sql.SparkSession
  */
 object ColdAttrib {
 
-  private val osBean = java.lang.management.ManagementFactory
-    .getOperatingSystemMXBean.asInstanceOf[com.sun.management.OperatingSystemMXBean]
-  private def cpuNs(): Long = osBean.getProcessCpuTime
-  private val jitBean = java.lang.management.ManagementFactory.getCompilationMXBean
-  private def jitMs(): Long = jitBean.getTotalCompilationTime
-  private def gcMs(): Long = {
-    import scala.jdk.CollectionConverters._
-    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-      .asScala.map(_.getCollectionTime).sum
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0)
       else sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.codegen.cache.maxEntries", "20000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(graft.GraftSession.envCpus(32))
     final case class R(wall: Double, cpu: Double, jit: Double, gc: Double)
     val rows = scala.collection.mutable.LinkedHashMap.empty[String, R]
     val t00 = System.nanoTime(); val c00 = cpuNs()
@@ -62,7 +43,7 @@ object ColdAttrib {
         fn(spark, sfDir).count(): Unit
         rows(name) = R((System.nanoTime() - w0) / 1e9, (cpuNs() - c0) / 1e9,
           (jitMs() - j0) / 1e3, (gcMs() - g0) / 1e3)
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         System.err.println(s"[coldattrib] $name FAILED: ${e.getClass.getSimpleName}")
       }
     }

@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 
 import graft.append.{Appender, ProposedEvent}
 import graft.log.EventLog
@@ -20,14 +19,7 @@ final case class DemoCount(count: Long)
  */
 object Demo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(4)
 
     val logDir = Files.createTempDirectory("graft-demo-log").toString
     val outDir = Files.createTempDirectory("graft-demo-out").toString

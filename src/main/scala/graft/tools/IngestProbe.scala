@@ -58,17 +58,7 @@ object IngestProbe {
   private def regime(sfDir: String, nBuckets: Int, nMicroBatches: Int,
                      copies: Int, includeSingle: Boolean = true): Regime = {
     val steal0 = graft.util.ProcStat.stealJiffies()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.codegen.cache.maxEntries", "20000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(graft.GraftSession.envCpus(16))
     try {
       // proposed-event shape from the fixture's raw events; ord = event id
       // gives deterministic within-stream order and contiguous micro-batch

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Dev tool: dump `.explain("formatted")` for every gate query (or a
   * comma list) to one file per query — the plan evidence the
@@ -15,22 +15,7 @@ object PlanDump {
       if (args.length > 1 && args(1) != "all") args(1).split(",").toSeq
       else graft.SparkEntry.queries.keys.toSeq.sorted
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.codegen.cache.maxEntries", "20000")
-      // same A/B knobs as StageProfile (defaults = Bench's values)
-      .config("spark.sql.files.openCostInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_OPENCOST", "4194304"))
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MINPART", "1m"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(graft.GraftSession.envCpus(4))
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     var nOk = 0
     names.foreach { name =>
@@ -43,7 +28,7 @@ object PlanDump {
           plan.getBytes("UTF-8"))
         nOk += 1
       } catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           System.err.println(s"[plandump] $name FAILED: ${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")
       }
     }

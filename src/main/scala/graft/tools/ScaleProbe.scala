@@ -29,9 +29,7 @@ import org.apache.spark.sql.functions._
  *     index: posting lists 10× → pair join ~100×; its `_dfcut` variant
  *     is the PB form for exactly this reason).
  *
- * Writes `scale_probe.json`; `Bench` embeds that file into
- * `bench_detail.json` (key "scaling") so the per-round artifact carries
- * the exponents.
+ * Writes `scale_probe.json`.
  *
  * Usage: `sbt "runMain graft.tools.ScaleProbe [smallDir bigDir outPath]"`
  */
@@ -101,7 +99,7 @@ object ScaleProbe {
     "proj_state_all", "olap_cust_order_dist", "olap_min_cost_supplier",
     "agg_sessions", "ts_acf", "corpus_funnel", "mm_frame_dedup")
 
-  private def q(s: String): String = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+  private def q(s: String): String = org.json4s.jackson.JsonMethods.compact(org.json4s.JString(s))
 
   private def time2[A](f: () => A): (Double, A) = {
     f() // warmup (materializes memoized signature tables for the dir)
@@ -258,17 +256,7 @@ object ScaleProbe {
     val big = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val out = if (args.length > 2) args(2) else "scale_probe.json"
     val copies = 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.codegen.cache.maxEntries", "20000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(graft.GraftSession.envCpus(8))
 
     // ---- mirror corpus: `copies` × small, ids remapped per copy ----
     val mirrorDir = java.nio.file.Files.createTempDirectory("graft-mirror").toString

@@ -1,7 +1,8 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+
+import graft.util.ProcStat
 
 /** Dev tool: per-stage metrics for one or more gate queries — where a
   * query's time actually goes (guide §1: measure first). For each named
@@ -21,23 +22,7 @@ object StageProfile {
   def main(args: Array[String]): Unit = {
     val names = args(0).split(",").toSeq
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // A/B knobs for the round-16 config experiments (default = Bench's)
-      .config("spark.sql.files.openCostInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_OPENCOST", "4194304"))
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MINPART", "1m"))
-      // match Bench's codegen cache (see Bench.scala)
-      .config("spark.sql.codegen.cache.maxEntries", "20000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(graft.GraftSession.envCpus(4))
 
     val buf = new java.util.concurrent.ConcurrentLinkedQueue[StageRow]()
     spark.sparkContext.addSparkListener(new SparkListener {
@@ -52,22 +37,15 @@ object StageProfile {
       }
     })
 
-    def gcMs(): Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(_.getCollectionTime).sum
-    }
-    val jitBean = java.lang.management.ManagementFactory.getCompilationMXBean
-
     names.foreach { name =>
       val fn = graft.SparkEntry.queries(name)
       // warmup: JIT + memo builds out of the measured pass
       fn(spark, sfDir).count()
       buf.clear()
-      val w0 = System.nanoTime(); val g0 = gcMs(); val j0 = jitBean.getTotalCompilationTime
+      val w0 = System.nanoTime(); val g0 = ProcStat.gcMs(); val j0 = ProcStat.jitMs()
       val n = fn(spark, sfDir).count()
       val wall = (System.nanoTime() - w0) / 1e9
-      val gcS = (gcMs() - g0) / 1e3; val jitS = (jitBean.getTotalCompilationTime - j0) / 1e3
+      val gcS = (ProcStat.gcMs() - g0) / 1e3; val jitS = (ProcStat.jitMs() - j0) / 1e3
       // listener bus is async (and private) — settle briefly before draining
       Thread.sleep(600)
       val rows = {

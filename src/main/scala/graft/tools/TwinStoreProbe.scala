@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /**
@@ -51,13 +50,7 @@ object TwinStoreProbe {
     val out = if (args.length > 1) args(1) else "twinstore_probe.json"
     val growPerTrigger = 5000
     val hotSize = 500
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(graft.GraftSession.envCpus(8))
     import spark.implicits._
     import graft.streaming.ParquetTwinStore
 

@@ -3,7 +3,6 @@ package graft.tools
 import org.apache.logging.log4j.{Level, LogManager}
 import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
 import org.apache.logging.log4j.core.appender.AbstractAppender
-import org.apache.spark.sql.SparkSession
 
 /**
  * Dev diagnostic (not part of the library): attributes scheduler-level
@@ -31,16 +30,7 @@ object WarnAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
     val only = if (args.length > 1) Some(args(1).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(graft.GraftSession.envCpus(8))
 
     val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
     val cfg = ctx.getConfiguration
@@ -62,7 +52,7 @@ object WarnAudit {
           println(s"WARNAUDIT $name: taskbin=${sizes.length} [${sizes.distinct.mkString(" ")}] window=$win")
         }
       } catch {
-        case e: Throwable => println(s"WARNAUDIT $name: ERROR ${e.getClass.getSimpleName}")
+        case scala.util.control.NonFatal(e) => println(s"WARNAUDIT $name: ERROR ${e.getClass.getSimpleName}")
       }
     }
     println("WARNAUDIT done")

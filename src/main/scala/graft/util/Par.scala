@@ -23,8 +23,8 @@ object Par {
     * downstream AQE-coalesced stages stay width-bounded anyway), while
     * 8/16/32-way raised task-CPU 2-4× from per-task fixed cost +
     * concurrent working sets without further wall gain — and the
-    * regression ratchet runs on the CPU clock with 2x-floor bars, so the
-    * floor stays deliberately minimal. Override with SPARK_GRAFT_WIDEN
+    * bench's time bar is 2x each query's baseline CPU, so the floor
+    * stays deliberately minimal. Override with SPARK_GRAFT_WIDEN
     * (0 disables). */
   def widen(df: DataFrame): DataFrame = {
     val cores = df.sparkSession.sparkContext.defaultParallelism
