@@ -62,19 +62,64 @@ object ProjectionBatch {
       .as[ProjEvent]
   }
 
-  /** Selector filter as a pushable Column predicate (ref `projection.go:96-119`). */
-  private[graft] def selected(p: Projection[_], events: Dataset[ProjEvent]): Dataset[ProjEvent] =
-    p.selector match {
-      case SelectAll          => events
-      case SelectStreams(ss)  => events.filter(col("streamId").isin(ss: _*))
+  /** Selector filter as a pushable Column predicate on `streamCol`
+    * (ref `projection.go:96-119`) — the one selector filter of the batch
+    * fold, the pump and the service's statistics. */
+  private[graft] def selected[T](sel: Selector, rows: Dataset[T], streamCol: String): Dataset[T] =
+    sel match {
+      case SelectAll         => rows
+      case SelectStreams(ss) => rows.filter(col(streamCol).isin(ss: _*))
     }
 
-  /** Shuffle by fold key, externally sorted by (key, position). */
-  private def keyedSorted[S](p: Projection[S], events: DataFrame): Dataset[KeyedEvent] = {
+  /** Selected events tagged with the projection's fold key. */
+  private[graft] def keyed[S](p: Projection[S], events: DataFrame): Dataset[KeyedEvent] = {
     implicit val enc: Encoder[KeyedEvent] = Encoders.product[KeyedEvent]
-    val keyed = selected(p, toProjEvents(events)).map(e => KeyedEvent(p.partitionOf(e), e))
-    val shuffled = if (p.isPartitioned) keyed.repartition(col("key")) else keyed.repartition(1)
+    selected(p.selector, toProjEvents(events), "streamId").map(e => KeyedEvent(p.partitionOf(e), e))
+  }
+
+  /** Each event fanned out to every projection whose selector matches,
+    * tagged with that projection's own fold key. */
+  private[graft] def tagged[S](ps: Seq[(String, Projection[S])], events: DataFrame): Dataset[TaggedEvent] = {
+    implicit val enc: Encoder[TaggedEvent] = Encoders.product[TaggedEvent]
+    val local = ps.toVector
+    toProjEvents(events).flatMap { e =>
+      local.iterator.collect { case (n, p) if p.selector.matches(e.streamId) => TaggedEvent(n, p.partitionOf(e), e) }
+    }
+  }
+
+  /** One fold step of a sorted run: the key's state after the event, the
+    * event's position (the key's high water), whether this step forwarded,
+    * the last state forwarded so far, and whether the key's run ends here. */
+  private final case class Folded[K, S](key: K, state: S, pos: Long, forwarded: Boolean,
+                                        lastEmitted: Option[S], closes: Boolean)
+
+  /**
+   * THE batch fold: steps a run already sorted by (key, position), the
+   * key carrying its projection, holding one state at a time — a key's
+   * run ends where the next element's key differs (one-element
+   * lookahead), so no group is ever buffered.
+   */
+  private def foldRun[K, S](run: Iterator[(K, Projection[S], ProjEvent)]): Iterator[Folded[K, S]] = {
+    val in = run.buffered
+    var state: Option[S] = None
+    var emitted: Option[S] = None
+    in.map { case (k, p, e) =>
+      val (s, fwd) = p.step(state, e)
+      if (fwd) emitted = Some(s)
+      val f = Folded(k, s, e.position, fwd, emitted, closes = !in.hasNext || in.head._1 != k)
+      if (f.closes) { state = None; emitted = None } else state = Some(s)
+      f
+    }
+  }
+
+  /** Shuffle by fold key, externally sort by (key, position), fold each
+    * sorted run and keep what `out` picks from its steps. */
+  private def foldSorted[S, O](p: Projection[S], events: DataFrame)(enc: Encoder[O])(
+      out: PartialFunction[Folded[String, S], O]): Dataset[O] = {
+    val k = keyed(p, events)
+    val shuffled = if (p.isPartitioned) k.repartition(col("key")) else k.repartition(1)
     shuffled.sortWithinPartitions(col("key"), col("event.position"))
+      .mapPartitions(it => foldRun(it.map(ke => (ke.key, p, ke.event))).collect(out))(enc)
   }
 
   /**
@@ -82,38 +127,8 @@ object ProjectionBatch {
    * position order. The batch analogue of reading the projection's state
    * (`Projections.State` in the reference wire surface).
    */
-  def finalStates[S](p: Projection[S], events: DataFrame)(implicit enc: Encoder[S]): Dataset[(String, S)] = {
-    implicit val outEnc: Encoder[(String, S)] = Encoders.tuple(Encoders.STRING, enc)
-    keyedSorted(p, events).mapPartitions { base =>
-      new Iterator[(String, S)] {
-        private var pending: Option[(String, S)] = None
-        private var curKey: String = _
-        private var curState: Option[S] = None
-        private var open = false // a group is in progress
-        private def advance(): Unit = {
-          while (pending.isEmpty && base.hasNext) {
-            val ke = base.next()
-            if (open && ke.key != curKey) {
-              pending = curState.map((curKey, _))
-              curState = None
-            }
-            curKey = ke.key
-            open = true
-            curState = Some(p.step(curState, ke.event)._1)
-          }
-          if (pending.isEmpty && !base.hasNext && open) {
-            pending = curState.map((curKey, _))
-            curState = None
-            open = false
-          }
-        }
-        def hasNext: Boolean = { advance(); pending.isDefined }
-        def next(): (String, S) = {
-          advance(); val r = pending.get; pending = None; r
-        }
-      }
-    }
-  }
+  def finalStates[S](p: Projection[S], events: DataFrame)(implicit enc: Encoder[S]): Dataset[(String, S)] =
+    foldSorted(p, events)(Encoders.tuple(Encoders.STRING, enc)) { case f if f.closes => (f.key, f.state) }
 
   /**
    * [[finalStates]] plus each key's HIGH-WATER position (the last folded
@@ -124,42 +139,10 @@ object ProjectionBatch {
    * rejected exactly like an out-of-order file).
    */
   def finalStatesWithPos[S](p: Projection[S], events: DataFrame)(
-      implicit enc: Encoder[S]): Dataset[(String, S, Long)] = {
-    implicit val outEnc: Encoder[(String, S, Long)] =
-      Encoders.tuple(Encoders.STRING, enc, Encoders.scalaLong)
-    keyedSorted(p, events).mapPartitions { base =>
-      new Iterator[(String, S, Long)] {
-        private var pending: Option[(String, S, Long)] = None
-        private var curKey: String = _
-        private var curState: Option[S] = None
-        private var curPos: Long = Long.MinValue
-        private var open = false
-        private def advance(): Unit = {
-          while (pending.isEmpty && base.hasNext) {
-            val ke = base.next()
-            if (open && ke.key != curKey) {
-              pending = curState.map((curKey, _, curPos))
-              curState = None
-              curPos = Long.MinValue
-            }
-            curKey = ke.key
-            open = true
-            curState = Some(p.step(curState, ke.event)._1)
-            curPos = ke.event.position
-          }
-          if (pending.isEmpty && !base.hasNext && open) {
-            pending = curState.map((curKey, _, curPos))
-            curState = None
-            open = false
-          }
-        }
-        def hasNext: Boolean = { advance(); pending.isDefined }
-        def next(): (String, S, Long) = {
-          advance(); val r = pending.get; pending = None; r
-        }
-      }
+      implicit enc: Encoder[S]): Dataset[(String, S, Long)] =
+    foldSorted(p, events)(Encoders.tuple(Encoders.STRING, enc, Encoders.scalaLong)) {
+      case f if f.closes => (f.key, f.state, f.pos)
     }
-  }
 
   /**
    * Run MANY projections in ONE pass of the log — scan sharing the
@@ -177,44 +160,14 @@ object ProjectionBatch {
    */
   def finalStatesAll[S](ps: Seq[(String, Projection[S])], events: DataFrame)(
       implicit enc: Encoder[S]): Dataset[(String, String, S)] = {
-    implicit val te: Encoder[TaggedEvent] = Encoders.product[TaggedEvent]
-    implicit val outEnc: Encoder[(String, String, S)] =
-      Encoders.tuple(Encoders.STRING, Encoders.STRING, enc)
-    val local = ps.toVector
-    val tagged = toProjEvents(events).flatMap { e =>
-      local.iterator
-        .filter { case (_, p) =>
-          p.selector match {
-            case SelectAll         => true
-            case SelectStreams(ss) => ss.contains(e.streamId)
-          }
-        }
-        .map { case (n, p) => TaggedEvent(n, p.partitionOf(e), e) }
-    }
-    val byName = local.toMap
-    tagged
+    val byName = ps.toMap
+    tagged(ps, events)
       .repartition(col("proj"), col("key"))
       .sortWithinPartitions(col("proj"), col("key"), col("event.position"))
       .mapPartitions { it =>
-        var curProj: String = null
-        var curKey: String = null
-        var curState: Option[S] = None
-        var open = false
-        def closed(): Iterator[(String, String, S)] =
-          if (open && curState.isDefined) Iterator.single((curProj, curKey, curState.get))
-          else Iterator.empty
-        val main = it.flatMap { tev =>
-          val out =
-            if (open && (tev.proj != curProj || tev.key != curKey)) closed()
-            else Iterator.empty
-          if (!open || tev.proj != curProj || tev.key != curKey) {
-            curProj = tev.proj; curKey = tev.key; curState = None; open = true
-          }
-          curState = Some(byName(tev.proj).step(curState, tev.event)._1)
-          out
-        }
-        main ++ closed()
-      }
+        foldRun(it.map(t => ((t.proj, t.key), byName(t.proj), t.event)))
+          .collect { case f if f.closes => (f.key._1, f.key._2, f.state) }
+      }(Encoders.tuple(Encoders.STRING, Encoders.STRING, enc))
   }
 
   /**
@@ -222,58 +175,16 @@ object ProjectionBatch {
    * result stream (`$projections-{name}-result`, ref `projection.go:135-141`)
    * honoring `filterBy` emit-gating (ref `projection_test.go:145-181`).
    */
-  def emittedStates[S](p: Projection[S], events: DataFrame)(implicit enc: Encoder[S]): Dataset[(String, S)] = {
-    implicit val outEnc: Encoder[(String, S)] = Encoders.tuple(Encoders.STRING, enc)
-    keyedSorted(p, events).mapPartitions { it =>
-      var curKey: String = null
-      var curState: Option[S] = None
-      var open = false
-      it.flatMap { ke =>
-        if (!open || ke.key != curKey) { curKey = ke.key; curState = None; open = true }
-        val (s, fwd) = p.step(curState, ke.event)
-        curState = Some(s)
-        if (fwd) Iterator.single((ke.key, s)) else Iterator.empty
-      }
-    }
-  }
+  def emittedStates[S](p: Projection[S], events: DataFrame)(implicit enc: Encoder[S]): Dataset[(String, S)] =
+    foldSorted(p, events)(Encoders.tuple(Encoders.STRING, enc)) { case f if f.forwarded => (f.key, f.state) }
 
   /**
    * Last emitted state per partition — the "current value" of the result
    * stream per partition (what a consumer of
    * `$projections-{name}-result` observes as the latest state).
    */
-  def lastEmitted[S](p: Projection[S], events: DataFrame)(implicit enc: Encoder[S]): Dataset[(String, S)] = {
-    implicit val outEnc: Encoder[(String, S)] = Encoders.tuple(Encoders.STRING, enc)
-    keyedSorted(p, events).mapPartitions { base =>
-      new Iterator[(String, S)] {
-        private var pending: Option[(String, S)] = None
-        private var curKey: String = _
-        private var curState: Option[S] = None
-        private var lastEmit: Option[S] = None
-        private var open = false
-        private def advance(): Unit = {
-          while (pending.isEmpty && base.hasNext) {
-            val ke = base.next()
-            if (open && ke.key != curKey) {
-              pending = lastEmit.map((curKey, _))
-              curState = None; lastEmit = None
-            }
-            curKey = ke.key
-            open = true
-            val (s, fwd) = p.step(curState, ke.event)
-            curState = Some(s)
-            if (fwd) lastEmit = Some(s)
-          }
-          if (pending.isEmpty && !base.hasNext && open) {
-            pending = lastEmit.map((curKey, _))
-            curState = None; lastEmit = None; open = false
-          }
-        }
-        def hasNext: Boolean = { advance(); pending.isDefined }
-        def next(): (String, S) = {
-          advance(); val r = pending.get; pending = None; r
-        }
-      }
+  def lastEmitted[S](p: Projection[S], events: DataFrame)(implicit enc: Encoder[S]): Dataset[(String, S)] =
+    foldSorted(p, events)(Encoders.tuple(Encoders.STRING, enc)) {
+      case Folded(k, _, _, _, Some(s), true) => (k, s)
     }
-  }
 }

@@ -45,20 +45,25 @@ object ProjectionService {
       .write.mode("append").parquet(statusDir(dir))
   }
 
+  /** The latest status row of every name, deleted tombstones included. */
+  private def latestStatus(spark: SparkSession, dir: String): DataFrame = {
+    val w = Window.partitionBy("name").orderBy(col("updated_at").desc)
+    readStatus(spark, dir).withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+  }
+
   /** Latest status row incl. deleted tombstones: (enabled, epoch, deleted). */
   private def rawStatus(spark: SparkSession, dir: String,
-                        name: String): Option[(Boolean, Long, Boolean)] = {
-    val w = Window.partitionBy("name").orderBy(col("updated_at").desc)
-    readStatus(spark, dir)
-      .filter(col("name") === name)
-      .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+                        name: String): Option[(Boolean, Long, Boolean)] =
+    latestStatus(spark, dir).filter(col("name") === name)
       .collect().headOption
       .map(r => (r.getBoolean(1), r.getLong(2), r.getBoolean(3)))
-  }
 
   /** (enabled, epoch), None if absent or deleted. */
   def status(spark: SparkSession, dir: String, name: String): Option[(Boolean, Long)] =
     rawStatus(spark, dir, name).collect { case (en, ep, false) => (en, ep) }
+
+  private def liveStatus(spark: SparkSession, dir: String, name: String): (Boolean, Long) =
+    status(spark, dir, name).getOrElse(throw new NoSuchElementException(s"no such projection '$name'"))
 
   /** A stored source is either the JSON descriptor dialect or a raw
     * reference-style JavaScript projection source (the reference stores
@@ -81,8 +86,9 @@ object ProjectionService {
     * mixes into its result parquet. Fails if the name exists undeleted. */
   def create(spark: SparkSession, dir: String, name: String, script: String,
              nowNanos: Long = System.nanoTime()): Unit = {
-    require(status(spark, dir, name).isEmpty, s"projection '$name' already exists")
-    val epoch = rawStatus(spark, dir, name).map(_._2 + 1L).getOrElse(0L)
+    val raw = rawStatus(spark, dir, name)
+    require(raw.forall(_._3), s"projection '$name' already exists")
+    val epoch = raw.map(_._2 + 1L).getOrElse(0L)
     Catalog.save(spark, catalogDir(dir), name, validatedSource(name, script), nowNanos)
     writeStatus(spark, dir, name, enabled = true, epoch = epoch, deleted = false, nowNanos)
   }
@@ -112,8 +118,7 @@ object ProjectionService {
 
   private def setEnabled(spark: SparkSession, dir: String, name: String, on: Boolean,
                          nowNanos: Long): Unit = {
-    val (_, epoch) = status(spark, dir, name)
-      .getOrElse(throw new NoSuchElementException(s"no such projection '$name'"))
+    val (_, epoch) = liveStatus(spark, dir, name)
     writeStatus(spark, dir, name, enabled = on, epoch = epoch, deleted = false, nowNanos)
   }
 
@@ -122,60 +127,69 @@ object ProjectionService {
     * position 0 (the reference restarts the subscription). */
   def reset(spark: SparkSession, dir: String, name: String,
             nowNanos: Long = System.nanoTime()): Unit = {
-    val (enabled, epoch) = status(spark, dir, name)
-      .getOrElse(throw new NoSuchElementException(s"no such projection '$name'"))
+    val (enabled, epoch) = liveStatus(spark, dir, name)
     writeStatus(spark, dir, name, enabled = enabled, epoch = epoch + 1L, deleted = false, nowNanos)
   }
 
-  /** Latest stored source text for `name` (either dialect). */
-  private def source(spark: SparkSession, dir: String, name: String): String = {
-    if (status(spark, dir, name).isEmpty)
-      throw new NoSuchElementException(s"no such projection '$name'")
-    Catalog.get(spark, catalogDir(dir), name)
-      .getOrElse(throw new NoSuchElementException(s"no descriptor for '$name'"))
+  /** A stored projection as one verb sees it: its live status and its
+    * latest source, each read ONCE per verb (every read is a Spark job). */
+  private final case class Stored(name: String, enabled: Boolean, epoch: Long, src: String) {
+    def isJs: Boolean = isJsSource(src)
+    def bag: Projection[ProjectionScript.Bag] = {
+      require(!isJs, s"'$name' is a JS-source projection — use stateJson/compiledJs")
+      ProjectionScript.compile(src)
+    }
+    def js: JsProjection.Compiled = {
+      require(isJs, s"'$name' is a JSON-descriptor projection — use compiled")
+      JsProjection.compile(src, name)
+    }
   }
+
+  private def load(spark: SparkSession, dir: String, name: String): Stored = {
+    val (enabled, epoch) = liveStatus(spark, dir, name)
+    Stored(name, enabled, epoch, Catalog.get(spark, catalogDir(dir), name)
+      .getOrElse(throw new NoSuchElementException(s"no descriptor for '$name'")))
+  }
+
+  private implicit val jsEnc: org.apache.spark.sql.Encoder[JsProjection.JsVal] =
+    org.apache.spark.sql.Encoders.javaSerialization[JsProjection.JsVal]
 
   /** Compile the stored descriptor (latest version). JSON dialect only —
     * JS-source projections run via [[compiledJs]] / [[stateJson]]. */
-  def compiled(spark: SparkSession, dir: String, name: String): Projection[ProjectionScript.Bag] = {
-    val src = source(spark, dir, name)
-    require(!isJsSource(src), s"'$name' is a JS-source projection — use stateJson/compiledJs")
-    ProjectionScript.compile(src)
-  }
+  def compiled(spark: SparkSession, dir: String, name: String): Projection[ProjectionScript.Bag] =
+    load(spark, dir, name).bag
 
   /** Compile a stored JS-source projection (latest version). */
-  def compiledJs(spark: SparkSession, dir: String, name: String): Projection[JsProjection.JsVal] = {
-    val src = source(spark, dir, name)
-    require(isJsSource(src), s"'$name' is a JSON-descriptor projection — use compiled")
-    JsProjection.compile(src, name).projection
-  }
+  def compiledJs(spark: SparkSession, dir: String, name: String): Projection[JsProjection.JsVal] =
+    load(spark, dir, name).js.projection
 
   /** `State` for EITHER dialect, state rendered as canonical JSON —
     * the dialect-agnostic serving surface (a JS projection's state is an
     * arbitrary object, not a counter bag). */
   def stateJson(spark: SparkSession, dir: String, name: String, events: DataFrame): DataFrame = {
     import spark.implicits._
-    if (isJsSource(source(spark, dir, name))) {
-      implicit val enc: org.apache.spark.sql.Encoder[JsProjection.JsVal] =
-        org.apache.spark.sql.Encoders.javaSerialization[JsProjection.JsVal]
-      ProjectionBatch.finalStates(compiledJs(spark, dir, name), events)
-        .map { case (k, st) => (k, JsProjection.JsVal.toJson(st)) }
+    val st = load(spark, dir, name)
+    if (st.isJs)
+      ProjectionBatch.finalStates(st.js.projection, events)
+        .map { case (k, s) => (k, JsProjection.JsVal.toJson(s)) }
         .toDF("partition", "state_json")
-    } else {
-      ProjectionBatch.finalStates(compiled(spark, dir, name), events)
+    else
+      ProjectionBatch.finalStates(st.bag, events)
         .map { case (k, bag) =>
           (k, bag.toSeq.sortBy(_._1)
             .map { case (f, v) => "\"" + f + "\":" + v }.mkString("{", ",", "}"))
         }
         .toDF("partition", "state_json")
-    }
   }
 
   /** Epoch-namespaced (checkpoint, result) dirs for the live pump; refuses
     * when the projection is disabled. */
   def pumpDirs(spark: SparkSession, dir: String, name: String): (String, String) = {
-    val (enabled, epoch) = status(spark, dir, name)
-      .getOrElse(throw new NoSuchElementException(s"no such projection '$name'"))
+    val (enabled, epoch) = liveStatus(spark, dir, name)
+    pumpDirs(dir, name, enabled, epoch)
+  }
+
+  private def pumpDirs(dir: String, name: String, enabled: Boolean, epoch: Long): (String, String) = {
     require(enabled, s"projection '$name' is disabled")
     (s"$dir/pump/$name/epoch-$epoch/checkpoint", s"$dir/pump/$name/epoch-$epoch/result")
   }
@@ -189,16 +203,13 @@ object ProjectionService {
   def startPump(spark: SparkSession, dir: String, name: String, logDir: String,
                 availableNow: Boolean = false): org.apache.spark.sql.streaming.StreamingQuery = {
     import spark.implicits._
-    val (ckpt, out) = pumpDirs(spark, dir, name)
-    if (isJsSource(source(spark, dir, name))) {
-      implicit val enc: org.apache.spark.sql.Encoder[JsProjection.JsVal] =
-        org.apache.spark.sql.Encoders.javaSerialization[JsProjection.JsVal]
+    val st = load(spark, dir, name)
+    val (ckpt, out) = pumpDirs(dir, name, st.enabled, st.epoch)
+    if (st.isJs)
       graft.streaming.ProjectionPump.startRendered(
-        spark, compiledJs(spark, dir, name), logDir, out, ckpt, availableNow)(
-        JsProjection.JsVal.toJson)
-    } else
-      graft.streaming.ProjectionPump.start(
-        spark, compiled(spark, dir, name), logDir, out, ckpt, availableNow)
+        spark, st.js.projection, logDir, out, ckpt, availableNow)(JsProjection.JsVal.toJson)
+    else
+      graft.streaming.ProjectionPump.start(spark, st.bag, logDir, out, ckpt, availableNow)
   }
 
   /** proto `State`: the current fold state per partition (batch recompute
@@ -211,9 +222,7 @@ object ProjectionService {
 
   /** Names of all live (not deleted) projections, latest status row wins. */
   def listNames(spark: SparkSession, dir: String): Seq[String] = {
-    val w = Window.partitionBy("name").orderBy(col("updated_at").desc)
-    readStatus(spark, dir)
-      .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+    latestStatus(spark, dir)
       .filter(!col("deleted"))
       .select("name").collect().map(_.getString(0)).toSeq.sorted
   }
@@ -223,9 +232,7 @@ object ProjectionService {
     * per-name `status`/`source` control plane cost 2N+1 driver jobs /
     * ~26 scheduled stages before `stateAll`'s fold even started). */
   private def enabledSources(spark: SparkSession, dir: String): Seq[(String, String)] = {
-    val w = Window.partitionBy("name").orderBy(col("updated_at").desc)
-    val live = readStatus(spark, dir)
-      .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+    val live = latestStatus(spark, dir)
       .filter(col("enabled") && !col("deleted"))
       .select("name").collect().map(_.getString(0)).toSet
     val sources = Catalog.list(spark, catalogDir(dir))
@@ -263,8 +270,6 @@ object ProjectionService {
   /** `Result` for a stored JS-source projection, states JSON-rendered. */
   def resultJson(spark: SparkSession, dir: String, name: String, events: DataFrame): DataFrame = {
     import spark.implicits._
-    implicit val enc: org.apache.spark.sql.Encoder[JsProjection.JsVal] =
-      org.apache.spark.sql.Encoders.javaSerialization[JsProjection.JsVal]
     val p = compiledJs(spark, dir, name)
     ProjectionBatch.emittedStates(p, events)
       .map { case (k, st) => (k, JsProjection.JsVal.toJson(st)) }
@@ -275,24 +280,15 @@ object ProjectionService {
   /** proto `Statistics`: per-projection processing counters (either
     * dialect — only the selector and result-stream name are needed). */
   def statistics(spark: SparkSession, dir: String, name: String, events: DataFrame): DataFrame = {
-    val src0 = source(spark, dir, name)
+    val st = load(spark, dir, name)
     val (selector, resultStream) =
-      if (isJsSource(src0)) {
-        val c = JsProjection.compile(src0, name)
-        (c.selector, c.resultStream)
-      } else {
-        val p = ProjectionScript.compile(src0)
-        (p.selector, p.resultStream)
-      }
-    val selectedEvents = selector match {
-      case SelectAll         => events
-      case SelectStreams(ss) => events.filter(col("stream").isin(ss: _*))
-    }
-    val (enabled, epoch) = status(spark, dir, name).get
-    selectedEvents.agg(count(lit(1)).as("events_processed"))
+      if (st.isJs) { val c = st.js; (c.selector, c.resultStream) }
+      else { val p = st.bag; (p.selector, p.resultStream) }
+    ProjectionBatch.selected(selector, events, "stream")
+      .agg(count(lit(1)).as("events_processed"))
       .withColumn("name", lit(name))
-      .withColumn("enabled", lit(enabled))
-      .withColumn("epoch", lit(epoch))
+      .withColumn("enabled", lit(st.enabled))
+      .withColumn("epoch", lit(st.epoch))
       .withColumn("result_stream", lit(resultStream))
       .select("name", "enabled", "epoch", "events_processed", "result_stream")
   }

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
+import graft.model.{AllStreams, From, FromStart, ReadFrom, ReadOptions}
 import graft.proj._
 
 /**
@@ -36,6 +37,35 @@ import graft.proj._
 object ProjectionPump {
 
   /**
+   * THE live fold of one group's trigger delivery: sort it by position,
+   * apply the high-water order guard, step from the stored state and
+   * store (state, high water) back. Returns the forwarded states.
+   */
+  private def foldTrigger[S](p: Projection[S], group: String, events: Iterator[ProjEvent],
+                             state: GroupState[(S, Long)]): Iterator[S] = {
+    val ordered = events.toArray.sortBy(_.position)
+    // the state rides with the high-water position already folded: a
+    // later trigger delivering an EARLIER position means the source broke
+    // the log's arrival-order contract — fail loudly (class doc), never
+    // fold it (order-bearing states corrupt silently otherwise)
+    val seen = state.getOption.fold(Long.MinValue)(_._2)
+    if (ordered.nonEmpty && ordered.head.position <= seen)
+      throw new IllegalStateException(
+        s"ProjectionPump: out-of-order delivery for $group — position " +
+          s"${ordered.head.position} arrived after position $seen was " +
+          "folded; the log's arrival order must be position order (re-stage " +
+          "the backlog sequentially or rebuild the projection)")
+    var cur = state.getOption.map(_._1)
+    val out = ordered.iterator.flatMap { e =>
+      val (s, fwd) = p.step(cur, e)
+      cur = Some(s)
+      Option.when(fwd)(s)
+    }.toVector
+    cur.foreach(s => state.update((s, ordered.lastOption.fold(seen)(_.position))))
+    out.iterator
+  }
+
+  /**
    * Streaming emissions of a projection over an unbounded canonical event
    * source: one `(partition, state)` row per forwarded fold step.
    * OutputMode must be Update (or use [[start]] / `foreachBatch`).
@@ -43,41 +73,12 @@ object ProjectionPump {
   def emissions[S](p: Projection[S], src: DataFrame,
                    initialState: Option[Dataset[(String, S, Long)]] = None)(
       implicit enc: Encoder[S]): Dataset[(String, S)] = {
-    implicit val keyedEnc: Encoder[KeyedEvent] = Encoders.product[KeyedEvent]
     implicit val strEnc: Encoder[String] = Encoders.STRING
     implicit val outEnc: Encoder[(String, S)] = Encoders.tuple(Encoders.STRING, enc)
     implicit val stEnc: Encoder[(S, Long)] = Encoders.tuple(enc, Encoders.scalaLong)
-    val keyed = ProjectionBatch
-      .selected(p, ProjectionBatch.toProjEvents(src))
-      .map(e => KeyedEvent(p.partitionOf(e), e))
-    val grouped = keyed.groupByKey(_.key)
-    val fold = {
-        (key: String, events: Iterator[KeyedEvent], state: GroupState[(S, Long)]) =>
-          val ordered = events.toArray.sortBy(_.event.position)
-          // the state rides with the high-water position already folded:
-          // a later trigger delivering an EARLIER position means the
-          // source broke the log's arrival-order contract — fail loudly
-          // (class doc), never fold it (order-bearing states corrupt
-          // silently otherwise)
-          var cur = state.getOption.map(_._1)
-          val seen = state.getOption.fold(Long.MinValue)(_._2)
-          if (ordered.nonEmpty && ordered.head.event.position <= seen)
-            throw new IllegalStateException(
-              s"ProjectionPump: out-of-order delivery for key '$key' — position " +
-                s"${ordered.head.event.position} arrived after position $seen was " +
-                "folded; the log's arrival order must be position order (re-stage " +
-                "the backlog sequentially or rebuild the projection)")
-          var maxPos = seen
-          val out = Vector.newBuilder[(String, S)]
-          ordered.foreach { ke =>
-            val (s, fwd) = p.step(cur, ke.event)
-            cur = Some(s)
-            maxPos = ke.event.position
-            if (fwd) out += ((key, s))
-          }
-          cur.foreach(s => state.update((s, maxPos)))
-          out.result().iterator
-    }
+    val grouped = ProjectionBatch.keyed(p, src).groupByKey(_.key)
+    val fold = (key: String, events: Iterator[KeyedEvent], state: GroupState[(S, Long)]) =>
+      foldTrigger(p, s"key '$key'", events.map(_.event), state).map((key, _))
     initialState match {
       case None => grouped.flatMapGroupsWithState[(S, Long), (String, S)](
         OutputMode.Update(), GroupStateTimeout.NoTimeout)(fold)
@@ -105,47 +106,36 @@ object ProjectionPump {
    */
   def emissionsAll[S](ps: Seq[(String, Projection[S])], src: DataFrame)(
       implicit enc: Encoder[S]): Dataset[(String, String, S)] = {
-    implicit val taggedEnc: Encoder[TaggedEvent] = Encoders.product[TaggedEvent]
     implicit val keyEnc: Encoder[(String, String)] = Encoders.tuple(Encoders.STRING, Encoders.STRING)
     implicit val outEnc: Encoder[(String, String, S)] =
       Encoders.tuple(Encoders.STRING, Encoders.STRING, enc)
-    val local = ps.toVector
-    val byName = local.toMap
-    val tagged = ProjectionBatch.toProjEvents(src).flatMap { e =>
-      local.iterator
-        .filter { case (_, p) =>
-          p.selector match {
-            case SelectAll         => true
-            case SelectStreams(ss) => ss.contains(e.streamId)
-          }
-        }
-        .map { case (n, p) => TaggedEvent(n, p.partitionOf(e), e) }
-    }
     implicit val stEnc: Encoder[(S, Long)] = Encoders.tuple(enc, Encoders.scalaLong)
-    tagged
+    val byName = ps.toMap
+    ProjectionBatch.tagged(ps, src)
       .groupByKey(t => (t.proj, t.key))
       .flatMapGroupsWithState[(S, Long), (String, String, S)](OutputMode.Update(), GroupStateTimeout.NoTimeout) {
         (pk: (String, String), events: Iterator[TaggedEvent], state: GroupState[(S, Long)]) =>
-          val p = byName(pk._1)
-          val ordered = events.toArray.sortBy(_.event.position)
-          // same high-water order enforcement as [[emissions]]
-          var cur = state.getOption.map(_._1)
-          val seen = state.getOption.fold(Long.MinValue)(_._2)
-          if (ordered.nonEmpty && ordered.head.event.position <= seen)
-            throw new IllegalStateException(
-              s"ProjectionPump: out-of-order delivery for ${pk._1}/${pk._2} — position " +
-                s"${ordered.head.event.position} arrived after position $seen was folded")
-          var maxPos = seen
-          val out = Vector.newBuilder[(String, String, S)]
-          ordered.foreach { te =>
-            val (s, fwd) = p.step(cur, te.event)
-            cur = Some(s)
-            maxPos = te.event.position
-            if (fwd) out += ((pk._1, pk._2, s))
-          }
-          cur.foreach(s => state.update((s, maxPos)))
-          out.result().iterator
+          foldTrigger(byName(pk._1), s"${pk._1}/${pk._2}", events.map(_.event), state)
+            .map(s => (pk._1, pk._2, s))
       }
+  }
+
+  /** Subscribe to every stream of `logDir` from `from`. */
+  private def subscribe(spark: SparkSession, logDir: String, from: ReadFrom,
+                        sourceOptions: Map[String, String]): DataFrame =
+    Subscriptions.subscribe(spark, logDir, ReadOptions(AllStreams, from = from), sourceOptions)
+
+  /** Append each trigger's rows to the `sink` parquet dir; `availableNow`
+    * drains what is present and stops, otherwise the query tails. */
+  private def sinkTo(rows: DataFrame, sink: String, checkpointDir: String,
+                     availableNow: Boolean): StreamingQuery = {
+    val writer = rows.writeStream
+      .outputMode(OutputMode.Update())
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        batch.write.mode("append").parquet(sink)
+      }
+    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
   }
 
   /**
@@ -158,18 +148,9 @@ object ProjectionPump {
    */
   def start[S](spark: SparkSession, p: Projection[S], logDir: String, outDir: String,
                checkpointDir: String, availableNow: Boolean = false,
-               sourceOptions: Map[String, String] = Map.empty)(implicit enc: Encoder[S]): StreamingQuery = {
-    val src = Subscriptions.subscribe(spark, logDir,
-      graft.model.ReadOptions(graft.model.AllStreams), sourceOptions)
-    val sink = s"$outDir/${p.resultStream}"
-    val writer = emissions(p, src).toDF("partition", "state").writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").parquet(sink)
-      }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
-  }
+               sourceOptions: Map[String, String] = Map.empty)(implicit enc: Encoder[S]): StreamingQuery =
+    sinkTo(emissions(p, subscribe(spark, logDir, FromStart, sourceOptions)).toDF("partition", "state"),
+      s"$outDir/${p.resultStream}", checkpointDir, availableNow)
 
   /**
    * Hybrid catch-up + live tail — the at-scale catch-up path. [[start]]
@@ -196,23 +177,15 @@ object ProjectionPump {
       implicit enc: Encoder[S]): StreamingQuery = {
     implicit val outEnc: Encoder[(String, S)] = Encoders.tuple(Encoders.STRING, enc)
     val backlog = graft.append.Appender.readLog(spark, logDir)
-    val from = Subscriptions.endOffset(spark, logDir, graft.model.AllStreams)
+    val from = Subscriptions.endOffset(spark, logDir, AllStreams)
     // one batch job folds the whole backlog; localCheckpoint pins the
     // boundary (the seed must not re-scan the dir after tail files land)
     val finals = ProjectionBatch.finalStatesWithPos(p, backlog).localCheckpoint()
     val sink = s"$outDir/${p.resultStream}"
     finals.filter(t => p.emits(t._2)).map(t => (t._1, t._2))
       .toDF("partition", "state").write.mode("append").parquet(sink)
-    val src = Subscriptions.subscribe(spark, logDir,
-      graft.model.ReadOptions(graft.model.AllStreams, from = graft.model.From(from)),
-      sourceOptions)
-    val writer = emissions(p, src, Some(finals)).toDF("partition", "state").writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").parquet(sink)
-      }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
+    sinkTo(emissions(p, subscribe(spark, logDir, From(from), sourceOptions), Some(finals)).toDF("partition", "state"),
+      sink, checkpointDir, availableNow)
   }
 
   /**
@@ -226,16 +199,7 @@ object ProjectionPump {
       implicit enc: Encoder[S]): StreamingQuery = {
     implicit val outEnc: Encoder[(String, String)] =
       Encoders.tuple(Encoders.STRING, Encoders.STRING)
-    val src = Subscriptions.subscribe(spark, logDir, graft.model.ReadOptions(graft.model.AllStreams))
-    val sink = s"$outDir/${p.resultStream}"
-    val writer = emissions(p, src)
-      .map { case (k, s) => (k, render(s)) }
-      .toDF("partition", "state_json").writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").parquet(sink)
-      }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
+    val rendered = emissions(p, subscribe(spark, logDir, FromStart, Map.empty)).map { case (k, s) => (k, render(s)) }
+    sinkTo(rendered.toDF("partition", "state_json"), s"$outDir/${p.resultStream}", checkpointDir, availableNow)
   }
 }

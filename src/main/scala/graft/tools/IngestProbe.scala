@@ -35,8 +35,9 @@ import org.apache.spark.sql.functions._
  * earlier regimes to flip its result; isolation is what makes the
  * artifact trustworthy.
  *
- * Writes `ingest_probe.json`; [[graft.Bench]] embeds it into
- * `bench_detail.json` (key "ingest").
+ * Writes `ingest_probe.json` in the working directory (or the path given
+ * as the second argument); it is a standalone artifact that `Bench` does
+ * not read.
  */
 object IngestProbe {
 

@@ -36,8 +36,9 @@ import org.apache.spark.sql.functions._
  * .fanoutFor]]'s 16 GiB sizing point) shows the knob's effect on
  * per-bucket mass and compaction granularity.
  *
- * Writes `twinstore_probe.json`; `Bench` embeds it into
- * `bench_detail.json` (key "twinstore").
+ * Writes `twinstore_probe.json` in the working directory (or the path
+ * given as the second argument); it is a standalone artifact that
+ * `Bench` does not read.
  *
  * Usage: `sbt "runMain graft.tools.TwinStoreProbe [nTriggers out]"`
  */

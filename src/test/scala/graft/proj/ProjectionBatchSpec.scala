@@ -93,13 +93,55 @@ class ProjectionBatchSpec extends SparkSpec {
           "t-0" -> ((s: Count, e: ProjEvent) => s.copy(count = s.count * 31 + e.position)),
           "$any" -> ((s: Count, e: ProjEvent) => s.copy(count = s.count + e.position))
         ))
+        .filterBy(_.count % 2 == 0)
         .build
       val got = ProjectionBatch.finalStates(p, eventsDf(trialRows)).collect().toMap
-      val local = new LocalRunner(p)
-      local.run(trialRows.sortBy(_._3).map { case (s, t, pos) =>
+      val ordered = trialRows.sortBy(_._3).map { case (s, t, pos) =>
         ProjEvent(streamId = s, eventType = t, position = pos)
-      })
+      }
+      val local = new LocalRunner(p)
+      local.run(ordered)
       assert(got == local.states, s"trial $trial (n=$n) diverged")
+
+      // high water = each key's max folded position
+      val withPos = ProjectionBatch.finalStatesWithPos(p, eventsDf(trialRows)).collect()
+        .map { case (k, st, pos) => k -> (st, pos) }.toMap
+      val maxPos = ordered.groupBy(_.streamId).map { case (k, es) => k -> es.map(_.position).max }
+      assert(withPos == local.states.map { case (k, st) => k -> (st, maxPos(k)) }, s"trial $trial withPos")
+      // last emission per key under the filterBy gate (toMap keeps the last)
+      val emitter = new LocalRunner(p)
+      val lastLocal = ordered.flatMap(e => emitter.update(e).map(e.streamId -> _)).toMap
+      assert(ProjectionBatch.lastEmitted(p, eventsDf(trialRows)).collect().toMap == lastLocal,
+        s"trial $trial lastEmitted")
+      // the unpartitioned fold, alone and multiplexed beside p
+      val g = Projection.named(s"glob-$trial").fromStreams("s-0", "s-1", "s-2")
+        .when[Count](Count(0), Map("$any" -> ((s: Count, e: ProjEvent) => s.copy(count = s.count * 31 + e.position))))
+        .build
+      val globalLocal = new LocalRunner(g)
+      globalLocal.run(ordered)
+      assert(ProjectionBatch.finalStates(g, eventsDf(trialRows)).collect().toSeq ==
+        globalLocal.state.map("" -> _).toSeq, s"trial $trial global")
+      val all = ProjectionBatch.finalStatesAll(Seq("p" -> p, "g" -> g), eventsDf(trialRows)).collect()
+        .map { case (n, k, st) => (n, k) -> st }.toMap
+      assert(all == local.states.map { case (k, st) => ("p", k) -> st } ++
+        globalLocal.state.map(("g", "") -> _), s"trial $trial finalStatesAll")
+    }
+  }
+
+  test("every single-projection batch fold plans exactly one Exchange") {
+    import spark.implicits._
+    val p = Projection.named("x").fromAll().foreachStream()
+      .when[Count](Count(0), Map("$any" -> ((s: Count, _: ProjEvent) => s.copy(count = s.count + 1))))
+      .build
+    val plans = Seq(
+      "finalStates" -> ProjectionBatch.finalStates(p, eventsDf(rows)).queryExecution,
+      "finalStatesWithPos" -> ProjectionBatch.finalStatesWithPos(p, eventsDf(rows)).queryExecution,
+      "emittedStates" -> ProjectionBatch.emittedStates(p, eventsDf(rows)).queryExecution,
+      "lastEmitted" -> ProjectionBatch.lastEmitted(p, eventsDf(rows)).queryExecution)
+    plans.foreach { case (name, qe) =>
+      val own = qe.executedPlan.toString().split("InMemoryTableScan")(0)
+      val exchanges = "Exchange hashpartitioning".r.findAllIn(own).length
+      assert(exchanges == 1, s"$name must shuffle once, found $exchanges")
     }
   }
 

@@ -176,6 +176,51 @@ class ProjectionServiceSpec extends SparkSpec {
     assert(ProjectionService.statistics(spark, dir, "js", evs).head().getLong(3) == 6L)
   }
 
+  /** Spark jobs `f` runs, counted by a listener on a local-property tag; a
+    * sentinel job submitted afterwards is delivered after all of them. */
+  private def jobsOf(f: => Any): Int = {
+    val tag = "graft.test.verb"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(tag))) match {
+          case Some("verb")     => jobs.incrementAndGet()
+          case Some("sentinel") => sentinelSeen.countDown()
+          case _                =>
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(tag, "verb"); f
+      sc.setLocalProperty(tag, "sentinel"); sc.parallelize(Seq(1), 1).count()
+      assert(sentinelSeen.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener never saw the sentinel job")
+    } finally {
+      sc.setLocalProperty(tag, null)
+      sc.removeSparkListener(listener)
+    }
+    jobs.get()
+  }
+
+  test("each serving verb reads the status table and the catalog once") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-svc-once").toString
+    ProjectionService.create(spark, dir, "js", jsSource, nowNanos = 1L)
+    ProjectionService.create(spark, dir, "svc", script, nowNanos = 2L)
+    val evs = (1 to 4).map(p => (s"s-${p % 2}", "view", "{}", p.toLong))
+      .toDF("stream", "event_type", "data", "position")
+    // one status read plus one catalog read; the verbs below build lazy
+    // DataFrames, so the jobs they run are their control plane alone
+    val once = jobsOf(ProjectionService.status(spark, dir, "js")) +
+      jobsOf(Catalog.get(spark, s"$dir/catalog", "js"))
+    assert(once > 0)
+    assert(jobsOf(ProjectionService.compiledJs(spark, dir, "js")) == once)
+    assert(jobsOf(ProjectionService.stateJson(spark, dir, "js", evs)) == once)
+    assert(jobsOf(ProjectionService.stateJson(spark, dir, "svc", evs)) == once)
+    assert(jobsOf(ProjectionService.statistics(spark, dir, "js", evs)) == once)
+  }
+
   test("a stored JS source runs LIVE through the pump, state JSON-rendered") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-svc-js-pump").toString

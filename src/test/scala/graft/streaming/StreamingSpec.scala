@@ -371,6 +371,33 @@ class StreamingSpec extends SparkSpec {
       ("clicks", "s-0") -> 2L, ("clicks", "s-1") -> 0L))
   }
 
+  test("projection pump: a position below a key's high water fails the query, single and multiplexed") {
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val p = Projection.named("guard").fromAll().foreachStream()
+      .when[SCount](SCount(0), Map("$any" -> ((s: SCount, e: ProjEvent) => s.copy(count = s.count * 31 + e.position))))
+      .build
+    def emitted(name: String): Seq[(String, Long)] =
+      spark.sql(s"select partition, st.count from $name").collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    def check(name: String, rows: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): Unit = {
+      val mem = MemoryStream[EvRow]
+      val q = rows(mem.toDF()).writeStream.format("memory").queryName(name)
+        .outputMode(OutputMode.Update()).start()
+      try {
+        mem.addData(ev("s-0", "t", 0, 5)); q.processAllAvailable()
+        assert(emitted(name) == Seq(("s-0", 5L)))
+        mem.addData(ev("s-0", "t", 1, 3))
+        val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException](q.processAllAvailable())
+        val messages = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString("\n")
+        assert(messages.contains("out-of-order delivery"), messages)
+        // the state emitted before the failure is batch 1's, untouched
+        assert(emitted(name) == Seq(("s-0", 5L)))
+      } finally q.stop()
+    }
+    check("guard_single", df => ProjectionPump.emissions(p, df).toDF("partition", "st"))
+    check("guard_multi", df => ProjectionPump.emissionsAll(Seq("guard" -> p), df).toDF("proj", "partition", "st"))
+  }
+
   test("event-time windows with watermark: counts by window, late rows dropped") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
