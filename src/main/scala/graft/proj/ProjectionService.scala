@@ -51,11 +51,13 @@ object ProjectionService {
     readStatus(spark, dir).withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
   }
 
-  /** Latest status row incl. deleted tombstones: (enabled, epoch, deleted). */
+  /** Latest status row incl. deleted tombstones: (enabled, epoch, deleted).
+    * One name's rows are few, so they are collected and the newest is
+    * picked on the driver — no window, no exchange. */
   private def rawStatus(spark: SparkSession, dir: String,
                         name: String): Option[(Boolean, Long, Boolean)] =
-    latestStatus(spark, dir).filter(col("name") === name)
-      .collect().headOption
+    readStatus(spark, dir).filter(col("name") === name)
+      .collect().maxByOption(_.getLong(4))
       .map(r => (r.getBoolean(1), r.getLong(2), r.getBoolean(3)))
 
   /** (enabled, epoch), None if absent or deleted. */

@@ -62,9 +62,9 @@ trait TwinStore {
     *
     * Upsert and delete key sets within one call should be disjoint; if
     * a caller violates that, DELETE WINS uniformly (both store
-    * implementations drop the overlapping upsert rows, matching the
-    * parquet store's file-level resolution where a same-sequence
-    * tombstone is authoritative — so state never silently depends on
+    * implementations drop the overlapping upsert rows before anything
+    * is stored, and the parquet store's file-level resolution lets a
+    * same-sequence delete row win — so state never silently depends on
     * whether a restart happened). A deleted key MAY be re-upserted by a
     * LATER merge (a doc can re-enter the label table when a new arrival
     * pairs with it after its previous partner dethroned out). Returns
@@ -111,7 +111,7 @@ final class InMemoryTwinStore extends TwinStore {
     val keyed = keyCols.map(col)
     // delete-wins on an (contract-violating) upsert/delete key overlap —
     // uniform with the parquet store's warm fold AND its cold file-level
-    // window (same-sequence tombstones are authoritative there)
+    // window (a same-sequence delete row wins there)
     val up = deleteKeys.fold(upserts)(d =>
       upserts.join(d.select(keyed: _*), keyCols, "left_anti"))
     val next = tables.get(name) match {
@@ -147,15 +147,17 @@ final class InMemoryTwinStore extends TwinStore {
  *    (`b<k>/`, k = xxhash64(key cols) mod fanout, fanout persisted in a
  *    `_fanout` marker so restarts route identically); each bucket is an
  *    independent mini MoR table with its own sequence-numbered delta
- *    (`d<seq>`), tombstone (`t<seq>`) and base (`base-v<seq>`) file
- *    sets. A merge stages the upserts/delete-keys ONCE, unpartitioned,
- *    with the routing bucket as a `_gb` column; a small (spraying
- *    micro-batch) update then PLACES as one shared OVERFLOW delta
- *    (`ovf/d<seq>` + a `_buckets` manifest — a rename, no per-bucket
- *    files), while a bulk update re-splits into per-bucket files — so
- *    the write is one Spark job and update-mass, with no per-touched-
- *    bucket fixed term, and ONLY the buckets the update's keys hash to
- *    are touched. Resolution of
+ *    (`d<seq>`) and base (`base-v<seq>`) file sets. A merge is ONE
+ *    delta: its upsert rows and its delete keys in one parquet file set,
+ *    told apart by a boolean `_del` column (a delete row carries the key
+ *    columns and nulls elsewhere). The merge stages it ONCE, on the
+ *    calling thread, unpartitioned, with the routing bucket as a `_gb`
+ *    column; a small (spraying micro-batch) update then PLACES as one
+ *    shared OVERFLOW delta (`ovf/d<seq>` + a `_buckets` manifest — a
+ *    rename, no per-bucket files), while a bulk update re-splits into
+ *    per-bucket files — so the write is one Spark job and update-mass,
+ *    with no per-touched-bucket fixed term, and ONLY the buckets the
+ *    update's keys hash to are touched. Resolution of
  *    a touched bucket is INCREMENTAL: the arriving delta folds into
  *    the bucket's cached prior resolution (a broadcast anti-join on
  *    the update's keys + union — the [[InMemoryTwinStore.merge]] shape
@@ -163,30 +165,35 @@ final class InMemoryTwinStore extends TwinStore {
  *    delta files or re-runs the merge-on-read window; the fold is
  *    materialized in one batched `localCheckpoint` over all touched
  *    buckets. The file-level last-writer-wins window (per key group by
- *    file sequence, tombstones participating in the order) runs only
- *    on the COLD path — a restarted store resolving a bucket it has no
- *    cache for — and exactly once per bucket per incarnation; the fuzz
- *    suite pins the incremental fold equal to the window across
+ *    file sequence: an upsert row lives iff its file is the key's newest
+ *    upsert file and is strictly newer than the key's newest delete row)
+ *    runs only on the COLD path — a restarted store resolving a bucket
+ *    it has no cache for — and exactly once per bucket per incarnation;
+ *    the fuzz suite pins the incremental fold equal to the window across
  *    restarts. Untouched buckets are served from their cached prior
  *    resolution, or read lazily straight from their base file when
  *    they carry no deltas. Compaction is BUCKET-LOCAL: once a bucket's
- *    live delta count passes [[ParquetTwinStore.MaxDeltas]], that
+ *    live delta count (a delete-only merge counts like any other) passes
+ *    [[ParquetTwinStore.MaxDeltas]], that
  *    bucket alone folds into a new `base-v<seq>` (written from the
  *    already-checkpointed resolution to a temp dir, then RENAMED into
  *    place — a crash mid-write can never leave a torn base masking
- *    still-live older deltas) and its consumed files are
+ *    still-live older deltas; a bucket that resolves EMPTY, e.g. one
+ *    whose deltas hold only deletes, writes a `_floor` marker in lieu of
+ *    a base) and its consumed files are
  *    garbage-collected ONE TRIGGER LATER (deferred GC, so a DataFrame
  *    handed out at trigger T survives trigger T+1 — the retention
  *    contract on [[TwinStore]]). The deferred-GC list is persisted
  *    (`_pending_rm` marker) so a JVM restart between the compaction
- *    and the next merge still releases the consumed files.
+ *    and the next merge still releases the consumed files. A bucket or
+ *    overflow dir holding a `t<seq>` tombstone dir, the separate delete
+ *    file kind of an earlier store version, is refused loudly.
  *    Net effect at scale: per-trigger DISK cost (read and write) is
  *    update-mass regardless of key distribution; the remaining
  *    state-proportional term is the in-memory re-checkpoint of the
  *    touched buckets' resolutions, bounded per bucket and sized by the
  *    fanout knob (a cluster deployment sizes fanout like any bucketed
- *    table's: state mass / target bucket size — see
- *    [[ParquetTwinStore.fanoutFor]]).
+ *    table's: state mass / target bucket size).
  *  - REPLACED tables are written to a fresh versioned directory per
  *    trigger, keeping the previous version alive until the NEXT replace
  *    (same retention window as merge), then deleted.
@@ -254,17 +261,23 @@ final class ParquetTwinStore(root: String,
     walk(new java.io.File(path))
   }
 
+  /** Names of the directories under `dir` (empty for a missing dir). */
+  private def subdirs(dir: String): Seq[String] =
+    Option(new java.io.File(dir).listFiles())
+      .fold(Seq.empty[String])(_.toSeq.filter(_.isDirectory).map(_.getName))
+
   /** Directories under `dir` whose name starts with `prefix` followed by
     * digits, as (sequence, path), ascending. */
-  private def seqDirs(dir: String, prefix: String): Seq[(Long, String)] = {
-    val fs = new java.io.File(dir).listFiles()
-    if (fs == null) Seq.empty
-    else fs.iterator.filter(_.isDirectory).map(_.getName)
-      .filter(n => n.startsWith(prefix) && n.length > prefix.length &&
+  private def seqDirs(dir: String, prefix: String): Seq[(Long, String)] =
+    seqDirs(dir, subdirs(dir), prefix)
+
+  /** [[seqDirs]] over an already-listed set of directory `names`. */
+  private def seqDirs(dir: String, names: Seq[String],
+                      prefix: String): Seq[(Long, String)] =
+    names.filter(n => n.startsWith(prefix) && n.length > prefix.length &&
         n.drop(prefix.length).forall(_.isDigit))
       .map(n => (n.drop(prefix.length).toLong, s"$dir/$n"))
-      .toSeq.sortBy(_._1)
-  }
+      .sortBy(_._1)
 
   /** A parquet dir readable by spark.read (has at least one data file). */
   private def hasData(path: String): Boolean = {
@@ -310,7 +323,7 @@ final class ParquetTwinStore(root: String,
 
   /** Total bytes of regular files under `path` (recursive; 0 for a
     * missing dir) — local fs metadata, the free size signal behind the
-    * update-key broadcast gate. */
+    * overflow/bulk placement choice. */
   private def dirBytes(path: String): Long = {
     def walk(f: java.io.File): Long =
       if (f.isFile) f.length()
@@ -359,31 +372,24 @@ final class ParquetTwinStore(root: String,
   /** Next file sequence of a table, surviving restarts (scans every
     * bucket dir and the overflow dir for the max seen sequence, so new
     * files always order after everything on disk — including per-bucket
-    * sequences written by the pre-overflow store version). */
+    * sequences written by the pre-overflow store version). `_floor`
+    * markers count: after GC a marker can be the only trace of its
+    * sequence, and reissuing a sequence at or below a floor would make
+    * the new delta invisible to resolution. */
   private def nextTableSeq(name: String): Long = {
-    val cur = tableSeqs.getOrElseUpdate(name, {
-      val n = tableFanout(name)
-      val bucketMax = (0 until n).iterator.map { k =>
-        val d = bucketDir(name, k)
-        // `_floor` markers count: after GC a marker can be the only
-        // trace of its sequence, and reissuing a sequence at or below a
-        // floor would make the new delta invisible to resolution
-        ((seqDirs(d, "base-v") ++ seqDirs(d, "d") ++ seqDirs(d, "t"))
-          .map(_._1) :+ readFloorMarker(d)).foldLeft(0L)(math.max)
-      }.foldLeft(0L)(math.max)
-      val ovfMax = (seqDirs(ovfDir(name), "d") ++ seqDirs(ovfDir(name), "t"))
-        .map(_._1).foldLeft(0L)(math.max)
-      math.max(bucketMax, ovfMax)
-    })
+    val cur = tableSeqs.getOrElseUpdate(name,
+      ((0 until tableFanout(name)).map(bucketDir(name, _)) :+ ovfDir(name)).iterator
+        .flatMap(d => (seqDirs(d, "base-v") ++ seqDirs(d, "d")).map(_._1) :+ readFloorMarker(d))
+        .foldLeft(0L)(math.max))
     tableSeqs(name) = cur + 1L
     cur + 1L
   }
 
-  // overflow sidecar: each overflow delta/tombstone dir carries a
-  // `_buckets` file (underscore-prefixed — parquet readers ignore it)
-  // listing the buckets whose rows it holds, written into the staged
-  // dir BEFORE the placing rename so file and manifest land atomically.
-  // Immutable once placed → cached per path.
+  // overflow sidecar: each overflow delta dir carries a `_buckets` file
+  // (underscore-prefixed — parquet readers ignore it) listing the
+  // buckets whose rows it holds, written into the staged dir BEFORE the
+  // placing rename so file and manifest land atomically. Immutable once
+  // placed → cached per path.
   private val ovfBucketCache =
     scala.collection.concurrent.TrieMap.empty[String, Set[Int]]
   private def ovfBuckets(path: String): Set[Int] =
@@ -395,17 +401,10 @@ final class ParquetTwinStore(root: String,
         .split(",").iterator.map(_.trim).filter(_.nonEmpty).map(_.toInt).toSet
     })
 
-  /** Overflow parts (shared multi-bucket files, prefix "d" or "t") that
-    * carry rows for bucket `k` above sequence `floor`. */
-  private def ovfPartsFor(name: String, prefix: String, k: Int,
-                          floor: Long): Seq[(Long, String)] =
-    seqDirs(ovfDir(name), prefix)
-      .filter(p => p._1 > floor && ovfBuckets(p._2)(k) && hasData(p._2))
-
   /** A bucket whose compaction resolved to EMPTY has no base file to
     * carry its supersession floor; it persists the floor in a `_floor`
     * marker instead — without it, a delete-heavy bucket's consumed
-    * tombstones would re-enter every cold resolution after a restart
+    * delete rows would re-enter every cold resolution after a restart
     * and its shared overflow files could never GC (the manifest-vs-base
     * comparison would see no base forever). */
   private def readFloorMarker(dir: String): Long = {
@@ -429,75 +428,69 @@ final class ParquetTwinStore(root: String,
   private def bucketFloor(dir: String, base: Option[(Long, String)]): Long =
     math.max(base.fold(-1L)(_._1), readFloorMarker(dir))
 
-  /** Live (post-floor) delta sequences of a bucket — the compaction
-    * trigger counts these, and resolution reads only these (files older
-    * than the newest base/floor linger one trigger for retention but
-    * are excluded from reads). */
-  private def liveParts(dir: String): (Seq[(Long, String)], Seq[(Long, String)], Option[(Long, String)]) = {
-    val base = seqDirs(dir, "base-v").filter(p => hasData(p._2)).lastOption
+  /** Live (post-floor) deltas, newest base and floor of a bucket dir or
+    * of the overflow dir, from ONE listing — the compaction trigger
+    * counts these deltas, and resolution reads only these (files older
+    * than the newest base/floor linger one trigger for retention but are
+    * excluded from reads). The same listing refuses a `t<seq>` dir: an
+    * earlier store version wrote a merge's delete keys there as a
+    * separate tombstone file kind, and resolving without them would
+    * silently resurrect the deleted keys. */
+  private def liveParts(dir: String): (Seq[(Long, String)], Option[(Long, String)], Long) = {
+    val names = subdirs(dir)
+    val tombs = seqDirs(dir, names, "t").map(_._2)
+    if (tombs.nonEmpty)
+      throw new IllegalStateException(
+        s"merged-table dir $dir holds tombstone dirs (${tombs.mkString(", ")}) " +
+          "from a store version that wrote deletes as a separate file kind; " +
+          "re-materialize the table before resuming — refusing to resolve " +
+          "without its deletes")
+    val base = seqDirs(dir, names, "base-v").filter(p => hasData(p._2)).lastOption
     val floor = bucketFloor(dir, base)
-    val ds = seqDirs(dir, "d").filter(p => p._1 > floor && hasData(p._2))
-    val ts = seqDirs(dir, "t").filter(p => p._1 > floor && hasData(p._2))
-    (ds, ts, base)
+    (seqDirs(dir, names, "d").filter(p => p._1 > floor && hasData(p._2)), base, floor)
+  }
+
+  /** Bucket k's live local deltas, the live shared overflow deltas that
+    * carry rows for it, and its newest base. */
+  private def bucketParts(name: String, k: Int)
+      : (Seq[(Long, String)], Seq[(Long, String)], Option[(Long, String)]) = {
+    val (ds, base, floor) = liveParts(bucketDir(name, k))
+    val ods = liveParts(ovfDir(name))._1.filter(p => p._1 > floor && ovfBuckets(p._2)(k))
+    (ds, ods, base)
   }
 
   /** Resolve ONE bucket: last-writer-wins per key group across its base
-    * + deltas (max file sequence), with tombstones PARTICIPATING in the
-    * sequence order — a key is live iff its latest upsert is newer than
-    * its latest tombstone, so deletion and re-insertion interleave
-    * correctly. Returns None for a bucket with no live data files; a
-    * bucket with only a base resolves to the plain base read (no window
-    * — this is what makes untouched buckets free). */
+    * + deltas (max file sequence), with delete rows PARTICIPATING in the
+    * sequence order — a key is live iff its newest upsert file is
+    * strictly newer than its newest delete row, so deletion and
+    * re-insertion interleave correctly. One window over the file
+    * sequence computes both maxima. Returns None for a bucket with no
+    * live data files; a bucket with only a base resolves to the plain
+    * base read (no window — this is what makes untouched buckets free). */
   private def resolveBucket(spark: SparkSession, name: String,
                             k: Int): Option[DataFrame] = {
-    val dir = bucketDir(name, k)
-    val (ds, ts, base) = liveParts(dir)
-    val floor = bucketFloor(dir, base)
-    // shared overflow files carrying this bucket's rows (filtered to
-    // the bucket's slice on read — `_gb` is a physical column there)
-    val ods = ovfPartsFor(name, "d", k, floor)
-    val ots = ovfPartsFor(name, "t", k, floor)
-    def ovfSlice(path: String): DataFrame =
-      spark.read.parquet(path).filter(col("_gb") === k).drop("_gb")
-    val upLegs: Seq[(Long, DataFrame)] =
-      (base.toSeq ++ ds).map { case (s, p) => (s, spark.read.parquet(p)) } ++
-        ods.map { case (s, p) => (s, ovfSlice(p)) }
-    if (upLegs.isEmpty) return None
-    if (ds.isEmpty && ts.isEmpty && ods.isEmpty && ots.isEmpty)
-      return Some(spark.read.parquet(base.get._2))
+    val (ds, ods, base) = bucketParts(name, k)
+    if (ds.isEmpty && ods.isEmpty) return base.map(b => spark.read.parquet(b._2))
     coldWindowCount.incrementAndGet(): Unit
     val keyCols = readKeys(name).getOrElse(
       throw new IllegalStateException(s"merged table $name has no _keys marker"))
-    val all = upLegs.map { case (seq, df) => df.withColumn("_mseq", lit(seq)) }
+    // a base, like a delta written before the `_del` flag, holds upserts only
+    def leg(seq: Long, df: DataFrame): DataFrame =
+      (if (df.columns.contains("_del")) df else df.withColumn("_del", lit(false)))
+        .withColumn("_mseq", lit(seq))
+    // shared overflow files are filtered to the bucket's slice on read
+    // (`_gb` is a physical column there)
+    val all = ((base.toSeq ++ ds).map { case (s, p) => leg(s, spark.read.parquet(p)) } ++
+      ods.map { case (s, p) =>
+        leg(s, spark.read.parquet(p).filter(col("_gb") === k).drop("_gb")) })
       .reduce(_ unionByName _)
     val w = Window.partitionBy(keyCols.map(col): _*)
-    val live = all.withColumn("_mmax", max(col("_mseq")).over(w))
-      .filter(col("_mseq") === col("_mmax"))
-      .drop("_mseq")
-    val tLegs: Seq[(Long, DataFrame)] =
-      ts.map { case (s, p) => (s, spark.read.parquet(p)) } ++
-        ots.map { case (s, p) => (s, ovfSlice(p)) }
-    if (tLegs.isEmpty) Some(live.drop("_mmax"))
-    else {
-      val gone = tLegs.map { case (seq, df) => df.withColumn("_tseq", lit(seq)) }
-        .reduce(_ unionByName _)
-        .groupBy(keyCols.map(col): _*).agg(max(col("_tseq")).as("_tmax"))
-      Some(live.join(gone, keyCols, "left")
-        .filter(col("_tmax").isNull || col("_mmax") > col("_tmax"))
-        .drop("_mmax", "_tmax"))
-    }
+    Some(all.withColumn("_mup", max(when(!col("_del"), col("_mseq"))).over(w))
+      .withColumn("_mdel", max(when(col("_del"), col("_mseq"))).over(w))
+      .filter(!col("_del") && col("_mseq") === col("_mup") &&
+        (col("_mdel").isNull || col("_mup") > col("_mdel")))
+      .drop("_del", "_mseq", "_mup", "_mdel"))
   }
-
-  /** The current table of bucket k for serving: the slice of its cached
-    * checkpointed ancestor if the bucket has one, else the lazy
-    * resolution (which for a base-only bucket is a plain file read).
-    * Does NOT checkpoint — [[merge]] batches the materialization of
-    * every bucket that needs one into a single job. */
-  private def bucketTable(spark: SparkSession, name: String,
-                          k: Int): Option[DataFrame] =
-    bucketCache.get((name, k))
-      .map(_.filter(col("_gb") === k).drop("_gb"))
-      .orElse(resolveBucket(spark, name, k))
 
   /** Union legs for the given buckets' current tables (no checkpoint):
     * cached buckets scan each shared tagged ancestor ONCE (grouped isin
@@ -520,13 +513,8 @@ final class ParquetTwinStore(root: String,
     * trigger, plus post-restart buckets with live deltas). */
   private def needsMaterialize(name: String, k: Int): Boolean =
     !bucketCache.contains((name, k)) && {
-      val bdir = bucketDir(name, k)
-      val (ds, ts, base) = liveParts(bdir)
-      val floor = bucketFloor(bdir, base)
-      val ods = ovfPartsFor(name, "d", k, floor)
-      val ots = ovfPartsFor(name, "t", k, floor)
-      (ds.nonEmpty || ts.nonEmpty || ods.nonEmpty || ots.nonEmpty) &&
-        (base.nonEmpty || ds.nonEmpty || ods.nonEmpty)
+      val (ds, ods, _) = bucketParts(name, k)
+      ds.nonEmpty || ods.nonEmpty
     }
 
   /** Merged tables record their key columns in a `_keys` marker file so
@@ -627,27 +615,33 @@ final class ParquetTwinStore(root: String,
     phase("gc")(gcPending(name))
     writeKeys(name, keyCols)
     val n = tableFanout(name)
-    val route = pmod(xxhash64(keyCols.map(col): _*), lit(n.toLong)).cast("int")
+    val keyed = keyCols.map(col)
+    val route = pmod(xxhash64(keyed: _*), lit(n.toLong)).cast("int")
     // delete-wins on an upsert/delete key overlap (contract violation):
     // dropping the overlapping upsert rows BEFORE staging keeps the warm
-    // incremental fold, the cold file-level window (where a same-sequence
-    // tombstone is authoritative) and the in-memory store all uniform —
-    // a violating caller can no longer get state that depends on whether
-    // a restart happened
+    // incremental fold, the cold file-level window and the in-memory
+    // store all uniform — a violating caller can no longer get state
+    // that depends on whether a restart happened
     val upserts = deleteKeys.fold(rawUpserts)(d =>
-      rawUpserts.join(d.select(keyCols.map(col): _*), keyCols, "left_anti"))
+      rawUpserts.join(d.select(keyed: _*), keyCols, "left_anti"))
+    // the merge's ONE delta: upsert rows and delete keys (nulls in the
+    // non-key columns), told apart by the `_del` flag
+    val flagged = upserts.withColumn("_del", lit(false))
+    val delta = deleteKeys.fold(flagged)(d => flagged.unionByName(
+      d.select(keyed: _*).withColumn("_del", lit(true)), allowMissingColumns = true))
 
-    // stage the update-mass write ONCE, UNPARTITIONED, with the routing
-    // bucket as a physical `_gb` column (sorted within partitions so
-    // row-group stats prune per-bucket reads). One writer + a handful
-    // of files regardless of how the keys spray — the r14 fanout curve
-    // measured the old per-bucket partitionBy stage as the dominant
-    // linear term of a spraying trigger (one writer + one file PER
-    // TOUCHED BUCKET: 0.38s → 1.16s from fanout 16 → 128). Whether the
-    // staged rows then land as one shared overflow delta or re-split
-    // into per-bucket files is the PLACE phase's size-based decision.
-    def stage(df: DataFrame, tag: String): Seq[Int] = {
-      val sdir = s"$dir/stage-$tag"
+    // stage the update-mass write ONCE, UNPARTITIONED, on the calling
+    // thread, with the routing bucket as a physical `_gb` column (sorted
+    // within partitions so row-group stats prune per-bucket reads). One
+    // writer + a handful of files regardless of how the keys spray — the
+    // r14 fanout curve measured the old per-bucket partitionBy stage as
+    // the dominant linear term of a spraying trigger (one writer + one
+    // file PER TOUCHED BUCKET: 0.38s → 1.16s from fanout 16 → 128).
+    // Whether the staged rows then land as one shared overflow delta or
+    // re-split into per-bucket files is the PLACE phase's size-based
+    // decision.
+    val sdir = s"$dir/stage"
+    val touched: Seq[Int] = phase("stage") {
       rm(sdir)
       // the touched-bucket set rides an accumulator THROUGH the write
       // job, so staging stays exactly one Spark job; a distinct()
@@ -659,31 +653,12 @@ final class ParquetTwinStore(root: String,
       // O(rows) — a bulk backfill merge can't OOM the driver through
       // its own instrumentation.
       val acc = new ParquetTwinStore.BucketSetAccumulator
-      spark.sparkContext.register(acc, s"graft-touched-$tag")
+      spark.sparkContext.register(acc, "graft-touched")
       val recordGb = udf { (g: Int) => acc.add(g); g }
-      df.withColumn("_gb", recordGb(route)).sortWithinPartitions("_gb")
+      delta.withColumn("_gb", recordGb(route)).sortWithinPartitions("_gb")
         .write.mode("overwrite").parquet(sdir)
       acc.value.toSeq.sorted
     }
-    val (upKs, delKs) = phase("stage") {
-      deleteKeys match {
-        case None => (stage(upserts, "u"), Seq.empty[Int])
-        case Some(d) =>
-          // the two staging writes are independent jobs over disjoint
-          // dirs — submit them concurrently so the tombstone write
-          // back-fills the upsert write's tail instead of queuing a
-          // second full job latency behind it (guide §2.6). Spark's
-          // scheduler runs concurrent jobs FIFO; both are update-mass.
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.duration.Duration
-          implicit val ec: scala.concurrent.ExecutionContext =
-            ParquetTwinStore.stageEc
-          val fu = Future(stage(upserts, "u"))
-          val ft = Future(stage(d.select(keyCols.map(col): _*), "t"))
-          (Await.result(fu, Duration.Inf), Await.result(ft, Duration.Inf))
-      }
-    }
-    val touched = (upKs ++ delKs).distinct.sorted
     val touchedSet = touched.toSet
     // the PRIOR resolution of the touched buckets, captured before the
     // new files land. Warm path (every trigger after a bucket's first
@@ -708,17 +683,13 @@ final class ParquetTwinStore(root: String,
     // union equals the per-bucket folds — the whole fold is one map-side
     // pass (broadcast update keys) over the prior state: no base/delta
     // re-read, no merge-on-read window, regardless of how the keys spray.
-    // The update reads the staged PARENT dirs (one scan each, `_gb`
-    // inferred as the partition column) — never one read leg per bucket,
-    // which would put fanout-many tiny scans in every trigger's plan.
-    val keyed = keyCols.map(col)
-    val upTagged: Option[DataFrame] =
-      if (upKs.isEmpty) None else Some(spark.read.parquet(s"$dir/stage-u"))
-    val goneKeys: Option[DataFrame] =
-      (upTagged.map(_.select(keyed: _*)).toSeq ++
-        (if (delKs.isEmpty) Seq.empty
-         else Seq(spark.read.parquet(s"$dir/stage-t").select(keyed: _*))))
-        .reduceOption(_ unionByName _).map(_.distinct())
+    // The update reads the ONE staged dir — never one read leg per
+    // bucket, which would put fanout-many tiny scans in every trigger's
+    // plan — with the schema it was written with, so the read runs no
+    // schema-inference job.
+    val staged: Option[DataFrame] =
+      if (touched.isEmpty) None
+      else Some(spark.read.schema(delta.schema.add("_gb", "int")).parquet(sdir))
     val priorTagged: Option[DataFrame] =
       (warmLegs ++ coldLegs).reduceOption(_ unionByName _)
     // SIZE-GATED broadcast of the update keys: per-trigger update sets
@@ -726,18 +697,16 @@ final class ParquetTwinStore(root: String,
     // BULK caller (backfill, migration) merging table-mass updates
     // would ship the whole key set to every executor and OOM them. The
     // gate measures what actually broadcasts — the KEY columns' bytes
-    // from the just-written staged parquet's footers (stage-t is
-    // key-only already, so its file bytes stand as-is): past
+    // from the just-written staged parquet's footers: past
     // `broadcastKeyBytes` (default [[ParquetTwinStore.BroadcastKeyBytes]])
     // the fold falls back to a plain (shuffle/AQE-planned) anti-join.
-    val stagedBytes = stagedKeyBytes(spark, s"$dir/stage-u", keyCols) +
-      dirBytes(s"$dir/stage-t")
-    val keptTagged = priorTagged.map(p =>
-      goneKeys.fold(p)(g => p.join(
-        if (stagedBytes <= broadcastKeyBytes) broadcast(g) else g,
-        keyCols, "left_anti")))
-    val foldedTagged: Option[DataFrame] =
-      (keptTagged.toSeq ++ upTagged.toSeq).reduceOption(_ unionByName _)
+    val foldedTagged: Option[DataFrame] = staged.map { st =>
+      val gone = st.select(keyed: _*).distinct()
+      val goneGated =
+        if (stagedKeyBytes(spark, sdir, keyCols) <= broadcastKeyBytes) broadcast(gone) else gone
+      (priorTagged.map(_.join(goneGated, keyCols, "left_anti")).toSeq :+
+        st.filter(!col("_del")).drop("_del")).reduce(_ unionByName _)
+    }
     // post-restart buckets carrying live deltas but untouched this merge:
     // resolve through the file-level window once, batched with the fold
     val coldUntouched: Seq[(Int, DataFrame)] = phase("resolve_cold") {
@@ -781,12 +750,7 @@ final class ParquetTwinStore(root: String,
     // each bucket through the file-level window over whatever landed).
     try phase("place") {
       if (touched.nonEmpty) {
-        // upsert and tombstone of ONE merge share a sequence (upsert/
-        // delete key sets are disjoint within a call — enforced by the
-        // delete-wins filter above; strict `>` in the window keeps a
-        // same-seq tombstone authoritative for its keys)
         val seq = nextTableSeq(name)
-        val stagedBytesAll = dirBytes(s"$dir/stage-u") + dirBytes(s"$dir/stage-t")
         // SIZE-BASED placement: a spraying micro-batch (many touched
         // buckets, tiny per-bucket mass) lands as ONE shared OVERFLOW
         // delta — a plain rename of the staged dir, zero extra jobs and
@@ -794,40 +758,27 @@ final class ParquetTwinStore(root: String,
         // term, gone). A BULK merge (per-bucket mass at or above
         // `overflowBytes`) re-splits into per-bucket files so a later
         // cold resolution of one bucket never scans a giant shared file.
-        if (stagedBytesAll < overflowBytes.toDouble * touched.size) {
+        if (dirBytes(sdir) < overflowBytes.toDouble * touched.size) {
           new java.io.File(ovfDir(name)).mkdirs(): Unit
-          def placeOvf(tag: String, ks: Seq[Int], kind: String): Unit =
-            if (ks.nonEmpty) {
-              val src = new java.io.File(s"$dir/stage-$tag")
-              // the `_buckets` manifest rides INSIDE the staged dir so
-              // the rename lands data + manifest atomically
-              java.nio.file.Files.write(new java.io.File(src, "_buckets").toPath,
-                ks.mkString(",").getBytes(java.nio.charset.StandardCharsets.UTF_8)): Unit
-              require(src.renameTo(new java.io.File(s"${ovfDir(name)}/$kind$seq")),
-                s"failed to place overflow $kind-delta for $name")
-            } else rm(s"$dir/stage-$tag")
-          placeOvf("u", upKs, "d")
-          placeOvf("t", delKs, "t")
+          // the `_buckets` manifest rides INSIDE the staged dir so the
+          // rename lands data + manifest atomically
+          java.nio.file.Files.write(new java.io.File(sdir, "_buckets").toPath,
+            touched.mkString(",").getBytes(java.nio.charset.StandardCharsets.UTF_8)): Unit
+          require(new java.io.File(sdir).renameTo(new java.io.File(s"${ovfDir(name)}/d$seq")),
+            s"failed to place overflow delta for $name")
         } else {
-          def placeBuckets(tag: String, ks: Seq[Int], kind: String): Unit =
-            if (ks.nonEmpty) {
-              val pdir = s"$dir/stage-$tag.p"
-              rm(pdir)
-              spark.read.parquet(s"$dir/stage-$tag")
-                .write.partitionBy("_gb").mode("overwrite").parquet(pdir)
-              for (k <- ks) {
-                val bdir = new java.io.File(bucketDir(name, k))
-                bdir.mkdirs(): Unit
-                val src = new java.io.File(s"$pdir/_gb=$k")
-                if (src.isDirectory)
-                  require(src.renameTo(new java.io.File(s"${bdir.getPath}/$kind$seq")),
-                    s"failed to place $kind-delta for bucket $k of $name")
-              }
-              rm(pdir)
-            }
-          placeBuckets("u", upKs, "d")
-          placeBuckets("t", delKs, "t")
-          rm(s"$dir/stage-u"); rm(s"$dir/stage-t")
+          val pdir = s"$sdir.p"
+          rm(pdir)
+          staged.get.write.partitionBy("_gb").mode("overwrite").parquet(pdir)
+          for (k <- touched) {
+            val bdir = new java.io.File(bucketDir(name, k))
+            bdir.mkdirs(): Unit
+            val src = new java.io.File(s"$pdir/_gb=$k")
+            if (src.isDirectory)
+              require(src.renameTo(new java.io.File(s"${bdir.getPath}/d$seq")),
+                s"failed to place delta for bucket $k of $name")
+          }
+          rm(pdir); rm(sdir)
         }
       }
     } catch { case e: Throwable =>
@@ -850,60 +801,18 @@ final class ParquetTwinStore(root: String,
       // files, EVERY bucket with live overflow rows compacts — draining
       // the shared files so a straggler bucket (one overflow row, then
       // never touched again) can't pin them forever. A shared file is
-      // only GC'd once every bucket it carries has a newer base.
-      val n2 = tableFanout(name)
-      // the primary drain counts DELTA files only (d+t pairs of a mixed
-      // trigger must not halve the effective drain period) — but a
-      // delete-heavy/delete-only workload writes tombstones with few or
-      // no deltas, so a DOUBLED-threshold rule over d+t together backs
-      // it up: without it no compaction ever fires, every resolution
-      // windows over a growing tombstone set, and overflow GC never
-      // runs (no bucket gets a newer base/floor).
-      val ovfLiveD = seqDirs(ovfDir(name), "d").filter(p => hasData(p._2))
-      val ovfLiveT = seqDirs(ovfDir(name), "t").filter(p => hasData(p._2))
-      val drainOvf = ovfLiveD.size >= MaxDeltas ||
-        ovfLiveD.size + ovfLiveT.size >= 2 * MaxDeltas
-      val compacting = (0 until n2).filter { k =>
+      // only GC'd once every bucket it carries has a newer base. Every
+      // merge is one delta, so a delete-only workload drains like any
+      // other; a bucket whose deltas hold only deletes resolves EMPTY
+      // and compacts to a `_floor` marker.
+      val drainOvf = liveParts(ovfDir(name))._1.size >= MaxDeltas
+      val compacting = (0 until tableFanout(name)).filter { k =>
         bucketCache.contains((name, k)) && {
-          val bdir = bucketDir(name, k)
-          val (ds, ts, base) = liveParts(bdir)
-          val floor = bucketFloor(bdir, base)
-          val odsK = ovfPartsFor(name, "d", k, floor)
-          val otsK = ovfPartsFor(name, "t", k, floor)
-          (ds.length + odsK.length) >= MaxDeltas ||
-            (ds.length + ts.length + odsK.length + otsK.length) >= 2 * MaxDeltas ||
-            (drainOvf && (odsK.nonEmpty || otsK.nonEmpty))
+          val (ds, odsK, _) = bucketParts(name, k)
+          ds.length + odsK.length >= MaxDeltas || (drainOvf && odsK.nonEmpty)
         }
       }
-      // TOMBSTONE-ONLY buckets (no base, no live upsert leg local or
-      // shared — necessarily uncached: nothing ever materialized them).
-      // Every live tombstone there is semantically DEAD: a tombstone
-      // masks only upserts with OLDER sequences and none exist, while
-      // any future upsert takes a newer sequence. So no compaction job
-      // is needed — persist the floor in lieu of a base and consume the
-      // local tombstone files, which is what lets a delete-only table
-      // still drain its shared overflow files (the GC below retires a
-      // shared file once every manifest bucket's floor passes it).
-      val tombOnly = (0 until n2).filterNot(k => bucketCache.contains((name, k)))
-        .flatMap { k =>
-          val bdir = bucketDir(name, k)
-          val (ds, ts, base) = liveParts(bdir)
-          val floor = bucketFloor(bdir, base)
-          val odsK = ovfPartsFor(name, "d", k, floor)
-          val otsK = ovfPartsFor(name, "t", k, floor)
-          val tombstoneOnly = base.isEmpty && ds.isEmpty && odsK.isEmpty &&
-            (ts.nonEmpty || otsK.nonEmpty)
-          if (tombstoneOnly &&
-              ((ts.length + otsK.length) >= MaxDeltas || (drainOvf && otsK.nonEmpty)))
-            Some(k -> ts)
-          else None
-        }
-      val baseSeq =
-        if (compacting.isEmpty && tombOnly.isEmpty) -1L else nextTableSeq(name)
-      for ((k, ts) <- tombOnly) {
-        writeFloorMarker(bucketDir(name, k), baseSeq)
-        consumed ++= ts.map(_._2)
-      }
+      val baseSeq = if (compacting.isEmpty) -1L else nextTableSeq(name)
       if (compacting.nonEmpty) {
         // every compacting bucket's resolution is a slice of an
         // already-checkpointed tagged ancestor (this merge's for
@@ -923,7 +832,7 @@ final class ParquetTwinStore(root: String,
         for (k <- compacting) {
           val bdir = bucketDir(name, k)
           new java.io.File(bdir).mkdirs(): Unit
-          val (ds, ts, base) = liveParts(bdir)
+          val (ds, base, _) = liveParts(bdir)
           val src = new java.io.File(s"$cdir/_gb=$k")
           // a bucket whose resolution is EMPTY stages no partition dir:
           // consuming its files with no replacement base is exactly
@@ -936,27 +845,18 @@ final class ParquetTwinStore(root: String,
             require(src.renameTo(new java.io.File(s"$bdir/base-v$baseSeq")),
               s"failed to commit compacted base for bucket $k of $name")
           else writeFloorMarker(bdir, baseSeq)
-          consumed ++= (base.toSeq ++ ds ++ ts).map(_._2)
+          consumed ++= (base.toSeq ++ ds).map(_._2)
         }
         rm(cdir)
       }
       // overflow GC: a shared file is dead once EVERY bucket in its
-      // `_buckets` manifest has a base newer than it (its rows are all
-      // superseded by compacted bases); it then rides the same
+      // `_buckets` manifest has a base (or `_floor` marker) newer than
+      // it (its rows are all superseded); it then rides the same
       // deferred-GC retention window as bucket-local files
-      val compactedSet = compacting.toSet ++ tombOnly.map(_._1)
       val floorOf = scala.collection.mutable.Map.empty[Int, Long]
       def baseFloor(k: Int): Long =
-        floorOf.getOrElseUpdate(k, {
-          val bdir = bucketDir(name, k)
-          val listed = bucketFloor(bdir, liveParts(bdir)._3)
-          // a bucket compacted THIS merge whose resolution was empty
-          // wrote a `_floor` marker rather than a base (already covered
-          // by bucketFloor), but keep the explicit credit as a belt —
-          // everything at or below baseSeq is superseded either way
-          if (compactedSet(k)) math.max(listed, baseSeq) else listed
-        })
-      for (p <- seqDirs(ovfDir(name), "d") ++ seqDirs(ovfDir(name), "t")) {
+        floorOf.getOrElseUpdate(k, liveParts(bucketDir(name, k))._3)
+      for (p <- seqDirs(ovfDir(name), "d")) {
         val bs = ovfBuckets(p._2)
         if (bs.nonEmpty && bs.forall(k => baseFloor(k) > p._1))
           consumed += p._2
@@ -1041,19 +941,6 @@ final class ParquetTwinStore(root: String,
 }
 
 object ParquetTwinStore {
-  /** Two daemon threads for overlapping a merge's independent staging
-    * writes (upserts + tombstones). Job-scoped thread-locals (job
-    * group/description) are not relied on inside [[ParquetTwinStore.merge]],
-    * so submitting from pool threads is safe. */
-  private[streaming] lazy val stageEc: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newFixedThreadPool(2,
-        (r: Runnable) => {
-          val t = new Thread(r, "graft-twinstore-stage")
-          t.setDaemon(true)
-          t
-        }))
-
   /** Per-task distinct-bucket accumulator: tasks add routed bucket ids,
     * each task result ships one Set ≤ fanout, the driver merges sets —
     * O(buckets) end to end. Duplicate adds (task retries, expression
@@ -1104,36 +991,7 @@ object ParquetTwinStore {
 
   /** Default merged-table fanout. Small for the test/probe scale; a
     * cluster deployment sizes it like any bucketed table (state mass /
-    * target bucket size — [[fanoutFor]]) — the marker file makes
-    * per-table fanout a creation-time choice, not a code constant. */
+    * target bucket size, e.g. one bucket per 256 MiB) — the marker file
+    * makes per-table fanout a creation-time choice, not a code constant. */
   val NumBuckets = 16
-
-  /** The fanout sizing rule as a constructor-level knob: one bucket per
-    * `targetBucketBytes` of expected state mass (the standard bucketed-
-    * table sizing), floored at [[NumBuckets]] and capped at 4096. A twin
-    * that expects ~16 GiB of state at the default 256 MiB target gets 64
-    * buckets — the spray-update probe row (`TwinStoreProbe`) measures
-    * exactly that configuration.
-    *
-    * MEASURED trade behind the cap (`twinstore_probe.json`
-    * `fanout_curve`, r14): a same-size spray update over the same state
-    * mass cost 0.77s / 1.18s / 1.94s / 2.23s at fanout 16/32/64/128 —
-    * a fixed term of roughly 10-15 ms PER TOUCHED BUCKET per trigger,
-    * owned by the then-per-bucket `stage` partitionBy write (one
-    * parquet writer + output file per touched bucket: 0.38 → 1.16s
-    * across the curve) plus the fold's staged-dir scan (`checkpoint`,
-    * 0.30 → 0.69s). Since r15 the spray path AMORTIZES that term: the
-    * stage write is unpartitioned (one writer regardless of spray) and
-    * a below-[[OverflowBytes]] update places as one shared overflow
-    * delta, so the remaining per-bucket terms are the compaction-time
-    * listing/rename tier. Fanout still buys smaller buckets (bounded
-    * per-bucket resolution/compaction mass) — size it from state mass
-    * alone (`expectedStateBytes / 256 MiB`); the cap guards the
-    * metadata (listing) cost that remains linear in fanout. */
-  def fanoutFor(expectedStateBytes: Long,
-                targetBucketBytes: Long = 256L << 20): Int = {
-    require(targetBucketBytes > 0, "targetBucketBytes must be positive")
-    val want = (expectedStateBytes + targetBucketBytes - 1) / targetBucketBytes
-    math.min(4096L, math.max(NumBuckets.toLong, want)).toInt
-  }
 }

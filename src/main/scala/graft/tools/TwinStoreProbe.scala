@@ -32,9 +32,9 @@ import org.apache.spark.sql.functions._
  * table mass (9.75s at 150k rows vs 0.74s hot); with the incremental
  * fold its extra cost over a hot update is one pass over the cached
  * prior state — the probe pins it within ~2× of the hot update. A
- * second spray row at fanout 64 ([[graft.streaming.ParquetTwinStore
- * .fanoutFor]]'s 16 GiB sizing point) shows the knob's effect on
- * per-bucket mass and compaction granularity.
+ * second spray row at fanout 64 (one bucket per 256 MiB of a 16 GiB
+ * state) shows the fanout knob's effect on per-bucket mass and
+ * compaction granularity.
  *
  * Writes `twinstore_probe.json` in the working directory (or the path
  * given as the second argument); it is a standalone artifact that
@@ -97,12 +97,11 @@ object TwinStoreProbe {
     val sprayPhases = st.drainPhaseSeconds()
 
     // the FANOUT COST CURVE: the same total state mass at fanout 32, 64
-    // (ParquetTwinStore.fanoutFor's 16 GiB sizing point) and 128, same
-    // spray update, with the per-merge PHASE breakdown kept per point —
-    // the curve names the per-bucket fixed term (place renames + staged
+    // (one bucket per 256 MiB of a 16 GiB state) and 128, same spray
+    // update, with the per-merge PHASE breakdown kept per point — the
+    // curve names the per-bucket fixed term (place renames + staged
     // partition dirs + per-bucket file listings) that dominates once
-    // buckets outnumber update rows' natural clustering, and is the
-    // measured basis for fanoutFor's cap note
+    // buckets outnumber update rows' natural clustering
     def sprayAt(fo: Int): (Double, Double, Map[String, Double]) = {
       val r = java.nio.file.Files.createTempDirectory(s"graft-tsprobe$fo").toString
       val s2 = new ParquetTwinStore(r, fo)
@@ -208,7 +207,7 @@ object TwinStoreProbe {
       s"""{"overflow_bytes":$ovfCap,"bulk_rows":$bulkRows,"spray_s":[${sp.map(p => f(p._1)).mkString(",")}],"bulk_s":[${bk.map(p => f(p._1)).mkString(",")}],"spray_mean_s":${f(mean(sp.map(_._1)))},"spray_mean_cpu_s":${f(mean(sp.map(_._2)))},"bulk_mean_s":${f(mean(bk.map(_._1)))},"bulk_mean_cpu_s":${f(mean(bk.map(_._2)))},"phases_total":${phJson(ph)},"note":"spray (overflow-delta) and bulk (per-bucket re-split) placements alternating on one table: both paths' files share the table-wide sequence, so the LWW window and compaction stay exact while each merge takes its size-appropriate placement"}"""
     }
     val json =
-      s"""{"n_triggers":$nTriggers,"fanout":$fanout,"grow_rows_per_trigger":$growPerTrigger,"hot_update_rows":$hotSize,"final_table_rows":${nTriggers * growPerTrigger + hotSize},"hot_update_s":[${hotT.map(p => f(p._1)).mkString(",")}],"hot_update_cpu_s":[${hotT.map(p => f(p._2)).mkString(",")}],"grow_merge_s":[${growT.map(p => f(p._1)).mkString(",")}],"hot_early_mean_s":${f(mean(early))},"hot_late_mean_s":${f(mean(late))},"hot_growth":${f(mean(late) / mean(early))},"hot_growth_cpu":${f(mean(lateC) / mean(earlyC))},"spray_update_s":${f(spray._1)},"spray_update_cpu_s":${f(spray._2)},"spray_update_fanout64_s":${f(spray64._1)},"spray_update_fanout64_cpu_s":${f(spray64._2)},"fanout_curve":$curveJson,"overflow_drain":$drainJson,"interleaved_bulk":$mixJson,"steal_pct":${f(stealPct)},"note":"hot updates re-upsert a FIXED key set confined to bucket 0 while growth merges inflate the other 15 buckets ${nTriggers}x: flat hot_update_s (hot_growth ~1) = resolve cost tracks touched-bucket mass, not table mass. spray_update_s is the all-buckets-touched case: with r13's incremental fold (cached-prior anti-join, no file re-read/re-window) it must sit within ~2x of a hot update; spray_update_fanout64_s repeats it on a 64-bucket table (the fanoutFor 16GiB sizing point) over the same state mass."}"""
+      s"""{"n_triggers":$nTriggers,"fanout":$fanout,"grow_rows_per_trigger":$growPerTrigger,"hot_update_rows":$hotSize,"final_table_rows":${nTriggers * growPerTrigger + hotSize},"hot_update_s":[${hotT.map(p => f(p._1)).mkString(",")}],"hot_update_cpu_s":[${hotT.map(p => f(p._2)).mkString(",")}],"grow_merge_s":[${growT.map(p => f(p._1)).mkString(",")}],"hot_early_mean_s":${f(mean(early))},"hot_late_mean_s":${f(mean(late))},"hot_growth":${f(mean(late) / mean(early))},"hot_growth_cpu":${f(mean(lateC) / mean(earlyC))},"spray_update_s":${f(spray._1)},"spray_update_cpu_s":${f(spray._2)},"spray_update_fanout64_s":${f(spray64._1)},"spray_update_fanout64_cpu_s":${f(spray64._2)},"fanout_curve":$curveJson,"overflow_drain":$drainJson,"interleaved_bulk":$mixJson,"steal_pct":${f(stealPct)},"note":"hot updates re-upsert a FIXED key set confined to bucket 0 while growth merges inflate the other 15 buckets ${nTriggers}x: flat hot_update_s (hot_growth ~1) = resolve cost tracks touched-bucket mass, not table mass. spray_update_s is the all-buckets-touched case: with r13's incremental fold (cached-prior anti-join, no file re-read/re-window) it must sit within ~2x of a hot update; spray_update_fanout64_s repeats it on a 64-bucket table (one bucket per 256 MiB of a 16 GiB state) over the same state mass."}"""
     java.nio.file.Files.write(java.nio.file.Paths.get(out),
       (json + "\n").getBytes("UTF-8"))
     System.out.println(json)

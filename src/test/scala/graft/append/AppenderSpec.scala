@@ -2,8 +2,6 @@ package graft.append
 
 import java.nio.file.Files
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-
 import graft.SparkSpec
 import graft.model._
 
@@ -93,33 +91,11 @@ class AppenderSpec extends SparkSpec {
     Appender.append(spark, dir, "t", events(3), NoStream)
     def parquetFiles = new java.io.File(dir).listFiles().count(_.getName.endsWith(".parquet"))
     val filesBefore = parquetFiles
-    // jobs are tagged by a local property; a sentinel job submitted after the
-    // append returns is delivered after every append job's start event
-    val phase = "graft.test.phase"
-    val appendJobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(phase))) match {
-          case Some("append")   => appendJobs.incrementAndGet()
-          case Some("sentinel") => sentinelSeen.countDown()
-          case _                =>
-        }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(phase, "append")
+    val appendJobs = jobsOf {
       val r = Appender.append(spark, dir, "s", events(4), ExactRevision(39))
       assert(r == AppendResult(40L, 43L, 44L, 47L))
-      sc.setLocalProperty(phase, "sentinel")
-      sc.parallelize(Seq(1), 1).count()
-      assert(sentinelSeen.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener never saw the sentinel job")
-    } finally {
-      sc.setLocalProperty(phase, null)
-      sc.removeSparkListener(listener)
     }
-    assert(appendJobs.get() <= 3, s"append ran ${appendJobs.get()} jobs")
+    assert(appendJobs <= 3, s"append ran $appendJobs jobs")
     assert(parquetFiles == filesBefore + 1)
   }
 

@@ -176,33 +176,6 @@ class ProjectionServiceSpec extends SparkSpec {
     assert(ProjectionService.statistics(spark, dir, "js", evs).head().getLong(3) == 6L)
   }
 
-  /** Spark jobs `f` runs, counted by a listener on a local-property tag; a
-    * sentinel job submitted afterwards is delivered after all of them. */
-  private def jobsOf(f: => Any): Int = {
-    val tag = "graft.test.verb"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(tag))) match {
-          case Some("verb")     => jobs.incrementAndGet()
-          case Some("sentinel") => sentinelSeen.countDown()
-          case _                =>
-        }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(tag, "verb"); f
-      sc.setLocalProperty(tag, "sentinel"); sc.parallelize(Seq(1), 1).count()
-      assert(sentinelSeen.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener never saw the sentinel job")
-    } finally {
-      sc.setLocalProperty(tag, null)
-      sc.removeSparkListener(listener)
-    }
-    jobs.get()
-  }
-
   test("each serving verb reads the status table and the catalog once") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-svc-once").toString

@@ -291,10 +291,10 @@ class TwinStoreSpec extends SparkSpec {
   }
 
   test("parquet merge: TOMBSTONE-ONLY buckets floor-mark, GC, and never mask later inserts") {
-    // deletes of never-present keys: the buckets have no base and no
-    // upsert legs, so a compaction job has nothing to write — the
-    // `_floor` marker stands in for the base, retiring the dead
-    // tombstones (they can only mask OLDER upserts, and none exist)
+    // deletes of never-present keys: the buckets' deltas hold only
+    // delete rows, so each resolves EMPTY and its compaction writes no
+    // base — the `_floor` marker stands in for it, retiring the dead
+    // delete rows (they can only mask OLDER upserts, and none exist)
     val root = java.nio.file.Files.createTempDirectory("graft-tstonly").toString
     val st = new ParquetTwinStore(root, 4)
     for (i <- 0 until 2 * ParquetTwinStore.MaxDeltas + 1)
@@ -302,7 +302,7 @@ class TwinStoreSpec extends SparkSpec {
     st.merge("t", Seq("id"), kv(), Some(keys(10000L))): Unit // deferred GC
     val ovf = new java.io.File(s"$root/t.m/ovf")
     val live = Option(ovf.list()).fold(0)(_.count(f =>
-      f.startsWith("t") && f.drop(1).forall(_.isDigit)))
+      f.startsWith("d") && f.drop(1).forall(_.isDigit)))
     assert(live <= 2 * ParquetTwinStore.MaxDeltas + 2,
       s"dead tombstone files must GC, saw $live live")
     // a RESTARTED store must continue the sequence PAST the floor
@@ -437,6 +437,45 @@ class TwinStoreSpec extends SparkSpec {
     val eMerge = intercept[IllegalStateException](
       st.merge("t", Seq("id"), kv(2L -> "new"), None))
     assert(eMerge.getMessage.contains("flat-layout"))
+    // a bucket dir holding a `t<seq>` dir — the separate delete file
+    // kind of an earlier store version — must fail loudly too: resolving
+    // without it would resurrect the keys it deleted
+    val tombRoot = java.nio.file.Files.createTempDirectory("graft-tstomb").toString
+    val tomb = new java.io.File(s"$tombRoot/t.m/b0/t1")
+    tomb.mkdirs()
+    keys(1L).write.mode("overwrite").parquet(tomb.getPath)
+    val stT = new ParquetTwinStore(tombRoot)
+    val eLoadT = intercept[IllegalStateException](stT.load(spark, "t"))
+    assert(eLoadT.getMessage.contains("b0/t1"))
+    val eMergeT = intercept[IllegalStateException](
+      stT.merge("t", Seq("id"), kv(2L -> "new"), None))
+    assert(eMergeT.getMessage.contains("b0/t1"))
+  }
+
+  test("parquet merge: a warm merge with upserts AND delete keys stages one delta and no tombstone dir") {
+    val root = java.nio.file.Files.createTempDirectory("graft-tsone").toString
+    val st = new ParquetTwinStore(root, 4)
+    // the seed touches all four buckets, so the merge below is warm
+    st.merge("t", Seq("id"), kv((0L until 16L).map(i => i -> s"a$i"): _*), None)
+    def seqDirs(prefix: String): Set[String] =
+      ((0 until 4).map(k => s"b$k") :+ "ovf").flatMap { d =>
+        Option(new java.io.File(s"$root/t.m/$d").list()).toSeq.flatten
+          .filter(n => n.startsWith(prefix) && n.length > 1 && n.drop(1).forall(_.isDigit))
+          .map(n => s"$d/$n")
+      }.toSet
+    val before = seqDirs("d")
+    var cur: DataFrame = null
+    val jobs = jobsOf {
+      cur = st.merge("t", Seq("id"), kv(3L -> "B", 4L -> "C"), Some(keys(5L, 6L)))
+    }
+    val after = seqDirs("d")
+    assert(before.subsetOf(after) && after.size == before.size + 1,
+      s"one merge must add exactly one delta dir: $before -> $after")
+    assert(seqDirs("t").isEmpty, s"no tombstone dir may be written: ${seqDirs("t")}")
+    assert(st.coldWindowResolves == 0L)
+    assert(rows(cur) == (0L until 16L).filterNot(Set(3L, 4L, 5L, 6L)).map(i => i -> s"a$i").toSet
+      ++ Set(3L -> "B", 4L -> "C"))
+    assert(jobs == 5, s"a warm upsert+delete merge ran $jobs Spark jobs")
   }
 
   test("parquet merge: a torn (crashed) compaction base write never masks live deltas") {
