@@ -12,7 +12,7 @@ import org.json4s._
 import org.json4s.JsonDSL._
 import org.json4s.jackson.JsonMethods.{compact, parse, pretty, render}
 
-import graft.util.{MemoCost, ProcStat}
+import graft.util.{Memo, ProcStat}
 
 /**
  * The gate-query sweep: one cold pass and three timed passes over
@@ -171,7 +171,7 @@ object Bench {
     }.toMap
 
     // the cold pass also builds every per-(session, sf-dir) memo, which
-    // MemoCost itemizes; its counts are not judged
+    // Memo itemizes; its counts are not judged
     val steal0 = ProcStat.stealJiffies(); val jit0 = ProcStat.jitMs(); val gc0 = ProcStat.gcMs()
     val cold = pass()
     val coldJitS = (ProcStat.jitMs() - jit0) / 1e3; val coldGcS = (ProcStat.gcMs() - gc0) / 1e3
@@ -193,7 +193,7 @@ object Bench {
         rs.sortBy(_.cpu).apply(rs.size / 2).counts)
     }
     val total = med.values.map(_.wall).sum
-    val memo = MemoCost.snapshot
+    val memo = Memo.buildSeconds
     val summary =
       ("metric" -> "total") ~ ("value" -> r3(total)) ~ ("unit" -> "sec") ~ ("sf" -> sfDir) ~ ("cpus" -> cpus) ~
         ("n_queries" -> med.size) ~ ("n_errors" -> errors.size) ~ ("n_regressions" -> regressions.size) ~

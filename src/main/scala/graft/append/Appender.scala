@@ -44,13 +44,17 @@ final case class AppendResult(firstRevision: Long, lastRevision: Long,
  * normal Spark deployment: one ingest job per table; use a
  * transactional table format for multi-writer).
  *
- * Cost: an [[append]] (and [[delete]] / [[tombstone]]) reads every
- * precondition — the stream's revision, the global high-water position,
- * the tombstone flag and the (stream, uuid) conflicts — in ONE global
- * aggregate over the log (one scan, 2 Spark jobs under AQE), replays the
- * checks on the driver, and writes the rows as one parquet file (1 job).
- * At scale the state would come from the writer's own watermark and key
- * state (SURVEY.md §7.3), not a log scan.
+ * Cost: every write — [[append]], [[delete]], [[tombstone]] and
+ * [[batchAppend]] — is one call of the same commit path. It reads every
+ * precondition of every touched stream (revision, tombstone flag, "some
+ * proposed uuid is already here") and the global high-water position in
+ * ONE grouped aggregate over the log (one scan, 2 Spark jobs under AQE),
+ * replays the checks on the driver in call order, and writes the rows as
+ * one parquet file (1 job): 3 jobs per call, however many streams.
+ * Only a call that proposes a uuid already in a touched stream pays one
+ * more query, to name the conflicting pairs. At scale the state would
+ * come from the writer's own watermark and key state (SURVEY.md §7.3),
+ * not a log scan.
  */
 object Appender {
 
@@ -66,9 +70,6 @@ object Appender {
     if (!ok) throw WrongExpectedRevision(stream, expected, if (current == -1L) None else Some(current))
   }
 
-  private def validate(events: Seq[ProposedEvent]): Unit =
-    for (e <- events; k <- requiredMeta if !e.metadata.contains(k)) throw MissingMetadata(k)
-
   /**
    * Append a batch of proposed events to `stream` in the parquet log at
    * `logDir`, enforcing the expected-revision precondition. `nowNanos`
@@ -76,40 +77,8 @@ object Appender {
    */
   def append(spark: SparkSession, logDir: String, stream: String,
              events: Seq[ProposedEvent], expected: ExpectedRevision = AnyRevision,
-             nowNanos: Long = System.nanoTime()): AppendResult = {
-    validate(events)
-    appendInternal(spark, logDir, stream, events, expected, nowNanos)
-  }
-
-  /** Shared append path (markers skip user-metadata validation). Every
-    * precondition comes from one aggregate; the checks then replay in the
-    * reference's order — tombstone, expected revision, then the (stream,
-    * uuid) PK at insert time (streams.go, backend.go:316-329): a uuid
-    * twice in the call, then one already in the stream. The smallest such
-    * uuid is reported, so the error is deterministic. */
-  private def appendInternal(spark: SparkSession, logDir: String, stream: String,
-                             events: Seq[ProposedEvent], expected: ExpectedRevision,
-                             nowNanos: Long): AppendResult = {
-    require(events.nonEmpty, "empty append")
-    val inStream = col("stream") === stream
-    val state = readLog(spark, logDir)
-      .agg(
-        max(when(inStream, col("revision"))),
-        max(col("position")),
-        max(when(inStream && col("event_type") === TombstoneMarker, true)),
-        min(when(inStream && col("uuid").isin(events.map(_.uuid).distinct: _*), col("uuid"))))
-      .head()
-    if (!state.isNullAt(2)) throw StreamDeleted(stream)
-    val currentRev = if (state.isNullAt(0)) -1L else state.getLong(0)
-    val maxPos = if (state.isNullAt(1)) 0L else state.getLong(1)
-    checkRevision(stream, currentRev, expected)
-    events.groupBy(_.uuid).collect { case (u, es) if es.size > 1 => u }.minOption
-      .foreach(u => throw EventConflict(stream, u))
-    if (!state.isNullAt(3)) throw EventConflict(stream, state.getString(3))
-    write(spark, logDir, logRows(stream, events, currentRev, maxPos, nowNanos))
-    AppendResult(currentRev + 1L, currentRev + events.size,
-      maxPos + 1L, maxPos + events.size)
-  }
+             nowNanos: Long = System.nanoTime()): AppendResult =
+    batchAppend(spark, logDir, Seq((stream, events, expected)), nowNanos).head._2
 
   private type LogRow = (String, String, String, String, Map[String, String], Option[String], Long, Long)
 
@@ -156,7 +125,7 @@ object Appender {
    */
   def delete(spark: SparkSession, logDir: String, stream: String,
              expected: ExpectedRevision = AnyRevision, nowNanos: Long = System.nanoTime()): AppendResult =
-    appendInternal(spark, logDir, stream, Seq(marker(s"del-$nowNanos", DeletedMarker)), expected, nowNanos)
+    append(spark, logDir, stream, Seq(marker(s"del-$nowNanos", DeletedMarker)), expected, nowNanos)
 
   /**
    * Hard delete: appends a `$tombstoned` marker; any later append to the
@@ -164,70 +133,79 @@ object Appender {
    */
   def tombstone(spark: SparkSession, logDir: String, stream: String,
                 expected: ExpectedRevision = AnyRevision, nowNanos: Long = System.nanoTime()): AppendResult =
-    appendInternal(spark, logDir, stream, Seq(marker(s"tomb-$nowNanos", TombstoneMarker)), expected, nowNanos)
+    append(spark, logDir, stream, Seq(marker(s"tomb-$nowNanos", TombstoneMarker)), expected, nowNanos)
 
   /**
-   * Batch append: one call, many streams, one global position sequence
-   * (each stream's expected-revision precondition checked up front; all
-   * rows written together — single-writer contract as [[append]]).
+   * Batch append, the one commit path: one call, many streams, one global
+   * position sequence, all rows written together as one parquet file
+   * (single-writer contract as [[append]]).
+   *
+   * One grouped aggregate reads the preconditions of all touched streams
+   * (untouched streams collapse into one null group that still feeds the
+   * position max), so a many-stream micro-batch costs the same 3 Spark
+   * jobs as one append. Its uuid flag tests each log row against the
+   * proposed (stream, uuid) pairs, broadcast once as a set (a broadcast
+   * variable runs no job). Its buffers must stay fixed-width: a
+   * `collect_set` of the conflicting uuids turns the plan into a
+   * non-codegen ObjectHashAggregate, so the pairs already in the log are
+   * read by a second query, and only when a stream's flag says one is there.
+   *
+   * The checks replay on the driver batch by batch, in call order, in the
+   * reference's order (streams.go, backend.go:316-329): tombstone;
+   * expected revision against the stream's running revision (a stream in
+   * two batches of one call continues its dense sequence); then the
+   * (stream, uuid) PK — a uuid repeated within the call so far, then one
+   * already in the log. The smallest offending uuid is reported, so the
+   * error is deterministic.
    */
   def batchAppend(spark: SparkSession, logDir: String,
                   batches: Seq[(String, Seq[ProposedEvent], ExpectedRevision)],
                   nowNanos: Long = System.nanoTime()): Seq[(String, AppendResult)] = {
-    require(batches.nonEmpty, "empty batch")
-    batches.foreach { case (_, events, _) => validate(events) }
-    // (stream, uuid) must be unique across the whole call, like one tx
-    batches.flatMap { case (s, es, _) => es.map(e => (s, e.uuid)) }
-      .groupBy(identity).collectFirst { case ((s, u), xs) if xs.size > 1 =>
-        throw EventConflict(s, u)
-      }
+    require(batches.nonEmpty && batches.forall(_._2.nonEmpty), "empty append")
+    for ((_, events, _) <- batches; e <- events; k <- requiredMeta if !e.metadata.contains(k))
+      throw MissingMetadata(k)
     val log = readLog(spark, logDir)
-    import spark.implicits._
-    // Precondition state for ALL touched streams in TWO jobs (not three
-    // per stream): one grouped aggregation for global max position +
-    // per-touched-stream current revision + tombstone flag (untouched
-    // streams collapse into one null group that still feeds the position
-    // max), and one broadcast join for (stream, uuid) conflicts. The
-    // checks themselves then replay driver-side in batch order, so which
-    // precondition throws first is exactly the sequential semantics —
-    // but a 1,500-stream micro-batch costs 2 Spark jobs, not 4,500 (the
-    // ingest probe's single-sink numbers were unusable before this).
-    val touched = batches.map(_._1).distinct
-    val aggRows = log
-      .groupBy(when(col("stream").isin(touched: _*), col("stream")).as("s"))
-      .agg(max(col("revision")).as("rev"), max(col("position")).as("pos"),
-        max(when(col("event_type") === TombstoneMarker, 1L).otherwise(0L)).as("tomb"))
-      .collect()
-    var maxPos = if (aggRows.isEmpty) 0L else aggRows.map(_.getLong(2)).max
-    val streamInfo: Map[String, (Long, Boolean)] = aggRows
-      .filter(!_.isNullAt(0))
-      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(3) == 1L)).toMap
-    val proposedPairs = batches
-      .flatMap { case (s, es, _) => es.map(e => (s, e.uuid)) }.distinct
-    val conflictPairs: Set[(String, String)] = log
-      .join(broadcast(proposedPairs.toDF("stream", "uuid")), Seq("stream", "uuid"))
-      .select("stream", "uuid").collect()
-      .map(r => (r.getString(0), r.getString(1))).toSet
-    val results = Seq.newBuilder[(String, AppendResult)]
-    val rows = Seq.newBuilder[LogRow]
-    // running per-stream revision across the call: a stream appearing in
-    // two batches of one call continues its dense sequence (one tx)
-    val revs = scala.collection.mutable.Map.empty[String, Long]
-    batches.foreach { case (stream, events, expected) =>
-      if (streamInfo.get(stream).exists(_._2)) throw StreamDeleted(stream)
-      val currentRev = revs.getOrElse(stream, streamInfo.get(stream).fold(-1L)(_._1))
-      checkRevision(stream, currentRev, expected)
-      events.collectFirst {
-        case e if conflictPairs((stream, e.uuid)) => throw EventConflict(stream, e.uuid)
+    // A broadcast set, not an `isin` literal list: a throughput-tier
+    // trigger proposes ~500k pairs, and as plan literals they made such a
+    // trigger several times slower.
+    val proposed = spark.sparkContext.broadcast(
+      batches.flatMap { case (s, es, _) => es.map(e => (s, e.uuid)) }.toSet)
+    val isProposed = udf((s: String, u: String) => proposed.value((s, u)))
+    try {
+      val touched = col("stream").isin(batches.map(_._1).distinct: _*)
+      val state = log
+        .groupBy(when(touched, col("stream")))
+        .agg(max(col("revision")), max(col("position")), max(col("event_type") === TombstoneMarker),
+          max(when(touched, isProposed(col("stream"), col("uuid")))))
+        .collect()
+      val byStream = state.filterNot(_.isNullAt(0)).map(r => r.getString(0) -> r).toMap
+      val flagged = byStream.collect { case (s, r) if r.get(4) == true => s }.toSet
+      lazy val inLog: Set[(String, String)] = log
+        .filter(col("stream").isin(flagged.toSeq: _*) && isProposed(col("stream"), col("uuid")))
+        .select("stream", "uuid").collect().map(r => (r.getString(0), r.getString(1))).toSet
+      var maxPos = state.map(_.getLong(2)).maxOption.getOrElse(0L)
+      val results = Seq.newBuilder[(String, AppendResult)]
+      val rows = Seq.newBuilder[LogRow]
+      val revs = scala.collection.mutable.Map.empty[String, Long]
+      val seen = scala.collection.mutable.Set.empty[(String, String)]
+      for ((stream, events, expected) <- batches) {
+        if (byStream.get(stream).exists(_.get(3) == true)) throw StreamDeleted(stream)
+        val currentRev = revs.getOrElse(stream, byStream.get(stream).fold(-1L)(_.getLong(1)))
+        checkRevision(stream, currentRev, expected)
+        val uuids = events.map(_.uuid)
+        (uuids.diff(uuids.distinct) ++ uuids.filter(u => seen((stream, u)))).minOption
+          .orElse(uuids.filter(u => flagged(stream) && inLog((stream, u))).minOption)
+          .foreach(u => throw EventConflict(stream, u))
+        seen ++= uuids.map(stream -> _)
+        rows ++= logRows(stream, events, currentRev, maxPos, nowNanos)
+        results += stream -> AppendResult(currentRev + 1L, currentRev + events.size,
+          maxPos + 1L, maxPos + events.size)
+        revs(stream) = currentRev + events.size
+        maxPos += events.size
       }
-      rows ++= logRows(stream, events, currentRev, maxPos, nowNanos)
-      results += stream -> AppendResult(currentRev + 1L, currentRev + events.size,
-        maxPos + 1L, maxPos + events.size)
-      revs(stream) = currentRev + events.size
-      maxPos += events.size
-    }
-    write(spark, logDir, rows.result())
-    results.result()
+      write(spark, logDir, rows.result())
+      results.result()
+    } finally proposed.destroy()
   }
 
   /**

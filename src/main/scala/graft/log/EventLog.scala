@@ -32,34 +32,44 @@ object EventLog {
 
   /** Execute a bounded read. Result rows are sorted in read order. */
   def read(events: DataFrame, opts: ReadOptions): DataFrame = {
-    // Field the read orders and ranges over: `revision` for single-stream
-    // reads, `position` for $all (ref backend.go:118-152 vs 154-194).
-    val (field, streamPred) = opts.selector match {
-      case OneStream(s) => (col("revision"), Some(col("stream") === lit(s)))
-      case AllStreams   => (col("position"), None)
-    }
-
+    val field = orderField(opts.selector)
     // Direction × origin semantics, incl. the degenerate boundary reads the
     // reference pins in tests (`streams_test.go:235-303`):
     //   Forwards  from End   -> the single LAST event   (backend.go:135-143)
     //   Backwards from Start -> the single FIRST event  (backend.go:164-171)
-    val (rangePred, sortCol, limit1) = (opts.direction, opts.from) match {
-      case (Forwards, FromStart) => (None, field.asc, false)
-      case (Forwards, From(v))   => (Some(field >= v), field.asc, false)
-      case (Forwards, FromEnd)   => (None, field.desc, true)
-      case (Backwards, FromEnd)  => (None, field.desc, false)
-      case (Backwards, From(v))  => (Some(field <= v), field.desc, false)
-      case (Backwards, FromStart) => (None, field.asc, true)
+    val (sortCol, limit1) = (opts.direction, opts.from) match {
+      case (Forwards, FromEnd)    => (field.desc, true)
+      case (Backwards, FromStart) => (field.asc, true)
+      case (Forwards, _)          => (field.asc, false)
+      case (Backwards, _)         => (field.desc, false)
     }
-
-    val filterPred = opts.filter.map(compileFilter)
-
-    val predicates: Seq[Column] = streamPred.toSeq ++ rangePred.toSeq ++ filterPred.toSeq
-    val filtered = predicates.foldLeft(events)((df, p) => df.filter(p))
-    val sorted = filtered.orderBy(sortCol)
-
+    val sorted = predicates(opts).foldLeft(events)((df, p) => df.filter(p)).orderBy(sortCol)
     if (limit1) sorted.limit(1)
     else opts.count.fold(sorted)(n => sorted.limit(n.toInt))
+  }
+
+  /** Field a read orders and ranges over: `revision` for single-stream
+    * reads, `position` for $all (ref backend.go:118-152 vs 154-194). */
+  private def orderField(selector: StreamSelector): Column = selector match {
+    case OneStream(_) => col("revision")
+    case AllStreams   => col("position")
+  }
+
+  /** The read's pushable predicates, in plan order: the stream, the
+    * range bound from `opts.from` in `opts.direction`, the server-side
+    * filter. Shared by batch reads and subscriptions. */
+  def predicates(opts: ReadOptions): Seq[Column] = {
+    val streamPred = opts.selector match {
+      case OneStream(s) => Some(col("stream") === lit(s))
+      case AllStreams   => None
+    }
+    val field = orderField(opts.selector)
+    val rangePred = (opts.direction, opts.from) match {
+      case (Forwards, From(v))  => Some(field >= v)
+      case (Backwards, From(v)) => Some(field <= v)
+      case _                    => None
+    }
+    streamPred.toSeq ++ rangePred ++ opts.filter.map(compileFilter)
   }
 
   /**

@@ -58,23 +58,20 @@ object Fixture {
   // In a real deployment `revision` is a stored column assigned at ingest
   // (graft.append) — derive-once-and-persist stands in for that here, so a
   // query batch doesn't pay the per-stream window shuffle per query.
-  private val cache = scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   /** Canonical event log with `revision` (one shuffle by stream, memoized
     * per session+dir and persisted). */
   def events(spark: SparkSession, sfDir: String): DataFrame =
-    cache.getOrElseUpdate((spark, sfDir),
-      graft.util.MemoCost.timed("Fixture.events") {
-        val w = Window.partitionBy("stream").orderBy("position")
-        val df = eventsNoRevision(spark, sfDir)
-          .withColumn("revision", row_number().over(w).cast("long") - 1L)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        // materialize eagerly so the build cost lands HERE (in the memo
-        // ledger), not inside whichever query's first action touches the
-        // lazy persist
-        df.count()
-        df
-      })
+    graft.util.Memo(spark, sfDir, "Fixture.events") {
+      val w = Window.partitionBy("stream").orderBy("position")
+      val df = eventsNoRevision(spark, sfDir)
+        .withColumn("revision", row_number().over(w).cast("long") - 1L)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // materialize eagerly so the build cost lands HERE (in the memo
+      // ledger), not inside whichever query's first action touches the
+      // lazy persist
+      df.count()
+      df
+    }
 
   /** Projection of the canonical columns used by read-path query outputs —
     * a stable column list keeps the DuckDB oracle schema-aligned. */

@@ -38,15 +38,12 @@ object LogQueries {
 
   // hash-bucketed physical copy of the canonical log, written once per
   // (session, sf-dir) — the stored layout a deployment would maintain
-  private val plogCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
   private def partitionedDir(s: SparkSession, dir: String): String =
-    plogCache.getOrElseUpdate((s, dir),
-      graft.util.MemoCost.timed("LogQueries.partitionedLog") {
-        val d = graft.util.TempRoots.create("graft-plog")
-        graft.log.PartitionedLog.write(Fixture.events(s, dir), d)
-        d
-      })
+    graft.util.Memo(s, dir, "LogQueries.partitionedLog") {
+      val d = graft.util.TempRoots.create("graft-plog")
+      graft.log.PartitionedLog.write(Fixture.events(s, dir), d)
+      d
+    }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // S1+F3+O1+O2: $all forwards from a position, bounded

@@ -41,9 +41,8 @@ object ProjectionQueries {
     * DIFFERENT keying (per-stream, per-stream clicks, global), created
     * once per (session, fixture dir) — the catalog is a stored artifact
     * in a real deployment. */
-  private val svcCache = scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
   private def svcDir(s: SparkSession, dir: String): String =
-    svcCache.getOrElseUpdate((s, dir), {
+    graft.util.Memo(s, dir, "ProjectionQueries.svc") {
       val d = graft.util.TempRoots.create("graft-svc-gate")
       ProjectionService.create(s, d, "per_stream",
         """{"name":"per_stream","from":["$all"],"partitionBy":"stream",
@@ -58,13 +57,12 @@ object ProjectionQueries {
           |"state":["n"],"when":{"$any":[{"op":"inc","field":"n"}]},
           |"outputState":true}""".stripMargin, nowNanos = 3L)
       d
-    })
+    }
 
   /** A service dir holding one stored RAW-JS projection, created once per
     * (session, fixture dir) — the stored-source artifact, like svcDir. */
-  private val jsSvcCache = scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
   private def jsSvcDir(s: SparkSession, dir: String): String =
-    jsSvcCache.getOrElseUpdate((s, dir), {
+    graft.util.Memo(s, dir, "ProjectionQueries.jsSvc") {
       val d = graft.util.TempRoots.create("graft-js-svc")
       ProjectionService.create(s, d, "clicks-js",
         """
@@ -80,7 +78,7 @@ object ProjectionQueries {
           .outputState()
         """, nowNanos = 1L)
       d
-    })
+    }
 
   /** Stage the fixture log the way the APPEND path produces it: 8
     * position-range segments written SEQUENTIALLY with strictly
@@ -95,15 +93,13 @@ object ProjectionQueries {
     * pump gates — the replays read it, never mutate it, so one staging
     * serves both memos (the second pump run's cold cost is the replay
     * itself, not a duplicate 8-job staging). */
-  private val stagedLogCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
   private def stagedLogDir(s: SparkSession, dir: String): String =
-    stagedLogCache.getOrElseUpdate((s, dir), {
+    graft.util.Memo(s, dir, "ProjectionQueries.stagedLog") {
       val root = graft.util.TempRoots.create("graft-pump-log")
       val logDir = s"$root/log"
       stageLogSequential(s, dir, logDir)
       logDir
-    })
+    }
 
   private def stageLogSequential(s: SparkSession, dir: String, logDir: String,
                                  segs: Int = 8): Unit = {
@@ -148,26 +144,23 @@ object ProjectionQueries {
     * a batch stand-in. The COUNTING state here is commutative; the
     * order of the replay itself is pinned by the ordered twin
     * (`proj_pump_replay_ordered`). */
-  private val pumpCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
   private def pumpSinkDir(s: SparkSession, dir: String): String =
-    pumpCache.getOrElseUpdate((s, dir),
-      graft.util.MemoCost.timed("ProjectionQueries.pumpReplay") {
-        implicit val enc: org.apache.spark.sql.Encoder[PumpState] =
-          org.apache.spark.sql.Encoders.product[PumpState]
-        val root = graft.util.TempRoots.create("graft-pump-gate")
-        val logDir = stagedLogDir(s, dir)
-        val p = Projection.named("pump-replay").fromAll().foreachStream()
-          .when[PumpState](PumpState(0L, 0L), Map(
-            "click" -> ((st: PumpState, _: ProjEvent) => PumpState(st.n + 1L, st.clicks + 1L)),
-            "$any" -> ((st: PumpState, _: ProjEvent) => PumpState(st.n + 1L, st.clicks))))
-          .outputState().build
-        val q = graft.streaming.ProjectionPump.start(
-          s, p, logDir, root, s"$root/ckpt", availableNow = true,
-          sourceOptions = Map("maxFilesPerTrigger" -> "2"))
-        q.awaitTermination()
-        s"$root/${p.resultStream}"
-      })
+    graft.util.Memo(s, dir, "ProjectionQueries.pumpReplay") {
+      implicit val enc: org.apache.spark.sql.Encoder[PumpState] =
+        org.apache.spark.sql.Encoders.product[PumpState]
+      val root = graft.util.TempRoots.create("graft-pump-gate")
+      val logDir = stagedLogDir(s, dir)
+      val p = Projection.named("pump-replay").fromAll().foreachStream()
+        .when[PumpState](PumpState(0L, 0L), Map(
+          "click" -> ((st: PumpState, _: ProjEvent) => PumpState(st.n + 1L, st.clicks + 1L)),
+          "$any" -> ((st: PumpState, _: ProjEvent) => PumpState(st.n + 1L, st.clicks))))
+        .outputState().build
+      val q = graft.streaming.ProjectionPump.start(
+        s, p, logDir, root, s"$root/ckpt", availableNow = true,
+        sourceOptions = Map("maxFilesPerTrigger" -> "2"))
+      q.awaitTermination()
+      s"$root/${p.resultStream}"
+    }
 
   /** The ORDER-SENSITIVE twin of [[pumpSinkDir]] (r15 verdict item 3:
     * `proj_pump_replay`'s counting state is commutative, so that gate
@@ -180,30 +173,27 @@ object ProjectionQueries {
     * subscription, so the strict per-stream position order of the
     * reference's fold (`streams/streams.go:264-309`) is pinned under
     * the driver's hash, not just by specs. */
-  private val pumpOrderedCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
   private def pumpOrderedSinkDir(s: SparkSession, dir: String): String =
-    pumpOrderedCache.getOrElseUpdate((s, dir),
-      graft.util.MemoCost.timed("ProjectionQueries.pumpReplayOrdered") {
-        implicit val enc: org.apache.spark.sql.Encoder[PumpPathState] =
-          org.apache.spark.sql.Encoders.product[PumpPathState]
-        val root = graft.util.TempRoots.create("graft-pump-gate-ord")
-        val logDir = stagedLogDir(s, dir)
-        val p = Projection.named("pump-replay-ordered").fromAll().foreachStream()
-          .when[PumpPathState](PumpPathState(0L, "", ""), Map(
-            "$any" -> ((st: PumpPathState, e: ProjEvent) => PumpPathState(
-              st.n + 1L,
-              if (st.n >= 10L) st.path
-              else if (st.n == 0L) e.eventType
-              else st.path + "->" + e.eventType,
-              e.eventType))))
-          .outputState().build
-        val q = graft.streaming.ProjectionPump.start(
-          s, p, logDir, root, s"$root/ckpt", availableNow = true,
-          sourceOptions = Map("maxFilesPerTrigger" -> "2"))
-        q.awaitTermination()
-        s"$root/${p.resultStream}"
-      })
+    graft.util.Memo(s, dir, "ProjectionQueries.pumpReplayOrdered") {
+      implicit val enc: org.apache.spark.sql.Encoder[PumpPathState] =
+        org.apache.spark.sql.Encoders.product[PumpPathState]
+      val root = graft.util.TempRoots.create("graft-pump-gate-ord")
+      val logDir = stagedLogDir(s, dir)
+      val p = Projection.named("pump-replay-ordered").fromAll().foreachStream()
+        .when[PumpPathState](PumpPathState(0L, "", ""), Map(
+          "$any" -> ((st: PumpPathState, e: ProjEvent) => PumpPathState(
+            st.n + 1L,
+            if (st.n >= 10L) st.path
+            else if (st.n == 0L) e.eventType
+            else st.path + "->" + e.eventType,
+            e.eventType))))
+        .outputState().build
+      val q = graft.streaming.ProjectionPump.start(
+        s, p, logDir, root, s"$root/ckpt", availableNow = true,
+        sourceOptions = Map("maxFilesPerTrigger" -> "2"))
+      q.awaitTermination()
+      s"$root/${p.resultStream}"
+    }
 
   /** The HYBRID catch-up's result sink ([[graft.streaming.ProjectionPump
     * .startHybrid]] — the at-scale path: the backlog folds as ONE batch
@@ -214,55 +204,52 @@ object ProjectionQueries {
     * with a fresh mtime after the query starts, so the batch→stream
     * handoff crosses the same order-bearing state the ordered gate
     * pins. */
-  private val pumpHybridCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
   private def pumpHybridSinkDir(s: SparkSession, dir: String): String =
-    pumpHybridCache.getOrElseUpdate((s, dir),
-      graft.util.MemoCost.timed("ProjectionQueries.pumpHybrid") {
-        implicit val enc: org.apache.spark.sql.Encoder[PumpPathState] =
-          org.apache.spark.sql.Encoders.product[PumpPathState]
-        val root = graft.util.TempRoots.create("graft-pump-hybrid")
-        val logDir = s"$root/log"
-        // 4 segments are enough here: 3 are the batch-folded backlog, 1
-        // re-enters as the live tail — the per-trigger file-bounding
-        // property is already pinned by the two replay gates, and the
-        // subscription still lists (and footer-prunes) the backlog
-        // files, so fewer segments keep the memo's cost on the
-        // mechanism, not on empty catch-up triggers
-        stageLogSequential(s, dir, logDir, segs = 4)
-        val hold = new java.io.File(s"$root/hold")
-        hold.mkdirs(): Unit
-        val tailSegs = Seq("seg-0003.parquet")
-        for (n <- tailSegs) {
-          val f = new java.io.File(logDir, n)
-          if (f.isFile) require(f.renameTo(new java.io.File(hold, n)),
-            s"failed to hold back tail segment $n")
-        }
-        val p = Projection.named("pump-hybrid").fromAll().foreachStream()
-          .when[PumpPathState](PumpPathState(0L, "", ""), Map(
-            "$any" -> ((st: PumpPathState, e: ProjEvent) => PumpPathState(
-              st.n + 1L,
-              if (st.n >= 10L) st.path
-              else if (st.n == 0L) e.eventType
-              else st.path + "->" + e.eventType,
-              e.eventType))))
-          .outputState().build
-        val q = graft.streaming.ProjectionPump.startHybrid(
-          s, p, logDir, root, s"$root/ckpt")
-        try {
-          val t0 = System.currentTimeMillis()
-          for ((n, i) <- tailSegs.zipWithIndex) {
-            val src = new java.io.File(hold, n)
-            if (src.isFile) {
-              val dst = new java.io.File(logDir, n)
-              require(src.renameTo(dst), s"failed to release tail segment $n")
-              dst.setLastModified(t0 + i * 1000L): Unit
-            }
+    graft.util.Memo(s, dir, "ProjectionQueries.pumpHybrid") {
+      implicit val enc: org.apache.spark.sql.Encoder[PumpPathState] =
+        org.apache.spark.sql.Encoders.product[PumpPathState]
+      val root = graft.util.TempRoots.create("graft-pump-hybrid")
+      val logDir = s"$root/log"
+      // 4 segments are enough here: 3 are the batch-folded backlog, 1
+      // re-enters as the live tail — the per-trigger file-bounding
+      // property is already pinned by the two replay gates, and the
+      // subscription still lists (and footer-prunes) the backlog
+      // files, so fewer segments keep the memo's cost on the
+      // mechanism, not on empty catch-up triggers
+      stageLogSequential(s, dir, logDir, segs = 4)
+      val hold = new java.io.File(s"$root/hold")
+      hold.mkdirs(): Unit
+      val tailSegs = Seq("seg-0003.parquet")
+      for (n <- tailSegs) {
+        val f = new java.io.File(logDir, n)
+        if (f.isFile) require(f.renameTo(new java.io.File(hold, n)),
+          s"failed to hold back tail segment $n")
+      }
+      val p = Projection.named("pump-hybrid").fromAll().foreachStream()
+        .when[PumpPathState](PumpPathState(0L, "", ""), Map(
+          "$any" -> ((st: PumpPathState, e: ProjEvent) => PumpPathState(
+            st.n + 1L,
+            if (st.n >= 10L) st.path
+            else if (st.n == 0L) e.eventType
+            else st.path + "->" + e.eventType,
+            e.eventType))))
+        .outputState().build
+      val q = graft.streaming.ProjectionPump.startHybrid(
+        s, p, logDir, root, s"$root/ckpt")
+      try {
+        val t0 = System.currentTimeMillis()
+        for ((n, i) <- tailSegs.zipWithIndex) {
+          val src = new java.io.File(hold, n)
+          if (src.isFile) {
+            val dst = new java.io.File(logDir, n)
+            require(src.renameTo(dst), s"failed to release tail segment $n")
+            dst.setLastModified(t0 + i * 1000L): Unit
           }
-          q.processAllAvailable()
-        } finally q.stop()
-        s"$root/${p.resultStream}"
-      })
+        }
+        q.processAllAvailable()
+      } finally q.stop()
+      s"$root/${p.resultStream}"
+    }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // T1+T2+A6+§2.10 UNDER THE ORACLE: a catch-up subscription replay

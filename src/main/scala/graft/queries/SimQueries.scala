@@ -28,40 +28,27 @@ object SimQueries {
 
   // sampled-codebook IVF index, built once per (session, dir) — the index
   // is a stored artifact in a real deployment
-  private val ivfCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Ivf.IvfIndex]
   private def ivf(s: SparkSession, dir: String): Ivf.IvfIndex =
-    ivfCache.getOrElseUpdate((s, dir),
-      graft.util.MemoCost.timed("SimQueries.ivf")(
-        Ivf.buildSampled(Tables.emb(s, dir), NLIST)))
+    graft.util.Memo(s, dir, "SimQueries.ivf")(Ivf.buildSampled(Tables.emb(s, dir), NLIST))
 
   // sampled-codebook PQ code table, built once per (session, dir)
-  private val pqCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Pq.PqIndex]
   private def pq(s: SparkSession, dir: String): Pq.PqIndex =
-    pqCache.getOrElseUpdate((s, dir),
-      graft.util.MemoCost.timed("SimQueries.pq")(
-        Pq.buildSampled(Tables.emb(s, dir))))
+    graft.util.Memo(s, dir, "SimQueries.pq")(Pq.buildSampled(Tables.emb(s, dir)))
 
   // SQ8 range table (d-row driver-side stats) + code table, built once
   // per (session, dir) — stored artifacts in a real deployment
-  private val sqCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (graft.sim.Sq.SqIndex, DataFrame)]
   private def sq(s: SparkSession, dir: String): (graft.sim.Sq.SqIndex, DataFrame) =
-    sqCache.getOrElseUpdate((s, dir), graft.util.MemoCost.timed("SimQueries.sq") {
+    graft.util.Memo(s, dir, "SimQueries.sq") {
       val idx = graft.sim.Sq.build(Tables.emb(s, dir), DIM)
       (idx, graft.sim.Sq.codes(Tables.emb(s, dir), idx).localCheckpoint())
-    })
+    }
 
   // kNN edge table (top-3 LSH-candidate neighbors of every vector),
   // built once per (session, dir) — shared by the graph dump and the
   // seed-expansion BFS
-  private val knnCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
   private def knn(s: SparkSession, dir: String): DataFrame =
-    knnCache.getOrElseUpdate((s, dir),
-      graft.util.MemoCost.timed("SimQueries.knn")(
-        Similarity.knnGraphFromNormed(Tables.normedEmb(s, dir), 3).localCheckpoint()))
+    graft.util.Memo(s, dir, "SimQueries.knn")(
+      Similarity.knnGraphFromNormed(Tables.normedEmb(s, dir), 3).localCheckpoint())
 
   /** The kNN graph as canonical UNDIRECTED pairs (a < b) plus its
     * doubled adjacency — shared by the two link predictors so their

@@ -20,12 +20,8 @@ import graft.sim.Similarity
  */
 object Tables {
 
-  private val cache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
-
   private def memo(s: SparkSession, dir: String, key: String)(mk: => DataFrame): DataFrame =
-    cache.getOrElseUpdate((s, dir, key),
-      graft.util.MemoCost.timed(s"Tables.$key")(mk))
+    graft.util.Memo(s, dir, s"Tables.$key")(mk)
 
   def docs(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/documents.parquet")

@@ -64,11 +64,12 @@ object Subscriptions {
   def subscribe(spark: SparkSession, logDir: String, opts: ReadOptions,
                 sourceOptions: Map[String, String] = Map.empty): DataFrame = {
     val src = spark.readStream.schema(eventSchema).options(sourceOptions).parquet(logDir)
-    val resolved = opts.from match {
-      case FromEnd => opts.copy(from = From(endOffset(spark, logDir, opts.selector)))
-      case _       => opts
+    val from = opts.from match {
+      case FromEnd => From(endOffset(spark, logDir, opts.selector))
+      case f       => f
     }
-    filtered(src, resolved)
+    EventLog.predicates(opts.copy(direction = Forwards, from = from))
+      .foldLeft(src)((df, p) => df.filter(p))
   }
 
   /**
@@ -88,27 +89,5 @@ object Subscriptions {
         val r = log.agg(max(col("position"))).head()
         (if (r.isNullAt(0)) 0L else r.getLong(0)) + 1L
     }
-  }
-
-  /** Apply subscription-side filters (shared with in-memory test sources). */
-  def filtered(src: DataFrame, opts: ReadOptions): DataFrame = {
-    val streamPred = opts.selector match {
-      case OneStream(s) => Some(col("stream") === lit(s))
-      case AllStreams   => None
-    }
-    // stream subscriptions track revision, $all subscriptions track
-    // position (streams.go:287-309)
-    val fromPred = opts.from match {
-      case From(v) =>
-        opts.selector match {
-          case OneStream(_) => Some(col("revision") >= v)
-          case AllStreams   => Some(col("position") >= v)
-        }
-      case FromStart => None
-      case FromEnd   => None // live-only subscription: caller starts from current end offsets
-    }
-    val filterPred = opts.filter.map(EventLog.compileFilter)
-    (streamPred.toSeq ++ fromPred.toSeq ++ filterPred.toSeq)
-      .foldLeft(src)((df, p) => df.filter(p))
   }
 }

@@ -24,8 +24,9 @@ import org.apache.spark.sql.functions._
  *     between them),
  *
  * across three regimes: small triggers (latency-bound: per-trigger fixed
- * cost — 2 precondition jobs + 1 collect + 1 parquet commit — is
- * identical for every sink, so bucketing can't beat ~1x there), large
+ * cost — 4 Spark jobs: the micro-batch collect, then `batchAppend`'s
+ * 2-job precondition aggregate and 1 parquet commit — is identical for
+ * every sink, so bucketing can't beat ~1x there), large
  * triggers, and a 10x-volume large-trigger point (throughput-bound: the
  * per-row work — driver-side sequential fold, parquet encode, log scans
  * — splits nBuckets ways and runs concurrently; this is the shape a

@@ -3,7 +3,8 @@ package graft
 import graft.Bench.{Base, Counts, Run}
 
 /** The bench gate: the pure judge over (baseline, per-query passes), the
-  * listener's counts on a real gate query, and the session factory. */
+  * listener's counts on a real gate query, the session factory, and the
+  * memo ledger the bench reports as `memo_build_s`. */
 class BenchGateSpec extends SparkSpec {
 
   private def run(jobs: Int, stages: Int, cpu: Double = 1.0): Run =
@@ -102,5 +103,22 @@ class BenchGateSpec extends SparkSpec {
     assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
     val n = spark.sql("SELECT graft_intersect_size(array(1L, 2L, 3L), array(2L, 3L, 4L))").head().getInt(0)
     assert(n == 2)
+  }
+
+  test("a memo builds once, and a nested build's seconds are not counted in the outer one") {
+    import graft.util.Memo
+    var builds = 0
+    def outer(): String = Memo(spark, "memo-spec-dir", "BenchGateSpec.outer") {
+      builds += 1
+      Memo(spark, "memo-spec-dir", "BenchGateSpec.inner") { Thread.sleep(400); "inner" } + "+outer"
+    }
+    val t0 = System.nanoTime()
+    assert(outer() == "inner+outer")
+    val wall = (System.nanoTime() - t0) / 1e9
+    assert(outer() == "inner+outer")
+    assert(builds == 1)
+    val secs = Memo.buildSeconds
+    val (inner, own) = (secs("BenchGateSpec.inner"), secs("BenchGateSpec.outer"))
+    assert(inner >= 0.4 && own < inner && inner + own <= wall, secs)
   }
 }

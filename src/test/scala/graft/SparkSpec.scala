@@ -39,7 +39,7 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   lazy val session: SparkSession =
-    // managed (bucketed) test tables land in a throwaway warehouse
+    // managed test tables land in a throwaway warehouse
     GraftSession.local(4, "spark.sql.warehouse.dir" ->
       java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
 }

@@ -133,6 +133,20 @@ class AppenderSpec extends SparkSpec {
     assert(Appender.readLog(spark, dir).count() == inLog.size)
   }
 
+  test("a call that repeats two different uuids reports the smallest one") {
+    val dir = freshLog()
+    def ev(u: String) = ProposedEvent(u, "t", "{}", Map("type" -> "t", "content-type" -> "ct"))
+    val c1 = intercept[EventConflict](Appender.append(spark, dir, "s", Seq("q", "k", "q", "k").map(ev)))
+    assert(c1.stream == "s" && c1.uuid == "k")
+    val repeated = Seq("n", "j", "g", "d", "b")
+    val c2 = intercept[EventConflict](Appender.batchAppend(spark, dir, Seq(
+      ("s", repeated.map(ev), AnyRevision),
+      ("t", Seq("a").map(ev), AnyRevision),
+      ("s", ("z" +: repeated.reverse).map(ev), AnyRevision))))
+    assert(c2.stream == "s" && c2.uuid == "b")
+    assert(Appender.readLog(spark, dir).count() == 0)
+  }
+
   test("custom_metadata is persisted and round-trips (backend.go:43)") {
     val dir = freshLog()
     val e = ProposedEvent("cm-1", "t", "{}",

@@ -91,4 +91,49 @@ class LifecycleSpec extends SparkSpec {
       ("fresh", events(1, "f2"), NoStream)
     )))
   }
+
+  test("batchAppend over 3 streams on a non-empty log runs at most 3 Spark jobs and adds one parquet file") {
+    val dir = Files.createTempDirectory("graft-life5").toString
+    Appender.batchAppend(spark, dir, Seq(("a", events(4, "a0"), NoStream), ("b", events(2, "b0"), NoStream)))
+    def parquetFiles = new java.io.File(dir).listFiles().count(_.getName.endsWith(".parquet"))
+    val filesBefore = parquetFiles
+    val jobs = jobsOf {
+      val r = Appender.batchAppend(spark, dir, Seq(
+        ("a", events(2, "a1"), ExactRevision(3)),
+        ("b", events(1, "b1"), ExactRevision(1)),
+        ("c", events(3, "c1"), NoStream)))
+      assert(r == Seq(
+        "a" -> AppendResult(4L, 5L, 7L, 8L),
+        "b" -> AppendResult(2L, 2L, 9L, 9L),
+        "c" -> AppendResult(0L, 2L, 10L, 12L)))
+    }
+    assert(jobs <= 3, s"batchAppend ran $jobs jobs")
+    assert(parquetFiles == filesBefore + 1)
+  }
+
+  test("batchAppend precedence is sequential: batch 1's wrong revision before batch 2's repeated uuid") {
+    val dir = Files.createTempDirectory("graft-life6").toString
+    Appender.append(spark, dir, "s", events(1, "seed"), NoStream)
+    val first = events(1, "x")
+    val e = intercept[WrongExpectedRevision](Appender.batchAppend(spark, dir, Seq(
+      ("s", first, ExactRevision(5)),
+      ("s", first, AnyRevision))))
+    assert(e.current == Some(0L))
+    assert(Appender.readLog(spark, dir).count() == 1)
+  }
+
+  test("batchAppend with a tombstoned stream in batch 2 throws StreamDeleted and writes nothing") {
+    val dir = Files.createTempDirectory("graft-life7").toString
+    Appender.append(spark, dir, "dead", events(2, "d"), NoStream)
+    Appender.tombstone(spark, dir, "dead", nowNanos = 3L)
+    def parquetFiles = new java.io.File(dir).listFiles().count(_.getName.endsWith(".parquet"))
+    val filesBefore = parquetFiles
+    val e = intercept[StreamDeleted](Appender.batchAppend(spark, dir, Seq(
+      ("live", events(1, "l"), NoStream),
+      ("dead", events(1, "n"), AnyRevision),
+      ("other", events(1, "o"), NoStream))))
+    assert(e.stream == "dead")
+    assert(parquetFiles == filesBefore)
+    assert(Appender.readLog(spark, dir).count() == 3)
+  }
 }
