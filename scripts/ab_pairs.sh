@@ -1,0 +1,72 @@
+#!/usr/bin/env bash
+# A/B pairs of graftbench runs: the committed parent (HEAD) against the
+# working tree. Usage:
+#   scripts/ab_pairs.sh [workload] [pairs] [seconds] [first seed]
+# (defaults: event_store 10 6 1). Both sides are copied to
+# ${TMPDIR:-/tmp}/graft-ab/{parent,change}, and each copy's
+# graftbench/run.py builds its own engine on its first run. Pair i runs
+# seed (first seed + i) on both sides, one after the other; the side that
+# runs first alternates between pairs, so a drift in host load falls on
+# both sides alike. Result lines go to <side>.jsonl in that directory.
+# Prints, for each end-to-end metric of BENCHMARK.json, the median and
+# quartiles of each side and the number of pairs the change won, then the
+# failed ops and incorrect runs of each side. Runs one JVM at a time.
+set -euo pipefail
+cd "$(dirname "$0")/.."
+WORKLOAD=${1:-event_store}
+PAIRS=${2:-10}
+SECONDS_PER_RUN=${3:-6}
+SEED0=${4:-1}
+AB=${TMPDIR:-/tmp}/graft-ab
+
+rm -rf "$AB"
+mkdir -p "$AB/parent" "$AB/change"
+git archive HEAD | tar -x -C "$AB/parent"
+# the working tree: tracked files that still exist plus untracked, not ignored ones
+git ls-files -z --cached --others --exclude-standard |
+  while IFS= read -r -d '' f; do if [ -e "$f" ]; then printf '%s\0' "$f"; fi; done |
+  tar --null -T - -cf - | tar -x -C "$AB/change"
+
+run() { # side seed
+  local line
+  line=$(cd "$AB/$1" && python3 graftbench/run.py --workload "$WORKLOAD" --seed "$2" \
+    --seconds "$SECONDS_PER_RUN" --trace 0 2>>"$AB/$1.err" | tail -n 1) || line=''
+  [ -n "$line" ] || line='{}'
+  printf '{"seed": %s, "result": %s}\n' "$2" "$line" >>"$AB/$1.jsonl"
+  echo "[ab] $1 seed $2: $line" >&2
+}
+
+for ((i = 0; i < PAIRS; i++)); do
+  seed=$((SEED0 + i))
+  if ((i % 2 == 0)); then run parent "$seed"; run change "$seed"
+  else run change "$seed"; run parent "$seed"; fi
+done
+
+python3 - "$AB" <<'EOF'
+import json, statistics, sys
+ab = sys.argv[1]
+spec = json.load(open("BENCHMARK.json"))
+side = {s: {r["seed"]: r["result"] for r in map(json.loads, open(f"{ab}/{s}.jsonl"))}
+        for s in ("parent", "change")}
+def q(xs):
+    if len(xs) < 2:
+        return (xs or [float("nan")])[0], float("nan"), float("nan")
+    q1, q2, q3 = statistics.quantiles(xs, n=4, method="inclusive")
+    return q2, q1, q3
+for m in spec["end_to_end"]:
+    name, lower = m["name"], m["better"] == "lower"
+    vals = {s: {k: r["metrics"][name]["value"] for k, r in side[s].items() if "metrics" in r}
+            for s in side}
+    seeds = sorted(set(vals["parent"]) & set(vals["change"]))
+    wins = sum((vals["change"][k] < vals["parent"][k]) == lower
+               and vals["change"][k] != vals["parent"][k] for k in seeds)
+    (pm, p1, p3), (cm, c1, c3) = (q([vals[s][k] for k in seeds]) for s in ("parent", "change"))
+    print(f"{name} ({m['unit']}, {m['better']} is better): parent median {pm:.3f} [q1 {p1:.3f}, q3 {p3:.3f}]"
+          f"  change median {cm:.3f} [q1 {c1:.3f}, q3 {c3:.3f}]  delta {100 * (cm - pm) / pm:+.1f}%"
+          f"  change better in {wins}/{len(seeds)} pairs")
+for s in side:
+    rs = side[s].values()
+    print(f"{s}: {len(rs)} runs, {sum(1 for r in rs if 'metrics' not in r)} without a result, "
+          f"{sum(1 for r in rs if r.get('correct') is False)} incorrect, "
+          f"{sum(r.get('failed', 0) for r in rs)} failed ops")
+EOF

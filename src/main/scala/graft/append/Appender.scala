@@ -1,10 +1,22 @@
 package graft.append
 
+import scala.collection.mutable
+
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, XxHash64}
+import org.apache.spark.sql.catalyst.util.ArrayBasedMapData
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.model._
 import graft.streaming.Subscriptions
+import graft.util.ParquetDirs
 
 /** A proposed event (client-supplied part; server assigns the rest).
   * Mirrors the append-side of `model.Event`
@@ -42,19 +54,25 @@ final case class AppendResult(firstRevision: Long, lastRevision: Long,
  * transaction + UNIQUE(stream, revision) constraint. A parquet log has no
  * compare-and-swap, so this appender assumes a single writer per log (the
  * normal Spark deployment: one ingest job per table; use a
- * transactional table format for multi-writer).
+ * transactional table format for multi-writer). Within one JVM, calls
+ * on one log serialize on that log's writer state.
  *
  * Cost: every write — [[append]], [[delete]], [[tombstone]] and
- * [[batchAppend]] — is one call of the same commit path. It reads every
- * precondition of every touched stream (revision, tombstone flag, "some
- * proposed uuid is already here") and the global high-water position in
- * ONE grouped aggregate over the log (one scan, 2 Spark jobs under AQE),
- * replays the checks on the driver in call order, and writes the rows as
- * one parquet file (1 job): 3 jobs per call, however many streams.
- * Only a call that proposes a uuid already in a touched stream pays one
- * more query, to name the conflicting pairs. At scale the state would
- * come from the writer's own watermark and key state (SURVEY.md §7.3),
- * not a log scan.
+ * [[batchAppend]] — is one call of the same commit path, and in the
+ * steady state it runs NO Spark job. The preconditions come from the
+ * log's writer state (the reference's stream→revision metadata cache,
+ * streams.go:61-91): each stream's revision and tombstone flag, the
+ * global high-water position, and a 64-bit fingerprint of every
+ * (stream, uuid) in the log. One scan of the log (1 Spark job) seeds
+ * it; the state is then trusted only while the log directory's visible
+ * parquet listing (name, size, mtime) is the one this writer left after
+ * its last commit, so a file written, copied or deleted by anyone else
+ * costs one reseed. A proposed uuid whose fingerprint is in the state is
+ * confirmed by one exact (stream, uuid) query (1 job), so only a call
+ * that repeats a pair, or a 64-bit collision, pays one. The rows are
+ * written by [[write]] on the driver, as one parquet file. The state
+ * costs 8 bytes of driver memory per event (the sorted fingerprints),
+ * plus one entry per stream, and lives as long as the JVM.
  */
 object Appender {
 
@@ -80,31 +98,141 @@ object Appender {
              nowNanos: Long = System.nanoTime()): AppendResult =
     batchAppend(spark, logDir, Seq((stream, events, expected)), nowNanos).head._2
 
-  private type LogRow = (String, String, String, String, Map[String, String], Option[String], Long, Long)
+  /** The (stream, uuid) fingerprint: Spark's `xxhash64` kernel, so the
+    * seed query's column and the driver's value agree bit for bit. */
+  private val fingerprintExpr = new XxHash64(Seq(
+    BoundReference(0, StringType, nullable = true), BoundReference(1, StringType, nullable = true)))
 
-  /** Server-assigned rows: dense revisions after `currentRev`, dense
-    * positions after `maxPos`, `created` in 100-ns ticks (streams.go:150-151). */
-  private def logRows(stream: String, events: Seq[ProposedEvent], currentRev: Long,
-                      maxPos: Long, nowNanos: Long): Seq[LogRow] = {
-    val created = (nowNanos / 100L).toString
-    events.zipWithIndex.map { case (e, i) =>
-      (stream, e.uuid, e.eventType, e.data, e.metadata + ("created" -> created),
-        e.customMetadata, currentRev + 1L + i, maxPos + 1L + i)
+  private def fingerprint(stream: String, uuid: String): Long =
+    fingerprintExpr.eval(InternalRow(UTF8String.fromString(stream), UTF8String.fromString(uuid)))
+      .asInstanceOf[Long]
+
+  private def mergeSorted(a: Array[Long], b: Array[Long]): Array[Long] = {
+    val out = new Array[Long](a.length + b.length)
+    var i = 0
+    var j = 0
+    while (i + j < out.length) {
+      if (j == b.length || (i < a.length && a(i) <= b(j))) { out(i + j) = a(i); i += 1 }
+      else { out(i + j) = b(j); j += 1 }
+    }
+    out
+  }
+
+  /** What the single writer knows of one log. `files` is the visible
+    * listing the state covers (null: seed before use). */
+  private final class WriterState {
+    var files: Set[(String, Long, Long)] = null
+    val revisions = mutable.HashMap.empty[String, Long]
+    val tombstoned = mutable.HashSet.empty[String]
+    var maxPos = 0L
+    var fingerprints: Array[Long] = Array.emptyLongArray // sorted
+    /** The last exact probe (pairs asked, pairs found); void after any
+      * commit or reseed, since either can add the pairs it missed. */
+    var probed: Option[(Set[(String, String)], Set[(String, String)])] = None
+
+    def mayContain(fp: Long): Boolean = java.util.Arrays.binarySearch(fingerprints, fp) >= 0
+
+    /** One scan: per-partition folds of (stream, revision, tombstone flag,
+      * position, fingerprint), merged on the driver. */
+    def seed(spark: SparkSession, logDir: String, listing: Set[(String, Long, Long)]): Unit = {
+      revisions.clear(); tombstoned.clear(); maxPos = 0L; probed = None
+      fingerprints = Array.emptyLongArray
+      if (listing.nonEmpty) {
+        import spark.implicits._
+        val parts = readLog(spark, logDir)
+          .select(col("stream"), col("revision"), col("event_type") <=> TombstoneMarker,
+            col("position"), xxhash64(col("stream"), col("uuid")))
+          .as[(String, Long, Boolean, Long, Long)]
+          .mapPartitions { rows =>
+            val streams = mutable.HashMap.empty[String, (Long, Boolean)]
+            val fps = mutable.ArrayBuilder.make[Long]
+            var pos = 0L
+            rows.foreach { case (s, rev, tomb, p, fp) =>
+              val (r0, t0) = streams.getOrElse(s, (-1L, false))
+              streams(s) = (math.max(r0, rev), t0 || tomb)
+              pos = math.max(pos, p)
+              fps += fp
+            }
+            Iterator((streams.toSeq.map { case (s, (r, t)) => (s, r, t) }, pos, fps.result()))
+          }
+          .collect()
+        for ((streams, _, _) <- parts; (s, r, t) <- streams) {
+          revisions(s) = math.max(r, revisions.getOrElse(s, -1L))
+          if (t) tombstoned += s
+        }
+        maxPos = parts.map(_._2).maxOption.getOrElse(0L)
+        fingerprints = parts.flatMap(_._3)
+        java.util.Arrays.sort(fingerprints)
+      }
+      files = listing
+    }
+
+    /** The pairs of `pairs` that are in the log, by one exact query; the
+      * same question twice in a row is answered once. */
+    def probe(spark: SparkSession, logDir: String, pairs: Set[(String, String)]): Set[(String, String)] =
+      probed.collect { case (asked, found) if asked == pairs => found }.getOrElse {
+        // A broadcast set, not an `isin` literal list: a replayed
+        // throughput-tier trigger asks about ~500k pairs, and as plan
+        // literals they made such a query several times slower.
+        val asked = spark.sparkContext.broadcast(pairs)
+        val isAsked = udf((s: String, u: String) => asked.value((s, u)))
+        val found = try readLog(spark, logDir)
+          .filter(col("stream").isin(pairs.map(_._1).toSeq: _*) && isAsked(col("stream"), col("uuid")))
+          .select("stream", "uuid").collect().map(r => (r.getString(0), r.getString(1))).toSet
+        finally asked.destroy()
+        probed = Some(pairs -> found)
+        found
+      }
+  }
+
+  /** One state per log, keyed by the log's qualified path. */
+  private val states = new java.util.concurrent.ConcurrentHashMap[String, WriterState]()
+
+  /** Run `f` on the state of the log at `logDir`, holding its lock, after
+    * the listing check: a listing other than the one the state covers
+    * (another writer, a copy, a deletion) reseeds it. */
+  private def withState[T](spark: SparkSession, logDir: String)(f: WriterState => T): T = {
+    val path = new Path(logDir)
+    val key = path.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(path).toString
+    val st = states.computeIfAbsent(key, _ => new WriterState)
+    st.synchronized {
+      val listing = ParquetDirs.visibleParquet(spark, logDir)
+        .map(s => (s.getPath.getName, s.getLen, s.getModificationTime)).toSet
+      if (listing != st.files) st.seed(spark, logDir, listing)
+      f(st)
     }
   }
 
-  /** The one log writer. parallelize, NOT a local Seq toDF: a LocalRelation
-    * embeds every row in the serialized plan and encodes+writes them in ONE
-    * task, which at throughput-tier sink triggers (100k+ rows) makes the
-    * parquet encode the bottleneck; an RDD ships rows as blocks and spreads
-    * the encode across up to 8 tasks. A call under 20k rows is one slice,
-    * so it writes exactly one parquet file. */
-  private def write(spark: SparkSession, logDir: String, rows: Seq[LogRow]): Unit = {
-    import spark.implicits._
-    spark.sparkContext.parallelize(rows, math.max(1, math.min(8, rows.size / 10000)))
-      .toDF("stream", "uuid", "event_type", "data", "metadata", "custom_metadata",
-        "revision", "position")
-      .write.mode("append").parquet(logDir)
+  private val toUtf8: Any => Any = v => UTF8String.fromString(v.asInstanceOf[String])
+
+  /** A server-assigned row in `Subscriptions.eventSchema` order:
+    * `created` stamped in 100-ns ticks (streams.go:150-151). */
+  private def logRow(stream: String, e: ProposedEvent, revision: Long, position: Long,
+                     created: String): InternalRow =
+    InternalRow(toUtf8(stream), toUtf8(e.uuid), toUtf8(e.eventType), toUtf8(e.data),
+      ArrayBasedMapData(e.metadata + ("created" -> created), toUtf8, toUtf8),
+      e.customMetadata.map(toUtf8).orNull, revision, position)
+
+  /** The one log writer, on the driver, for every call size: Spark's own
+    * parquet writer (the session's codec, schema = `Subscriptions.eventSchema`)
+    * writes the rows as one file under a hidden name (leading `.`, which
+    * Spark's batch and file-stream listings skip), then renames it to its
+    * `part-*.parquet` name, so a reader sees the whole file or none of
+    * it. Runs no Spark job; returns the new file's status. */
+  private def write(spark: SparkSession, logDir: String, rows: Seq[InternalRow]): FileStatus = {
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, Subscriptions.eventSchema)
+    val ctx = new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID())
+    val name = s"part-00000-${java.util.UUID.randomUUID()}-c000${factory.getFileExtension(ctx)}"
+    val dir = new Path(logDir)
+    val fs = dir.getFileSystem(job.getConfiguration)
+    val (tmp, dst) = (new Path(dir, s".$name.tmp"), new Path(dir, name))
+    try {
+      val out = factory.newInstance(tmp.toString, Subscriptions.eventSchema, ctx)
+      try rows.foreach(out.write) finally out.close()
+      if (!fs.rename(tmp, dst)) throw new java.io.IOException(s"cannot rename $tmp to $dst")
+    } catch { case e: Throwable => fs.delete(tmp, false); throw e }
+    fs.getFileStatus(dst)
   }
 
   // system event types for the stream-lifecycle markers (the reference
@@ -140,15 +268,12 @@ object Appender {
    * position sequence, all rows written together as one parquet file
    * (single-writer contract as [[append]]).
    *
-   * One grouped aggregate reads the preconditions of all touched streams
-   * (untouched streams collapse into one null group that still feeds the
-   * position max), so a many-stream micro-batch costs the same 3 Spark
-   * jobs as one append. Its uuid flag tests each log row against the
-   * proposed (stream, uuid) pairs, broadcast once as a set (a broadcast
-   * variable runs no job). Its buffers must stay fixed-width: a
-   * `collect_set` of the conflicting uuids turns the plan into a
-   * non-codegen ObjectHashAggregate, so the pairs already in the log are
-   * read by a second query, and only when a stream's flag says one is there.
+   * The preconditions of every touched stream come from the log's writer
+   * state (see Cost above), so in the steady state a call of any size
+   * runs no Spark job: a many-stream micro-batch costs what one append
+   * costs, plus the rows. Only a proposed pair whose fingerprint is
+   * already in the state sends the call's fingerprint hits to one exact
+   * query; a call whose checks fail earlier never asks.
    *
    * The checks replay on the driver batch by batch, in call order, in the
    * reference's order (streams.go, backend.go:316-329): tombstone;
@@ -156,7 +281,8 @@ object Appender {
    * two batches of one call continues its dense sequence); then the
    * (stream, uuid) PK — a uuid repeated within the call so far, then one
    * already in the log. The smallest offending uuid is reported, so the
-   * error is deterministic.
+   * error is deterministic. A call that fails writes nothing and leaves
+   * the state as it was.
    */
   def batchAppend(spark: SparkSession, logDir: String,
                   batches: Seq[(String, Seq[ProposedEvent], ExpectedRevision)],
@@ -164,49 +290,59 @@ object Appender {
     require(batches.nonEmpty && batches.forall(_._2.nonEmpty), "empty append")
     for ((_, events, _) <- batches; e <- events; k <- requiredMeta if !e.metadata.contains(k))
       throw MissingMetadata(k)
-    val log = readLog(spark, logDir)
-    // A broadcast set, not an `isin` literal list: a throughput-tier
-    // trigger proposes ~500k pairs, and as plan literals they made such a
-    // trigger several times slower.
-    val proposed = spark.sparkContext.broadcast(
-      batches.flatMap { case (s, es, _) => es.map(e => (s, e.uuid)) }.toSet)
-    val isProposed = udf((s: String, u: String) => proposed.value((s, u)))
-    try {
-      val touched = col("stream").isin(batches.map(_._1).distinct: _*)
-      val state = log
-        .groupBy(when(touched, col("stream")))
-        .agg(max(col("revision")), max(col("position")), max(col("event_type") === TombstoneMarker),
-          max(when(touched, isProposed(col("stream"), col("uuid")))))
-        .collect()
-      val byStream = state.filterNot(_.isNullAt(0)).map(r => r.getString(0) -> r).toMap
-      val flagged = byStream.collect { case (s, r) if r.get(4) == true => s }.toSet
-      lazy val inLog: Set[(String, String)] = log
-        .filter(col("stream").isin(flagged.toSeq: _*) && isProposed(col("stream"), col("uuid")))
-        .select("stream", "uuid").collect().map(r => (r.getString(0), r.getString(1))).toSet
-      var maxPos = state.map(_.getLong(2)).maxOption.getOrElse(0L)
+    withState(spark, logDir) { st =>
+      val fps = batches.map { case (s, es, _) => es.map(e => fingerprint(s, e.uuid)) }
+      val hits = batches.zip(fps).flatMap { case ((s, es, _), f) =>
+        es.zip(f).collect { case (e, fp) if st.mayContain(fp) => (s, e.uuid) }
+      }.toSet
+      lazy val inLog = st.probe(spark, logDir, hits)
+      val created = (nowNanos / 100L).toString
+      var maxPos = st.maxPos
       val results = Seq.newBuilder[(String, AppendResult)]
-      val rows = Seq.newBuilder[LogRow]
-      val revs = scala.collection.mutable.Map.empty[String, Long]
-      val seen = scala.collection.mutable.Set.empty[(String, String)]
+      val rows = Seq.newBuilder[InternalRow]
+      val revs = mutable.Map.empty[String, Long]
+      val seen = mutable.Set.empty[(String, String)]
       for ((stream, events, expected) <- batches) {
-        if (byStream.get(stream).exists(_.get(3) == true)) throw StreamDeleted(stream)
-        val currentRev = revs.getOrElse(stream, byStream.get(stream).fold(-1L)(_.getLong(1)))
+        if (st.tombstoned(stream)) throw StreamDeleted(stream)
+        val currentRev = revs.getOrElse(stream, st.revisions.getOrElse(stream, -1L))
         checkRevision(stream, currentRev, expected)
         val uuids = events.map(_.uuid)
         (uuids.diff(uuids.distinct) ++ uuids.filter(u => seen((stream, u)))).minOption
-          .orElse(uuids.filter(u => flagged(stream) && inLog((stream, u))).minOption)
+          .orElse(uuids.filter(u => hits((stream, u)) && inLog((stream, u))).minOption)
           .foreach(u => throw EventConflict(stream, u))
         seen ++= uuids.map(stream -> _)
-        rows ++= logRows(stream, events, currentRev, maxPos, nowNanos)
+        rows ++= events.zipWithIndex.map { case (e, i) =>
+          logRow(stream, e, currentRev + 1L + i, maxPos + 1L + i, created)
+        }
         results += stream -> AppendResult(currentRev + 1L, currentRev + events.size,
           maxPos + 1L, maxPos + events.size)
         revs(stream) = currentRev + events.size
         maxPos += events.size
       }
-      write(spark, logDir, rows.result())
+      val file = try write(spark, logDir, rows.result())
+      catch { case e: Throwable => st.files = null; throw e }
+      st.files += ((file.getPath.getName, file.getLen, file.getModificationTime))
+      st.revisions ++= revs
+      st.tombstoned ++= batches.collect { case (s, es, _) if es.exists(_.eventType == TombstoneMarker) => s }
+      st.maxPos = maxPos
+      st.fingerprints = mergeSorted(st.fingerprints, fps.flatten.toArray.sorted)
+      st.probed = None
       results.result()
-    } finally proposed.destroy()
+    }
   }
+
+  /** True when EVERY (stream, uuid) of `pairs` is already in the log and
+    * no pair repeats: the test for a redelivered, fully applied batch
+    * after [[batchAppend]] rejected it with an [[EventConflict]].
+    * Answered from the writer state: a fingerprint miss means "no" with
+    * no query, and the exact check is the probe the rejected call just
+    * ran, so a redelivery pays that one query. */
+  def alreadyApplied(spark: SparkSession, logDir: String, pairs: Seq[(String, String)]): Boolean =
+    pairs.distinct.size == pairs.size && withState(spark, logDir) { st =>
+      val asked = pairs.toSet
+      asked.forall { case (s, u) => st.mayContain(fingerprint(s, u)) } &&
+        st.probe(spark, logDir, asked) == asked
+    }
 
   /**
    * Visibility view over the raw log: strips system markers and applies
@@ -229,5 +365,5 @@ object Appender {
   /** Read the canonical log (empty DataFrame with the canonical schema if
     * the directory has no files yet). */
   def readLog(spark: SparkSession, logDir: String): DataFrame =
-    graft.util.ParquetDirs.readOrEmpty(spark, logDir, Subscriptions.eventSchema)
+    ParquetDirs.readOrEmpty(spark, logDir, Subscriptions.eventSchema)
 }

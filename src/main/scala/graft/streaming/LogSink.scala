@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.append.{Appender, ProposedEvent}
@@ -23,7 +23,9 @@ import graft.model.{AnyRevision, EventConflict}
  * state. An [[EventConflict]] is therefore success only when every
  * (stream, uuid) of the batch is already in the log; any other conflict
  * (an in-batch duplicate, applied pairs mixed with new ones) fails the
- * trigger loudly, with nothing written.
+ * trigger loudly, with nothing written. That test reads the appender's
+ * writer state, so a redelivery pays the one exact (stream, uuid) query
+ * its rejected `batchAppend` ran, not a second scan.
  *
  * Scale: revision assignment is inherently a per-stream sequential fold
  * (the single-writer contract, SURVEY §2.1), so the sink drains each
@@ -64,25 +66,10 @@ object LogSink {
         }
       try Appender.batchAppend(spark, logDir, batches)
       catch { // redelivered micro-batch: already applied; any other conflict propagates
-        case _: EventConflict if alreadyApplied(spark, logDir,
+        case _: EventConflict if Appender.alreadyApplied(spark, logDir,
           rows.toSeq.map(r => (r.getString(0), r.getString(1)))) => ()
       }
     }
-  }
-
-  /** True when EVERY (stream, uuid) of the batch is already in the log:
-    * only then is a conflict a redelivered, fully applied micro-batch. A
-    * batch that repeats a pair, or mixes applied and new pairs, is not
-    * (batchAppend wrote none of it). One broadcast lookup, on the conflict
-    * path only; the log's (stream, uuid) pairs are unique, so the matches
-    * of the distinct pairs number the batch's rows exactly when the rows
-    * are distinct and all present. */
-  private def alreadyApplied(spark: SparkSession, logDir: String,
-                             pairs: Seq[(String, String)]): Boolean = {
-    import spark.implicits._
-    Appender.readLog(spark, logDir)
-      .join(broadcast(pairs.distinct.toDF("stream", "uuid")), Seq("stream", "uuid"))
-      .count() == pairs.size
   }
 
   /** Start the sink: `src` must provide (stream, uuid, event_type, data)

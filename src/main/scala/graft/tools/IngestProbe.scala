@@ -24,12 +24,12 @@ import org.apache.spark.sql.functions._
  *     between them),
  *
  * across three regimes: small triggers (latency-bound: per-trigger fixed
- * cost — 4 Spark jobs: the micro-batch collect, then `batchAppend`'s
- * 2-job precondition aggregate and 1 parquet commit — is identical for
- * every sink, so bucketing can't beat ~1x there), large
- * triggers, and a 10x-volume large-trigger point (throughput-bound: the
- * per-row work — driver-side sequential fold, parquet encode, log scans
- * — splits nBuckets ways and runs concurrently; this is the shape a
+ * cost — 1 Spark job, the micro-batch collect: `batchAppend` reads its
+ * preconditions from the writer state and writes its file on the driver
+ * — is identical for every sink, so bucketing can't beat ~1x there),
+ * large triggers, and a 10x-volume large-trigger point (throughput-bound:
+ * the per-row work — driver-side sequential fold and parquet encode —
+ * splits nBuckets ways and runs concurrently; this is the shape a
  * real deployment's triggers sit in). Each regime runs in a FRESH
  * SparkSession — an earlier probe draft shared one JVM-wide session and
  * the 10x regime inherited enough block-manager/GC pollution from the
@@ -188,7 +188,7 @@ object IngestProbe {
     def part(tag: String, total: Long, nmb: Int, r: Regime): String =
       s""""$tag":{"n_events":$total,"micro_batches":$nmb,"single_sink_secs":${f(r.singleSecs)},"single_sink_cpu_s":${f(r.singleCpu)},"single_sink_eps":${f(total / r.singleSecs)},"bucketed_secs":${f(r.bucketSecs)},"bucketed_cpu_s":${f(r.bucketCpu)},"bucketed_eps":${f(total / r.bucketSecs)},"speedup":${f(r.singleSecs / r.bucketSecs)},"steal_pct":${f(r.stealPct)}}"""
     val json =
-      s"""{"n_events":$n,"n_buckets":$nBuckets,${part("small_triggers", n, 8, lat)},${part("large_triggers", n, 2, thr)},${part("volume10x_large_triggers", n10, 2, big)},"bucket_ladder_10x":$ladderJson,"note":"single sink = one dense global sequence (driver-bounded by contract); bucketed = PartitionedLog-style bucket sinks with independent dense sequences running concurrently per trigger; each regime min-of-2 fresh SparkSessions; bucket_ladder_10x sweeps nBuckets at the 10x regime against the same single-sink time; cpu_s = process-CPU (steal-immune), steal_pct = worst /proc/stat steal bracket over the regime's runs. Bottleneck accounting: after batching the precondition checks (2 jobs per trigger instead of 3 per touched stream) and distributing the parquet encode (parallelize, not a LocalRelation plan), the encode/write half of the sink is parallel in BOTH topologies, so bucketing now only multiplies the remaining sequential-per-sink work (collect deserialization + the dense-assignment fold) - Amdahl caps the ratio below the naive nBuckets x while absolute single-sink throughput roughly doubled; on this box both topologies are further flattened by one shared local[N] core pool, which a real cluster's one-driver-per-bucket deployment does not share. Ladder saturation (read cpu_s next to wall): total CPU work is roughly bucket-count-independent until per-sink fixed cost (trigger precondition jobs + collect deserialization per sink) starts adding CPU with bucket count while the shared core pool caps concurrency - where cpu_s rises and wall stops falling, the ladder has hit the fixed-cost floor, not steal"}"""
+      s"""{"n_events":$n,"n_buckets":$nBuckets,${part("small_triggers", n, 8, lat)},${part("large_triggers", n, 2, thr)},${part("volume10x_large_triggers", n10, 2, big)},"bucket_ladder_10x":$ladderJson,"note":"single sink = one dense global sequence (driver-bounded by contract); bucketed = PartitionedLog-style bucket sinks with independent dense sequences running concurrently per trigger; each regime min-of-2 fresh SparkSessions; bucket_ladder_10x sweeps nBuckets at the 10x regime against the same single-sink time; cpu_s = process-CPU (steal-immune), steal_pct = worst /proc/stat steal bracket over the regime's runs. Bottleneck accounting: batchAppend reads its preconditions from the writer state (no Spark job per trigger) and encodes its one parquet file on the driver, so a sink's per-trigger work is sequential (collect deserialization + the dense-assignment fold + the encode) and bucketing runs nBuckets such sinks concurrently; on this box both topologies are flattened by one shared local[N] core pool, which a real cluster's one-driver-per-bucket deployment does not share. Ladder saturation (read cpu_s next to wall): total CPU work is roughly bucket-count-independent until per-sink fixed cost (the trigger collect job + its deserialization per sink) starts adding CPU with bucket count while the shared core pool caps concurrency - where cpu_s rises and wall stops falling, the ladder has hit the fixed-cost floor, not steal"}"""
     java.nio.file.Files.write(java.nio.file.Paths.get(out), (json + "\n").getBytes("UTF-8"))
     System.err.println(
       s"[ingest] small single ${f(lat.singleSecs)}s vs bucketed ${f(lat.bucketSecs)}s; large single ${f(thr.singleSecs)}s vs bucketed ${f(thr.bucketSecs)}s; 10x single ${f(bigS)}s vs bucketed ${f(big.bucketSecs)}s -> $out")
