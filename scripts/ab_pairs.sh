@@ -1,22 +1,29 @@
 #!/usr/bin/env bash
 # A/B pairs of graftbench runs: the committed parent (HEAD) against the
 # working tree. Usage:
-#   scripts/ab_pairs.sh [workload] [pairs] [seconds] [first seed]
-# (defaults: event_store 10 6 1). Both sides are copied to
+#   scripts/ab_pairs.sh [workload] [pairs] [seconds] [first seed] [trace]
+# (defaults: event_store 10 6 1 0). Both sides are copied to
 # ${TMPDIR:-/tmp}/graft-ab/{parent,change}, and each copy's
 # graftbench/run.py builds its own engine on its first run. Pair i runs
 # seed (first seed + i) on both sides, one after the other; the side that
 # runs first alternates between pairs, so a drift in host load falls on
-# both sides alike. Result lines go to <side>.jsonl in that directory.
+# both sides alike. Both output lines of each run (the detail object and
+# the result) go to <side>.jsonl in that directory.
 # Prints, for each end-to-end metric of BENCHMARK.json, the median and
-# quartiles of each side and the number of pairs the change won, then the
-# failed ops and incorrect runs of each side. Runs one JVM at a time.
+# quartiles of each side and the number of pairs the change won, the
+# median per side of the workload's own metrics (the detail line's
+# `metrics`), then the failed ops and incorrect runs of each side. With
+# trace 1 the runs are traced (`--trace 1`): the end-to-end metrics come
+# from the detail line's `shared_metrics`, and the median per side of
+# every `log.*` and `append.*` layer metric is printed too. Runs one JVM
+# at a time.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 WORKLOAD=${1:-event_store}
 PAIRS=${2:-10}
 SECONDS_PER_RUN=${3:-6}
 SEED0=${4:-1}
+TRACE=${5:-0}
 AB=${TMPDIR:-/tmp}/graft-ab
 
 rm -rf "$AB"
@@ -28,11 +35,13 @@ git ls-files -z --cached --others --exclude-standard |
   tar --null -T - -cf - | tar -x -C "$AB/change"
 
 run() { # side seed
-  local line
-  line=$(cd "$AB/$1" && python3 graftbench/run.py --workload "$WORKLOAD" --seed "$2" \
-    --seconds "$SECONDS_PER_RUN" --trace 0 2>>"$AB/$1.err" | tail -n 1) || line=''
-  [ -n "$line" ] || line='{}'
-  printf '{"seed": %s, "result": %s}\n' "$2" "$line" >>"$AB/$1.jsonl"
+  local out detail line
+  out=$(cd "$AB/$1" && python3 graftbench/run.py --workload "$WORKLOAD" --seed "$2" \
+    --seconds "$SECONDS_PER_RUN" --trace "$TRACE" 2>>"$AB/$1.err" | tail -n 2) || out=''
+  detail=$(printf '%s\n' "$out" | sed -n 1p)
+  line=$(printf '%s\n' "$out" | sed -n 2p)
+  [ -n "$line" ] || { line='{}'; detail='{}'; }
+  printf '{"seed": %s, "detail": %s, "result": %s}\n' "$2" "$detail" "$line" >>"$AB/$1.jsonl"
   echo "[ab] $1 seed $2: $line" >&2
 }
 
@@ -46,8 +55,11 @@ python3 - "$AB" <<'EOF'
 import json, statistics, sys
 ab = sys.argv[1]
 spec = json.load(open("BENCHMARK.json"))
-side = {s: {r["seed"]: r["result"] for r in map(json.loads, open(f"{ab}/{s}.jsonl"))}
-        for s in ("parent", "change")}
+runs = {s: {r["seed"]: r for r in map(json.loads, open(f"{ab}/{s}.jsonl"))} for s in ("parent", "change")}
+side = {s: {k: r["result"] for k, r in rs.items()} for s, rs in runs.items()}
+def e2e(r):  # from the detail line: a traced run's result line holds per-layer metrics
+    shared = r["detail"].get("shared_metrics")
+    return {k: {"value": v} for k, v in shared.items()} if shared and "metrics" in r["result"] else None
 def q(xs):
     if len(xs) < 2:
         return (xs or [float("nan")])[0], float("nan"), float("nan")
@@ -55,8 +67,7 @@ def q(xs):
     return q2, q1, q3
 for m in spec["end_to_end"]:
     name, lower = m["name"], m["better"] == "lower"
-    vals = {s: {k: r["metrics"][name]["value"] for k, r in side[s].items() if "metrics" in r}
-            for s in side}
+    vals = {s: {k: e2e(r)[name]["value"] for k, r in runs[s].items() if e2e(r)} for s in runs}
     seeds = sorted(set(vals["parent"]) & set(vals["change"]))
     wins = sum((vals["change"][k] < vals["parent"][k]) == lower
                and vals["change"][k] != vals["parent"][k] for k in seeds)
@@ -64,6 +75,14 @@ for m in spec["end_to_end"]:
     print(f"{name} ({m['unit']}, {m['better']} is better): parent median {pm:.3f} [q1 {p1:.3f}, q3 {p3:.3f}]"
           f"  change median {cm:.3f} [q1 {c1:.3f}, q3 {c3:.3f}]  delta {100 * (cm - pm) / pm:+.1f}%"
           f"  change better in {wins}/{len(seeds)} pairs")
+def medians(title, key, keep):
+    names = sorted({n for rs in runs.values() for r in rs.values() for n in r["detail"].get(key, {}) if keep(n)})
+    for n in names:
+        per = {s: [r["detail"][key][n]["value"] for r in rs.values() if n in r["detail"].get(key, {})]
+               for s, rs in runs.items()}
+        print(f"{title} {n}: parent median {q(per['parent'])[0]:.3f}  change median {q(per['change'])[0]:.3f}")
+medians("metric", "metrics", lambda n: True)
+medians("layer", "layers", lambda n: n.startswith(("log.", "append.")))
 for s in side:
     rs = side[s].values()
     print(f"{s}: {len(rs)} runs, {sum(1 for r in rs if 'metrics' not in r)} without a result, "

@@ -70,9 +70,15 @@ final case class AppendResult(firstRevision: Long, lastRevision: Long,
  * costs one reseed. A proposed uuid whose fingerprint is in the state is
  * confirmed by one exact (stream, uuid) query (1 job), so only a call
  * that repeats a pair, or a 64-bit collision, pays one. The rows are
- * written by [[write]] on the driver, as one parquet file. The state
- * costs 8 bytes of driver memory per event (the sorted fingerprints),
- * plus one entry per stream, and lives as long as the JVM.
+ * written by [[write]] on the driver, as one parquet file. The same
+ * state answers bounded reads of the log ([[LogIndex]], used by
+ * `EventLog.read` and `Subscriptions.endOffset`) with no Spark job while
+ * it covers the reader's listing; the seed scan and every commit keep
+ * each stream's positions, one event-type id per position and each
+ * file's position span for them. The state costs 20 bytes of driver
+ * memory per event (8 for the sorted fingerprints, 8 for the position in
+ * its stream's array, which grows by doubling, 4 for the type id), plus
+ * one entry per stream, type and file, and lives as long as the JVM.
  */
 object Appender {
 
@@ -119,51 +125,38 @@ object Appender {
   }
 
   /** What the single writer knows of one log. `files` is the visible
-    * listing the state covers (null: seed before use). */
-  private final class WriterState {
+    * listing the state covers (null: seed before use); `index` answers
+    * bounded reads (null: the log breaks one of its invariants). */
+  private[append] final class WriterState {
     var files: Set[(String, Long, Long)] = null
     val revisions = mutable.HashMap.empty[String, Long]
     val tombstoned = mutable.HashSet.empty[String]
     var maxPos = 0L
     var fingerprints: Array[Long] = Array.emptyLongArray // sorted
+    var index: LogIndex = null
     /** The last exact probe (pairs asked, pairs found); void after any
       * commit or reseed, since either can add the pairs it missed. */
     var probed: Option[(Set[(String, String)], Set[(String, String)])] = None
 
     def mayContain(fp: Long): Boolean = java.util.Arrays.binarySearch(fingerprints, fp) >= 0
 
-    /** One scan: per-partition folds of (stream, revision, tombstone flag,
-      * position, fingerprint), merged on the driver. */
+    /** One scan: per-partition dictionary-coded folds of (stream, event
+      * type, revision, position, fingerprint, file), merged on the driver. */
     def seed(spark: SparkSession, logDir: String, listing: Set[(String, Long, Long)]): Unit = {
-      revisions.clear(); tombstoned.clear(); maxPos = 0L; probed = None
-      fingerprints = Array.emptyLongArray
-      if (listing.nonEmpty) {
-        import spark.implicits._
-        val parts = readLog(spark, logDir)
-          .select(col("stream"), col("revision"), col("event_type") <=> TombstoneMarker,
-            col("position"), xxhash64(col("stream"), col("uuid")))
-          .as[(String, Long, Boolean, Long, Long)]
-          .mapPartitions { rows =>
-            val streams = mutable.HashMap.empty[String, (Long, Boolean)]
-            val fps = mutable.ArrayBuilder.make[Long]
-            var pos = 0L
-            rows.foreach { case (s, rev, tomb, p, fp) =>
-              val (r0, t0) = streams.getOrElse(s, (-1L, false))
-              streams(s) = (math.max(r0, rev), t0 || tomb)
-              pos = math.max(pos, p)
-              fps += fp
-            }
-            Iterator((streams.toSeq.map { case (s, (r, t)) => (s, r, t) }, pos, fps.result()))
-          }
-          .collect()
-        for ((streams, _, _) <- parts; (s, r, t) <- streams) {
-          revisions(s) = math.max(r, revisions.getOrElse(s, -1L))
-          if (t) tombstoned += s
-        }
-        maxPos = parts.map(_._2).maxOption.getOrElse(0L)
-        fingerprints = parts.flatMap(_._3)
-        java.util.Arrays.sort(fingerprints)
+      val parts = if (listing.isEmpty) Array.empty[SeedPart] else readLog(spark, logDir)
+        .select(col("stream"), col("event_type"), col("revision"), col("position"),
+          xxhash64(col("stream"), col("uuid")), input_file_name())
+        .queryExecution.toRdd.mapPartitions(rows => Iterator(SeedPart.fold(rows)))
+        .collect()
+      revisions.clear(); tombstoned.clear(); probed = None
+      for (pt <- parts; (s, k) <- pt.streams.zipWithIndex) {
+        revisions(s) = math.max(pt.maxRevision(k), revisions.getOrElse(s, -1L))
+        if (pt.tombstoned(k)) tombstoned += s
       }
+      maxPos = parts.flatMap(_.position).maxOption.getOrElse(0L)
+      fingerprints = parts.flatMap(_.fingerprint)
+      java.util.Arrays.sort(fingerprints)
+      index = LogIndex.build(parts.toSeq)
       files = listing
     }
 
@@ -188,20 +181,42 @@ object Appender {
   /** One state per log, keyed by the log's qualified path. */
   private val states = new java.util.concurrent.ConcurrentHashMap[String, WriterState]()
 
+  private def keyOf(spark: SparkSession, logDir: String): String = {
+    val path = new Path(logDir)
+    path.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(path).toString
+  }
+
+  private def listingOf(spark: SparkSession, logDir: String): Set[(String, Long, Long)] =
+    ParquetDirs.visibleParquet(spark, logDir).map(s => (s.getPath.getName, s.getLen, s.getModificationTime)).toSet
+
   /** Run `f` on the state of the log at `logDir`, holding its lock, after
     * the listing check: a listing other than the one the state covers
     * (another writer, a copy, a deletion) reseeds it. */
   private def withState[T](spark: SparkSession, logDir: String)(f: WriterState => T): T = {
-    val path = new Path(logDir)
-    val key = path.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(path).toString
-    val st = states.computeIfAbsent(key, _ => new WriterState)
+    val st = states.computeIfAbsent(keyOf(spark, logDir), _ => new WriterState)
     st.synchronized {
-      val listing = ParquetDirs.visibleParquet(spark, logDir)
-        .map(s => (s.getPath.getName, s.getLen, s.getModificationTime)).toSet
+      val listing = listingOf(spark, logDir)
       if (listing != st.files) st.seed(spark, logDir, listing)
       f(st)
     }
   }
+
+  /** Run `f`, holding the lock, on the state of the log at the qualified
+    * path `key` when one exists and covers exactly `listing`. Never seeds:
+    * a log this JVM does not write has no state. */
+  private[append] def current[T](key: String, listing: Set[(String, Long, Long)])(f: WriterState => T): Option[T] =
+    Option(states.get(key)).flatMap(st => st.synchronized(if (st.files == listing) Some(f(st)) else None))
+
+  /** [[graft.streaming.Subscriptions.endOffset]] from a writer state that
+    * covers the directory's current listing: the stream's revision + 1 or
+    * the log's position + 1, with no Spark job; None when there is none. */
+  private[graft] def endOffset(spark: SparkSession, logDir: String, selector: StreamSelector): Option[Long] =
+    current(keyOf(spark, logDir), listingOf(spark, logDir)) { st =>
+      selector match {
+        case OneStream(s) => st.revisions.getOrElse(s, -1L) + 1L
+        case AllStreams   => st.maxPos + 1L
+      }
+    }
 
   private val toUtf8: Any => Any = v => UTF8String.fromString(v.asInstanceOf[String])
 
@@ -300,6 +315,7 @@ object Appender {
       var maxPos = st.maxPos
       val results = Seq.newBuilder[(String, AppendResult)]
       val rows = Seq.newBuilder[InternalRow]
+      val added = Seq.newBuilder[(String, String, Long, Long)] // for the index
       val revs = mutable.Map.empty[String, Long]
       val seen = mutable.Set.empty[(String, String)]
       for ((stream, events, expected) <- batches) {
@@ -312,6 +328,7 @@ object Appender {
           .foreach(u => throw EventConflict(stream, u))
         seen ++= uuids.map(stream -> _)
         rows ++= events.zipWithIndex.map { case (e, i) =>
+          added += ((stream, e.eventType, currentRev + 1L + i, maxPos + 1L + i))
           logRow(stream, e, currentRev + 1L + i, maxPos + 1L + i, created)
         }
         results += stream -> AppendResult(currentRev + 1L, currentRev + events.size,
@@ -322,6 +339,11 @@ object Appender {
       val file = try write(spark, logDir, rows.result())
       catch { case e: Throwable => st.files = null; throw e }
       st.files += ((file.getPath.getName, file.getLen, file.getModificationTime))
+      if (st.index != null) {
+        if (added.result().forall { case (s, t, r, p) => st.index.add(s, t, r, p) })
+          st.index.spans(file.getPath.getName) = (st.maxPos + 1L, maxPos)
+        else st.index = null
+      }
       st.revisions ++= revs
       st.tombstoned ++= batches.collect { case (s, es, _) if es.exists(_.eventType == TombstoneMarker) => s }
       st.maxPos = maxPos

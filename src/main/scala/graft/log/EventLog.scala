@@ -18,6 +18,17 @@ import graft.model._
  * `revision` (LONG, 0-based dense per stream), `position` (LONG, 1-based
  * dense global). All other columns pass through.
  *
+ * A bounded read (a count, or a one-row boundary read) of the bare
+ * relation `Appender.readLog` opens over a log this JVM writes runs no
+ * Spark job while the log's writer state covers the relation's listing
+ * snapshot (see [[graft.append.IndexedRead]]): the state's index picks the
+ * answer positions, evaluating [[predicates]]' server-side filter once per
+ * distinct stream or event type, and the driver reads only the files whose
+ * position span holds one, with the position range pushed into Spark's
+ * parquet reader. The rows it decodes are those files' rows, not the log's.
+ * Every other read, and a log that breaks the dense-revision or
+ * dense-position invariant, runs the plan below.
+ *
  * Scale notes (100 TB):
  *  - every predicate here is a plain comparison / StartsWith on a scan
  *    column — pushed into the parquet reader (row-group pruning on
@@ -31,7 +42,11 @@ import graft.model._
 object EventLog {
 
   /** Execute a bounded read. Result rows are sorted in read order. */
-  def read(events: DataFrame, opts: ReadOptions): DataFrame = {
+  def read(events: DataFrame, opts: ReadOptions): DataFrame =
+    graft.append.IndexedRead(events, opts).getOrElse(plan(events, opts))
+
+  /** The read as a Spark plan. */
+  private def plan(events: DataFrame, opts: ReadOptions): DataFrame = {
     val field = orderField(opts.selector)
     // Direction × origin semantics, incl. the degenerate boundary reads the
     // reference pins in tests (`streams_test.go:235-303`):

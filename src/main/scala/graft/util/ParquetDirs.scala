@@ -24,7 +24,12 @@ object ParquetDirs {
     }
   }
 
-  def readOrEmpty(spark: SparkSession, dir: String, schema: StructType): DataFrame =
-    if (visibleParquet(spark, dir).nonEmpty) spark.read.schema(schema).parquet(dir)
+  /** Spark's reader lists the directory itself, and reads one that holds
+    * no visible parquet as empty under `schema`; only a missing directory
+    * needs the empty DataFrame. */
+  def readOrEmpty(spark: SparkSession, dir: String, schema: StructType): DataFrame = {
+    val path = new Path(dir)
+    if (path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path)) spark.read.schema(schema).parquet(dir)
     else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+  }
 }
