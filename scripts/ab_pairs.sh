@@ -12,7 +12,9 @@
 # Prints, for each end-to-end metric of BENCHMARK.json, the median and
 # quartiles of each side and the number of pairs the change won, the
 # median per side of the workload's own metrics (the detail line's
-# `metrics`), then the failed ops and incorrect runs of each side. With
+# `metrics`) and of each number in its `context` (`jvm.jit_ms`,
+# `jvm.gc_ms`, `host.steal_pct`, ...), then the failed ops and incorrect
+# runs of each side. With
 # trace 1 the runs are traced (`--trace 1`): the end-to-end metrics come
 # from the detail line's `shared_metrics`, and the median per side of
 # every `log.*` and `append.*` layer metric is printed too. Runs one JVM
@@ -75,13 +77,18 @@ for m in spec["end_to_end"]:
     print(f"{name} ({m['unit']}, {m['better']} is better): parent median {pm:.3f} [q1 {p1:.3f}, q3 {p3:.3f}]"
           f"  change median {cm:.3f} [q1 {c1:.3f}, q3 {c3:.3f}]  delta {100 * (cm - pm) / pm:+.1f}%"
           f"  change better in {wins}/{len(seeds)} pairs")
+def number(v):  # a metric is {"value": x}, a context entry a bare x
+    v = v.get("value") if isinstance(v, dict) else v
+    return v if isinstance(v, (int, float)) and not isinstance(v, bool) else None
 def medians(title, key, keep):
     names = sorted({n for rs in runs.values() for r in rs.values() for n in r["detail"].get(key, {}) if keep(n)})
     for n in names:
-        per = {s: [r["detail"][key][n]["value"] for r in rs.values() if n in r["detail"].get(key, {})]
+        per = {s: [v for r in rs.values() if (v := number(r["detail"].get(key, {}).get(n))) is not None]
                for s, rs in runs.items()}
-        print(f"{title} {n}: parent median {q(per['parent'])[0]:.3f}  change median {q(per['change'])[0]:.3f}")
+        if per["parent"] or per["change"]:
+            print(f"{title} {n}: parent median {q(per['parent'])[0]:.3f}  change median {q(per['change'])[0]:.3f}")
 medians("metric", "metrics", lambda n: True)
+medians("context", "context", lambda n: True)
 medians("layer", "layers", lambda n: n.startswith(("log.", "append.")))
 for s in side:
     rs = side[s].values()

@@ -63,22 +63,25 @@ final case class AppendResult(firstRevision: Long, lastRevision: Long,
  * log's writer state (the reference's stream→revision metadata cache,
  * streams.go:61-91): each stream's revision and tombstone flag, the
  * global high-water position, and a 64-bit fingerprint of every
- * (stream, uuid) in the log. One scan of the log (1 Spark job) seeds
- * it; the state is then trusted only while the log directory's visible
- * parquet listing (name, size, mtime) is the one this writer left after
- * its last commit, so a file written, copied or deleted by anyone else
- * costs one reseed. A proposed uuid whose fingerprint is in the state is
- * confirmed by one exact (stream, uuid) query (1 job), so only a call
- * that repeats a pair, or a 64-bit collision, pays one. The rows are
- * written by [[write]] on the driver, as one parquet file. The same
- * state answers bounded reads of the log ([[LogIndex]], used by
- * `EventLog.read` and `Subscriptions.endOffset`) with no Spark job while
- * it covers the reader's listing; the seed scan and every commit keep
- * each stream's positions, one event-type id per position and each
- * file's position span for them. The state costs 20 bytes of driver
- * memory per event (8 for the sorted fingerprints, 8 for the position in
- * its stream's array, which grows by doubling, 4 for the type id), plus
- * one entry per stream, type and file, and lives as long as the JVM.
+ * (stream, uuid) in the log. The first write or bounded read of a log in
+ * this JVM builds its state with one fold on the driver: Spark's parquet
+ * reader reads each file, the files in parallel on Scala's global
+ * execution context, and no Spark job runs. Every later call lists the
+ * directory. A listing that only adds files to the one the state covers
+ * (another writer's `df.write`, a copied file) costs a fold of the added
+ * files alone; one in which a covered file changed or vanished costs a
+ * fold of the whole log; a directory that is gone releases the state. A
+ * proposed uuid whose fingerprint is in the state is confirmed by one
+ * exact (stream, uuid) query (1 job), so only a call that repeats a
+ * pair, or a 64-bit collision, pays one. The rows are written by
+ * [[write]] on the driver, as one parquet file. The same state answers
+ * bounded reads of the log ([[LogIndex]], used by `EventLog.read` and
+ * `Subscriptions.endOffset`) with no Spark job; the folds and every
+ * commit keep each stream's positions, one event-type id per position
+ * and each file's position span for them. The state costs 20 bytes of
+ * driver memory per event (8 for the sorted fingerprints, 8 for the
+ * position in its stream's array, which grows by doubling, 4 for the
+ * type id), plus one entry per stream, type and file.
  */
 object Appender {
 
@@ -104,14 +107,16 @@ object Appender {
              nowNanos: Long = System.nanoTime()): AppendResult =
     batchAppend(spark, logDir, Seq((stream, events, expected)), nowNanos).head._2
 
-  /** The (stream, uuid) fingerprint: Spark's `xxhash64` kernel, so the
-    * seed query's column and the driver's value agree bit for bit. */
+  /** The (stream, uuid) fingerprint: Spark's `xxhash64` kernel, the same
+    * for a proposed event as for a row folded from the log. */
   private val fingerprintExpr = new XxHash64(Seq(
     BoundReference(0, StringType, nullable = true), BoundReference(1, StringType, nullable = true)))
 
   private def fingerprint(stream: String, uuid: String): Long =
-    fingerprintExpr.eval(InternalRow(UTF8String.fromString(stream), UTF8String.fromString(uuid)))
-      .asInstanceOf[Long]
+    fingerprintOf(InternalRow(UTF8String.fromString(stream), UTF8String.fromString(uuid)))
+
+  /** The fingerprint of a row whose first two fields are the stream and the uuid. */
+  private[append] def fingerprintOf(row: InternalRow): Long = fingerprintExpr.eval(row).asInstanceOf[Long]
 
   private def mergeSorted(a: Array[Long], b: Array[Long]): Array[Long] = {
     val out = new Array[Long](a.length + b.length)
@@ -124,8 +129,16 @@ object Appender {
     out
   }
 
+  /** The sorted union of sorted arrays, merged pairwise in a balanced tree. */
+  private def mergeAll(as: Seq[Array[Long]]): Array[Long] =
+    if (as.size == 1) as.head
+    else mergeAll(as.grouped(2).map(g => if (g.size == 2) mergeSorted(g(0), g(1)) else g(0)).toSeq)
+
+  /** A visible file as the state records it: name, size and mtime. */
+  private[append] def entry(s: FileStatus): (String, Long, Long) = (s.getPath.getName, s.getLen, s.getModificationTime)
+
   /** What the single writer knows of one log. `files` is the visible
-    * listing the state covers (null: seed before use); `index` answers
+    * listing the state covers (null: fold before use); `index` answers
     * bounded reads (null: the log breaks one of its invariants). */
   private[append] final class WriterState {
     var files: Set[(String, Long, Long)] = null
@@ -135,29 +148,38 @@ object Appender {
     var fingerprints: Array[Long] = Array.emptyLongArray // sorted
     var index: LogIndex = null
     /** The last exact probe (pairs asked, pairs found); void after any
-      * commit or reseed, since either can add the pairs it missed. */
+      * commit or fold, since either can add the pairs it missed. */
     var probed: Option[(Set[(String, String)], Set[(String, String)])] = None
+    /** Rows read by the state's folds, over its life. */
+    private[graft] var rowsFolded = 0L
 
     def mayContain(fp: Long): Boolean = java.util.Arrays.binarySearch(fingerprints, fp) >= 0
 
-    /** One scan: per-partition dictionary-coded folds of (stream, event
-      * type, revision, position, fingerprint, file), merged on the driver. */
-    def seed(spark: SparkSession, logDir: String, listing: Set[(String, Long, Long)]): Unit = {
-      val parts = if (listing.isEmpty) Array.empty[SeedPart] else readLog(spark, logDir)
-        .select(col("stream"), col("event_type"), col("revision"), col("position"),
-          xxhash64(col("stream"), col("uuid")), input_file_name())
-        .queryExecution.toRdd.mapPartitions(rows => Iterator(SeedPart.fold(rows)))
-        .collect()
-      revisions.clear(); tombstoned.clear(); probed = None
-      for (pt <- parts; (s, k) <- pt.streams.zipWithIndex) {
-        revisions(s) = math.max(pt.maxRevision(k), revisions.getOrElse(s, -1L))
-        if (pt.tombstoned(k)) tombstoned += s
+    /** Bring the state to `listing`, the directory's visible files: when
+      * it keeps every covered file unchanged, fold only the files it adds;
+      * else fold the whole listing into an empty state. One driver-side
+      * fold per file ([[SeedPart.read]]); no Spark job. */
+    def refresh(spark: SparkSession, listing: Seq[FileStatus]): Unit = {
+      val now = listing.map(entry).toSet
+      if (now != files) {
+        val extend = files != null && files.subsetOf(now)
+        val parts = SeedPart.read(spark, if (extend) listing.filterNot(s => files(entry(s))) else listing)
+        if (!extend) {
+          revisions.clear(); tombstoned.clear(); maxPos = 0L
+          fingerprints = Array.emptyLongArray
+          index = new LogIndex
+        }
+        for (pt <- parts; (s, k) <- pt.streams.zipWithIndex) {
+          revisions(s) = math.max(pt.maxRevision(k), revisions.getOrElse(s, -1L))
+          if (pt.tombstoned(k)) tombstoned += s
+        }
+        maxPos = parts.map(_.hi).foldLeft(maxPos)(_ max _)
+        fingerprints = mergeAll(fingerprints +: parts.map(_.fingerprints))
+        if (index != null && !index.extend(parts)) index = null
+        rowsFolded += parts.map(_.position.length).sum
+        probed = None
+        files = now
       }
-      maxPos = parts.flatMap(_.position).maxOption.getOrElse(0L)
-      fingerprints = parts.flatMap(_.fingerprint)
-      java.util.Arrays.sort(fingerprints)
-      index = LogIndex.build(parts.toSeq)
-      files = listing
     }
 
     /** The pairs of `pairs` that are in the log, by one exact query; the
@@ -186,37 +208,53 @@ object Appender {
     path.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(path).toString
   }
 
-  private def listingOf(spark: SparkSession, logDir: String): Set[(String, Long, Long)] =
-    ParquetDirs.visibleParquet(spark, logDir).map(s => (s.getPath.getName, s.getLen, s.getModificationTime)).toSet
+  /** The directory's visible parquet files; None when it does not exist. */
+  private def listingOf(spark: SparkSession, logDir: String): Option[Seq[FileStatus]] = {
+    val files = ParquetDirs.visibleParquet(spark, logDir)
+    val path = new Path(logDir)
+    if (files.nonEmpty || path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path)) Some(files)
+    else None
+  }
 
   /** Run `f` on the state of the log at `logDir`, holding its lock, after
-    * the listing check: a listing other than the one the state covers
-    * (another writer, a copy, a deletion) reseeds it. */
+    * its refresh to the directory's listing (empty when the directory is
+    * missing: the write creates it). */
   private def withState[T](spark: SparkSession, logDir: String)(f: WriterState => T): T = {
     val st = states.computeIfAbsent(keyOf(spark, logDir), _ => new WriterState)
     st.synchronized {
-      val listing = listingOf(spark, logDir)
-      if (listing != st.files) st.seed(spark, logDir, listing)
+      st.refresh(spark, listingOf(spark, logDir).getOrElse(Nil))
       f(st)
     }
   }
 
-  /** Run `f`, holding the lock, on the state of the log at the qualified
-    * path `key` when one exists and covers exactly `listing`. Never seeds:
-    * a log this JVM does not write has no state. */
-  private[append] def current[T](key: String, listing: Set[(String, Long, Long)])(f: WriterState => T): Option[T] =
-    Option(states.get(key)).flatMap(st => st.synchronized(if (st.files == listing) Some(f(st)) else None))
-
-  /** [[graft.streaming.Subscriptions.endOffset]] from a writer state that
-    * covers the directory's current listing: the stream's revision + 1 or
-    * the log's position + 1, with no Spark job; None when there is none. */
-  private[graft] def endOffset(spark: SparkSession, logDir: String, selector: StreamSelector): Option[Long] =
-    current(keyOf(spark, logDir), listingOf(spark, logDir)) { st =>
-      selector match {
-        case OneStream(s) => st.revisions.getOrElse(s, -1L) + 1L
-        case AllStreams   => st.maxPos + 1L
+  /** Run `f`, holding the lock, on the state of the log at `logDir` after
+    * its refresh to the directory's listing. None when the directory is
+    * gone, and then its state is released. */
+  private[append] def refreshed[T](spark: SparkSession, logDir: String)(f: WriterState => T): Option[T] = {
+    val key = keyOf(spark, logDir)
+    val st = states.computeIfAbsent(key, _ => new WriterState)
+    st.synchronized {
+      listingOf(spark, logDir) match {
+        case Some(listing) => st.refresh(spark, listing); Some(f(st))
+        case None          => states.remove(key, st); None
       }
     }
+  }
+
+  /** The state of the log at `logDir`, if this JVM holds one. */
+  private[append] def stateOf(spark: SparkSession, logDir: String): Option[WriterState] =
+    Option(states.get(keyOf(spark, logDir)))
+
+  /** [[graft.streaming.Subscriptions.endOffset]] from the log's writer
+    * state: the stream's revision + 1 or the log's position + 1, with no
+    * Spark job; a missing log is empty. */
+  private[graft] def endOffset(spark: SparkSession, logDir: String, selector: StreamSelector): Long = {
+    def end(st: WriterState) = selector match {
+      case OneStream(s) => st.revisions.getOrElse(s, -1L) + 1L
+      case AllStreams   => st.maxPos + 1L
+    }
+    refreshed(spark, logDir)(end).getOrElse(end(new WriterState))
+  }
 
   private val toUtf8: Any => Any = v => UTF8String.fromString(v.asInstanceOf[String])
 
@@ -338,7 +376,7 @@ object Appender {
       }
       val file = try write(spark, logDir, rows.result())
       catch { case e: Throwable => st.files = null; throw e }
-      st.files += ((file.getPath.getName, file.getLen, file.getModificationTime))
+      st.files += entry(file)
       if (st.index != null) {
         if (added.result().forall { case (s, t, r, p) => st.index.add(s, t, r, p) })
           st.index.spans(file.getPath.getName) = (st.maxPos + 1L, maxPos)

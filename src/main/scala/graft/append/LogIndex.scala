@@ -1,6 +1,8 @@
 package graft.append
 
 import scala.collection.mutable
+import scala.concurrent.{Await, Future}
+import scala.concurrent.duration.Duration
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.FileStatus
@@ -49,47 +51,68 @@ private final class Ints {
   }
 }
 
-/** One partition of the writer state's seed scan, dictionary-coded: row i
-  * is (`streams(stream(i))`, `types(tpe(i))`, `revision(i)`,
-  * `position(i)`, `fingerprint(i)`); stream k's max revision is
-  * `maxRevision(k)` and `tombstoned(k)` says whether it has a tombstone;
-  * `files` holds each file's name and its min and max position. */
+/** One file of the log, folded for the writer state, dictionary-coded: row
+  * i is (`streams(stream(i))`, `types(tpe(i))`, `revision(i)`,
+  * `position(i)`); stream k's max revision is `maxRevision(k)` and
+  * `tombstoned(k)` says whether it has a tombstone; `fingerprints` are
+  * the rows' (stream, uuid) fingerprints, sorted; `lo` and `hi` are the
+  * file's min and max position (Long.MaxValue and Long.MinValue when it
+  * has no rows). */
 private[append] final case class SeedPart(
-    streams: Array[String], maxRevision: Array[Long], tombstoned: Array[Boolean],
-    types: Array[String], files: Array[(String, Long, Long)],
-    stream: Array[Int], tpe: Array[Int], revision: Array[Long], position: Array[Long],
-    fingerprint: Array[Long])
+    file: String, streams: Array[String], maxRevision: Array[Long], tombstoned: Array[Boolean],
+    types: Array[String], stream: Array[Int], tpe: Array[Int], revision: Array[Long], position: Array[Long],
+    fingerprints: Array[Long], lo: Long, hi: Long)
 
 private[append] object SeedPart {
-  /** Rows of (stream, event type, revision, position, fingerprint, input
-    * file), read as Spark's internal rows: a file's name is decoded once
-    * per run of its rows, not per row. */
-  def fold(rows: Iterator[InternalRow]): SeedPart = {
-    val streams, types = mutable.LinkedHashMap.empty[String, Int]
+  /** The columns a fold reads, in this order: the fingerprint hashes the first two. */
+  private val columns = StructType(Seq("stream", "uuid", "event_type", "revision", "position")
+    .map(Subscriptions.eventSchema(_)))
+
+  private val tombstone = UTF8String.fromString(Appender.TombstoneMarker)
+
+  /** The parts of `files`, one per file, folded in parallel on Scala's
+    * global execution context from Spark's parquet reader. Runs no Spark job. */
+  def read(spark: SparkSession, files: Seq[FileStatus]): Seq[SeedPart] =
+    if (files.isEmpty) Nil
+    else {
+      import scala.concurrent.ExecutionContext.Implicits.global
+      val open = IndexedRead.reader(spark, Subscriptions.eventSchema, columns, Nil, Map.empty)
+      Await.result(Future.traverse(files)(s => Future(IndexedRead.rowsOf(open, s)(fold(s.getPath.getName, _)))),
+        Duration.Inf)
+    }
+
+  /** Rows of [[columns]] from the file `file`, read as Spark's internal
+    * rows: a stream or type name is decoded once per part, not per row. */
+  private def fold(file: String, rows: Iterator[InternalRow]): SeedPart = {
+    val (streamIds, typeIds) = (mutable.HashMap.empty[UTF8String, Int], mutable.HashMap.empty[UTF8String, Int])
+    val (streams, types) = (mutable.ArrayBuffer.empty[String], mutable.ArrayBuffer.empty[String])
     val (maxRev, tomb) = (mutable.ArrayBuffer.empty[Long], mutable.ArrayBuffer.empty[Boolean])
-    val files = mutable.HashMap.empty[String, (Long, Long)]
     val (s, t) = (mutable.ArrayBuilder.make[Int], mutable.ArrayBuilder.make[Int])
     val (rev, pos, fps) = (mutable.ArrayBuilder.make[Long], mutable.ArrayBuilder.make[Long], mutable.ArrayBuilder.make[Long])
-    var (file, name) = (UTF8String.EMPTY_UTF8, "")
-    def str(row: InternalRow, i: Int) = if (row.isNullAt(i)) null else row.getUTF8String(i).toString
+    var (lo, hi) = (Long.MaxValue, Long.MinValue)
+    def id(ids: mutable.HashMap[UTF8String, Int], names: mutable.ArrayBuffer[String], v: UTF8String): Int =
+      ids.getOrElse(v, {
+        ids(if (v == null) null else v.clone()) = names.size
+        names += (if (v == null) null else v.toString)
+        names.size - 1
+      })
+    def utf8(row: InternalRow, i: Int) = if (row.isNullAt(i)) null else row.getUTF8String(i)
     rows.foreach { row =>
-      if (row.isNullAt(2) || row.isNullAt(3)) throw new IllegalStateException("a log row has a null revision or position")
-      val (st, et, r, p) = (str(row, 0), str(row, 1), row.getLong(2), row.getLong(3))
-      val k = streams.getOrElseUpdate(st, { maxRev += -1L; tomb += false; streams.size })
+      if (row.isNullAt(3) || row.isNullAt(4)) throw new IllegalStateException("a log row has a null revision or position")
+      val (et, r, p) = (utf8(row, 2), row.getLong(3), row.getLong(4))
+      val k = id(streamIds, streams, utf8(row, 0))
+      if (k == maxRev.size) { maxRev += -1L; tomb += false }
       maxRev(k) = maxRev(k) max r
-      tomb(k) ||= et == Appender.TombstoneMarker
+      tomb(k) ||= et == tombstone
       s += k
-      t += types.getOrElseUpdate(et, types.size)
-      rev += r; pos += p; fps += row.getLong(4)
-      if (row.getUTF8String(5) != file) {
-        file = row.getUTF8String(5).clone()
-        name = SparkPath.fromUrlString(file.toString).toPath.getName
-      }
-      files(name) = files.get(name).fold((p, p)) { case (lo, hi) => (lo min p, hi max p) }
+      t += id(typeIds, types, et)
+      rev += r; pos += p; fps += Appender.fingerprintOf(row)
+      lo = lo min p; hi = hi max p
     }
-    SeedPart(streams.keys.toArray, maxRev.toArray, tomb.toArray, types.keys.toArray,
-      files.map { case (f, (lo, hi)) => (f, lo, hi) }.toArray,
-      s.result(), t.result(), rev.result(), pos.result(), fps.result())
+    val fingerprints = fps.result()
+    java.util.Arrays.sort(fingerprints)
+    SeedPart(file, streams.toArray, maxRev.toArray, tomb.toArray, types.toArray,
+      s.result(), t.result(), rev.result(), pos.result(), fingerprints, lo, hi)
   }
 }
 
@@ -125,6 +148,26 @@ private[append] final class LogIndex {
         true
       }
     }
+
+  /** Add the rows of `parts`, which must continue the positions densely;
+    * false (and the index is void) when they do not, or a row breaks an
+    * invariant. */
+  def extend(parts: Seq[SeedPart]): Boolean = {
+    val (base, n) = (maxPos, parts.map(_.position.length).sum)
+    // the (part, row) at each position base+1..base+n; a gap or repeat shows as a miss
+    val (part, row) = (Array.fill(n)(-1), new Array[Int](n))
+    val dense = parts.indices.forall { k =>
+      parts(k).position.indices.forall { i =>
+        val j = parts(k).position(i) - base - 1L
+        j >= 0L && j < n && part(j.toInt) < 0 && { part(j.toInt) = k; row(j.toInt) = i; true }
+      }
+    }
+    for (pt <- parts if pt.position.nonEmpty) spans(pt.file) = (pt.lo, pt.hi)
+    dense && (0 until n).forall { j =>
+      val (pt, i) = (parts(part(j)), row(j))
+      add(pt.streams(pt.stream(i)), pt.types(pt.tpe(i)), pt.revision(i), base + j + 1L)
+    }
+  }
 
   /**
    * The positions a read of at most `n` rows returns, in read order.
@@ -172,39 +215,18 @@ private[append] final class LogIndex {
   }
 }
 
-private[append] object LogIndex {
-  /** The index of a seeded log, or null when the log breaks an invariant. */
-  def build(parts: Seq[SeedPart]): LogIndex = {
-    val n = parts.map(_.position.length).sum
-    // the (part, row) at each position 1..n; a gap or repeat shows as a miss
-    val (part, row) = (Array.fill(n)(-1), new Array[Int](n))
-    val dense = parts.indices.forall { k =>
-      parts(k).position.indices.forall { i =>
-        val p = parts(k).position(i)
-        p >= 1 && p <= n && part((p - 1).toInt) < 0 && { part((p - 1).toInt) = k; row((p - 1).toInt) = i; true }
-      }
-    }
-    val idx = new LogIndex
-    val ok = dense && (0 until n).forall { j =>
-      val (pt, i) = (parts(part(j)), row(j))
-      idx.add(pt.streams(pt.stream(i)), pt.types(pt.tpe(i)), pt.revision(i), j + 1L)
-    }
-    for (pt <- parts; (f, lo, hi) <- pt.files)
-      idx.spans(f) = idx.spans.get(f).fold((lo, hi)) { case (a, b) => (a min lo, b max hi) }
-    if (ok) idx else null
-  }
-}
-
 /**
- * Bounded reads of a log this JVM writes, answered on the driver with no
- * Spark job: the writer state's [[LogIndex]] picks the rows, Spark's
- * parquet reader fetches them from the files that hold them.
+ * Bounded reads of a log, answered on the driver with no Spark job: the
+ * log's writer state, refreshed to the directory's listing, picks the rows
+ * from its [[LogIndex]], and Spark's parquet reader fetches them from the
+ * files that hold them.
  */
 private[graft] object IndexedRead {
 
   /** The rows `EventLog.read(events, opts)` returns, or None when
     * `events` is not a bare parquet relation over one log directory whose
-    * listing snapshot the writer state covers, or the read is unbounded. */
+    * listing snapshot is the writer state's after its refresh, or the
+    * read is unbounded. */
   def apply(events: DataFrame, opts: ReadOptions): Option[DataFrame] =
     for {
       n <- ((opts.direction, opts.from) match {
@@ -214,13 +236,12 @@ private[graft] object IndexedRead {
       (r, files) <- logRelation(events)
       root = files.rootPaths.head
       statuses = files.allFiles()
-      listing = statuses.map(s => (s.getPath.getName, s.getLen, s.getModificationTime)).toSet
-      if statuses.forall(_.getPath.getParent == root) &&
-        Appender.current(root.toString, listing)(_.index != null).contains(true)
+      if statuses.forall(_.getPath.getParent == root)
+      snapshot = statuses.map(Appender.entry).toSet
       spark = events.sparkSession
       (filter, all) = predicates(spark, r.dataSchema, opts)
-      (wanted, spans) <- Appender.current(root.toString, listing) { st =>
-        Option(st.index).map { idx =>
+      (wanted, spans) <- Appender.refreshed(spark, root.toString) { st =>
+        Option(st.index).filter(_ => st.files == snapshot).map { idx =>
           val probe = new GenericInternalRow(r.dataSchema.length)
           val wanted = idx.pick(opts, n, (target, v) => {
             val field = target match { case OnStreamId => "stream"; case OnEventType => "event_type" }
@@ -269,6 +290,21 @@ private[graft] object IndexedRead {
     }
   }
 
+  /** Spark's parquet reader, run on the driver: each file's rows of
+    * `required`, one internal row at a time. */
+  private[append] def reader(spark: SparkSession, data: StructType, required: StructType,
+                             filters: Seq[sources.Filter], options: Map[String, String]): PartitionedFile => Iterator[InternalRow] =
+    new ParquetFileFormat().buildReaderWithPartitionValues(spark, data, new StructType(), required, filters,
+      options + (FileFormat.OPTION_RETURNING_BATCH -> "false"), spark.sessionState.newHadoopConfWithOptions(options))
+
+  /** `f` over the rows `read` yields for the whole file `s`; the file is
+    * closed when `f` returns. */
+  private[append] def rowsOf[T](read: PartitionedFile => Iterator[InternalRow], s: FileStatus)(f: Iterator[InternalRow] => T): T = {
+    val rows = read(PartitionedFile(InternalRow.empty, SparkPath.fromFileStatus(s), 0L, s.getLen,
+      modificationTime = s.getModificationTime, fileSize = s.getLen))
+    try f(rows) finally rows match { case c: java.io.Closeable => c.close(); case _ => }
+  }
+
   /** The rows at `wanted`, in its order, read on the driver from the files
     * whose position span holds one; None when one is missing. */
   private def fetch(spark: SparkSession, r: HadoopFsRelation, statuses: Seq[FileStatus],
@@ -284,18 +320,13 @@ private[graft] object IndexedRead {
     val found = mutable.LongMap.empty[InternalRow]
     if (files.nonEmpty) {
       val posField = r.dataSchema.fieldIndex("position")
-      val read = new ParquetFileFormat().buildReaderWithPartitionValues(spark, r.dataSchema, r.partitionSchema,
-        r.dataSchema, Seq(sources.GreaterThanOrEqual("position", sorted.head), sources.LessThanOrEqual("position", sorted.last)),
-        r.options + (FileFormat.OPTION_RETURNING_BATCH -> "false"),
-        spark.sessionState.newHadoopConfWithOptions(r.options))
-      for (s <- files) {
-        val rows = read(PartitionedFile(InternalRow.empty, SparkPath.fromFileStatus(s), 0L, s.getLen,
-          modificationTime = s.getModificationTime, fileSize = s.getLen))
-        try rows.foreach { row =>
-          val p = row.getLong(posField)
-          if (java.util.Arrays.binarySearch(sorted, p) >= 0) found(p) = row.copy()
-        } finally rows match { case c: java.io.Closeable => c.close(); case _ => }
-      }
+      val read = reader(spark, r.dataSchema, r.dataSchema,
+        Seq(sources.GreaterThanOrEqual("position", sorted.head), sources.LessThanOrEqual("position", sorted.last)),
+        r.options)
+      for (s <- files) rowsOf(read, s)(_.foreach { row =>
+        val p = row.getLong(posField)
+        if (java.util.Arrays.binarySearch(sorted, p) >= 0) found(p) = row.copy()
+      })
     }
     if (wanted.forall(found.contains)) Some(wanted.toSeq.map(found)) else None
   }

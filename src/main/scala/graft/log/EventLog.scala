@@ -19,15 +19,19 @@ import graft.model._
  * dense global). All other columns pass through.
  *
  * A bounded read (a count, or a one-row boundary read) of the bare
- * relation `Appender.readLog` opens over a log this JVM writes runs no
- * Spark job while the log's writer state covers the relation's listing
- * snapshot (see [[graft.append.IndexedRead]]): the state's index picks the
- * answer positions, evaluating [[predicates]]' server-side filter once per
- * distinct stream or event type, and the driver reads only the files whose
- * position span holds one, with the position range pushed into Spark's
- * parquet reader. The rows it decodes are those files' rows, not the log's.
- * Every other read, and a log that breaks the dense-revision or
- * dense-position invariant, runs the plan below.
+ * relation `Appender.readLog` opens over a log directory runs no Spark
+ * job (see [[graft.append.IndexedRead]]). It refreshes the log's writer
+ * state to the directory's listing, which the first read or write in
+ * this JVM builds and a new file extends, both by a fold on the driver.
+ * When the state then covers the relation's listing snapshot, its index
+ * picks the answer positions, evaluating [[predicates]]' server-side
+ * filter once per distinct stream or event type, and the driver reads
+ * only the files whose position span holds one, with the position range
+ * pushed into Spark's parquet reader. The rows it decodes are those
+ * files' rows, not the log's. Every other read (another relation, a
+ * DataFrame opened before the log changed, an unbounded read), and a log
+ * that breaks the dense-revision or dense-position invariant, runs the
+ * plan below.
  *
  * Scale notes (100 TB):
  *  - every predicate here is a plain comparison / StartsWith on a scan

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.log.EventLog
@@ -75,22 +74,12 @@ object Subscriptions {
   /**
    * Live-only start point: the first yet-unwritten offset of the log
    * (`max + 1`), resolved at subscribe time from the log's writer state
-   * when this JVM writes the log and its state is current (no Spark job),
-   * else with one batch aggregation — the reference's
+   * with no Spark job (the first use of the state folds the log on the
+   * driver; a missing log is empty) — the reference's
    * subscribe-from-current-end (`streams/streams.go:244-252`).
    * Events appended after this call flow; history does not. Stream
    * subscriptions track revision, `$all` subscriptions track position.
    */
   def endOffset(spark: SparkSession, logDir: String, selector: StreamSelector): Long =
-    graft.append.Appender.endOffset(spark, logDir, selector).getOrElse {
-      val log = graft.append.Appender.readLog(spark, logDir)
-      selector match {
-        case OneStream(s) =>
-          val r = log.filter(col("stream") === s).agg(max(col("revision"))).head()
-          (if (r.isNullAt(0)) -1L else r.getLong(0)) + 1L
-        case AllStreams =>
-          val r = log.agg(max(col("position"))).head()
-          (if (r.isNullAt(0)) 0L else r.getLong(0)) + 1L
-      }
-    }
+    graft.append.Appender.endOffset(spark, logDir, selector)
 }

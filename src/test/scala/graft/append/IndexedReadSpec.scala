@@ -12,10 +12,11 @@ import graft.streaming.Subscriptions
 import graft.util.ParquetDirs
 
 /**
- * Bounded reads of a log whose writer state is current: answered from the
- * state's index and a driver-side parquet read, with no Spark job, and
- * row for row what the Spark plan returns. Every other input (a foreign
- * file, a stale DataFrame, an irregular log) keeps the Spark plan.
+ * Bounded reads of a log through its writer state: the first read folds
+ * the state on the driver and a new file extends it, so reads are
+ * answered from the state's index and a driver-side parquet read, with no
+ * Spark job, and row for row what the Spark plan returns. A stale
+ * DataFrame and an irregular log keep the Spark plan.
  */
 class IndexedReadSpec extends SparkSpec {
 
@@ -38,6 +39,8 @@ class IndexedReadSpec extends SparkSpec {
   }
 
   private def rows(df: DataFrame): Seq[Row] = df.collect().toSeq
+
+  private def folded(dir: String): Long = Appender.stateOf(spark, dir).fold(0L)(_.rowsFolded)
 
   /** The Spark plan's answer: a projection is not the bare relation. */
   private def planned(dir: String, opts: ReadOptions): Seq[Row] =
@@ -89,7 +92,7 @@ class IndexedReadSpec extends SparkSpec {
     }
   }
 
-  test("a foreign df.write and a stale DataFrame take the Spark plan and stay correct") {
+  test("a stale DataFrame takes the Spark plan, a foreign df.write is folded alone, and both stay correct") {
     val dir = populated()
     val opts = ReadOptions(AllStreams, Backwards, FromEnd, Some(4))
     val stale = Appender.readLog(spark, dir)
@@ -102,9 +105,11 @@ class IndexedReadSpec extends SparkSpec {
     Seq(("s-3", "foreign-1", "a", "{}", Map("type" -> "a", "content-type" -> "ct"), null: String, 5L, 26L))
       .toDF("stream", "uuid", "event_type", "data", "metadata", "custom_metadata", "revision", "position")
       .write.mode("append").parquet(dir)
-    assert(jobsOf { got = rows(EventLog.read(Appender.readLog(spark, dir), opts)) } > 0)
+    val before = folded(dir)
+    assert(jobsOf { got = rows(EventLog.read(Appender.readLog(spark, dir), opts)) } == 0)
+    assert(folded(dir) - before == 1L)
     assert(got == planned(dir, opts) && got.head.getAs[Long]("position") == 26L)
-    // the next write reseeds, and reads are indexed again
+    // the next write finds the state current, and reads stay indexed
     Appender.append(spark, dir, "s-3", events("b"), ExactRevision(5))
     assert(jobsOf { got = rows(EventLog.read(Appender.readLog(spark, dir), opts)) } == 0)
     assert(got == planned(dir, opts) && got.map(_.getAs[Long]("position")) == Seq(27L, 26L, 25L, 24L))
@@ -132,6 +137,40 @@ class IndexedReadSpec extends SparkSpec {
       .toDF("stream", "uuid", "event_type", "data", "metadata", "custom_metadata", "revision", "position")
       .write.mode("append").parquet(dir)
     val e = intercept[Exception](Appender.append(spark, dir, "x", events("b")))
+    assert(e.getMessage.contains("null revision or position"), e.getMessage)
+  }
+
+  test("a read of a log this JVM never wrote folds its state with no Spark job, and equals the plan") {
+    import spark.implicits._
+    val dir = freshLog()
+    val types = Seq("a", "b", "c", "d")
+    // 60 events over 5 streams, dense revisions and positions, in 3 files whose positions interleave
+    (1L to 60L).map { p =>
+      val s = (p % 5).toInt
+      (s"s-$s", s"f-$p", types((p % 4).toInt), "{}", Map("type" -> types((p % 4).toInt), "content-type" -> "ct"),
+        null: String, (p - 1) / 5, p)
+    }.toDF("stream", "uuid", "event_type", "data", "metadata", "custom_metadata", "revision", "position")
+      .repartition(3).write.mode("append").parquet(dir)
+    assert(Appender.stateOf(spark, dir).isEmpty)
+    val opts = ReadOptions(OneStream("s-2"), Backwards, FromEnd, Some(5), Some(PrefixFilter(OnEventType, Seq("b", "c"))))
+    var got: Seq[Row] = Nil
+    assert(jobsOf { got = rows(EventLog.read(Appender.readLog(spark, dir), opts)) } == 0)
+    assert(folded(dir) == 60L)
+    assert(got == planned(dir, opts) && got.map(_.getAs[Long]("position")) == Seq(57L, 42L, 37L, 22L, 17L))
+    val all = grid.filter(_.selector == AllStreams)
+    val want = all.map(planned(dir, _))
+    assert(jobsOf { for ((o, w) <- all.zip(want)) assert(rows(EventLog.read(Appender.readLog(spark, dir), o)) == w, s"$o") } == 0)
+    assert(folded(dir) == 60L)
+  }
+
+  test("a read of a log with a null position fails loudly, as a write does") {
+    import spark.implicits._
+    val dir = freshLog()
+    Seq(("x", "u-1", "a", "{}", Map("type" -> "a"), null: String, 0L, Option.empty[Long]))
+      .toDF("stream", "uuid", "event_type", "data", "metadata", "custom_metadata", "revision", "position")
+      .write.mode("append").parquet(dir)
+    val e = intercept[IllegalStateException](
+      EventLog.read(Appender.readLog(spark, dir), ReadOptions(AllStreams, Forwards, FromStart, Some(5))))
     assert(e.getMessage.contains("null revision or position"), e.getMessage)
   }
 

@@ -13,9 +13,10 @@ import graft.streaming.{LogSink, Subscriptions}
 
 /**
  * The append path's steady state: preconditions from the writer state
- * (no Spark job), one driver-written parquet file per call, a reseed
- * after any foreign change to the log's listing, and files that every
- * reader of the log reads back unchanged.
+ * (no Spark job), one driver-written parquet file per call, a fold of
+ * only the added files after a foreign write, a fold of the whole log
+ * after a covered file changes or vanishes, and files that every reader
+ * of the log reads back unchanged.
  */
 class WriterStateSpec extends SparkSpec {
 
@@ -35,6 +36,8 @@ class WriterStateSpec extends SparkSpec {
   private def log(dir: String): Seq[(String, String, Long, Long)] =
     Appender.readLog(spark, dir).select("stream", "uuid", "revision", "position").collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3))).sortBy(_._4).toSeq
+
+  private def folded(dir: String): Long = Appender.stateOf(spark, dir).fold(0L)(_.rowsFolded)
 
   /** A non-empty log whose writer state is seeded. */
   private def seededLog(): String = {
@@ -68,7 +71,7 @@ class WriterStateSpec extends SparkSpec {
     assert(log(dir).map(_._4) == (1L to 17L))
   }
 
-  test("a file written by another writer costs one reseed; the next calls continue its revisions and positions") {
+  test("a file written by another writer costs a fold of that file alone; the next calls continue its revisions and positions") {
     val dir = seededLog()
     import spark.implicits._
     Seq(("s", "foreign-1", "event-type", "{}", Map("type" -> "event-type", "content-type" -> "ct"),
@@ -76,9 +79,10 @@ class WriterStateSpec extends SparkSpec {
       .toDF("stream", "uuid", "event_type", "data", "metadata", "custom_metadata", "revision", "position")
       .write.mode("append").parquet(dir)
     var r: AppendResult = null
+    val before = folded(dir)
     val reseed = jobsOf { r = Appender.append(spark, dir, "s", events(2), ExactRevision(5)) }
     assert(r == AppendResult(6L, 7L, 10L, 11L))
-    assert(reseed == 1, s"a reseed is one scan, ran $reseed jobs")
+    assert(reseed == 0 && folded(dir) - before == 1L, s"the fold of the foreign file ran $reseed jobs")
     val foreign = ProposedEvent("foreign-1", "t", "{}", Map("type" -> "t", "content-type" -> "ct"))
     val c = intercept[EventConflict](Appender.append(spark, dir, "s", events(1) :+ foreign))
     assert(c.stream == "s" && c.uuid == "foreign-1")
@@ -170,6 +174,36 @@ class WriterStateSpec extends SparkSpec {
     val r = Appender.append(spark, dir, "s", events(1), ExactRevision(2))
     assert(r == AppendResult(3L, 3L, 6L, 6L))
     assert(log(dir).map(_._4) == (1L to 6L))
+  }
+
+  test("a covered file that is rewritten or deleted refolds the whole log") {
+    val dir = seededLog()
+    Appender.append(spark, dir, "s", events(2), ExactRevision(4))
+    val files = visibleFiles(dir).map(new File(dir, _))
+    assert(files.size == 3 && log(dir).size == 10)
+    // the same bytes under a new mtime: the whole log is folded again
+    val before = folded(dir)
+    assert(files.head.setLastModified(files.head.lastModified() - 60000L))
+    assert(jobsOf(Appender.append(spark, dir, "t", events(1), ExactRevision(1))) == 0)
+    assert(folded(dir) - before == 10L)
+    // a deleted file: the rest of the log is folded again, and the next call continues it
+    val gone = files.find(f => spark.read.parquet(f.toString).count() == 5L).get
+    val rest = folded(dir)
+    assert(gone.delete())
+    assert(Appender.append(spark, dir, "t", events(1), ExactRevision(2)) == AppendResult(3L, 3L, 12L, 12L))
+    assert(folded(dir) - rest == 6L)
+    assert(log(dir).map(_._4) == (6L to 12L))
+  }
+
+  test("a deleted log's state is released, and a write after it starts a new log") {
+    val dir = seededLog()
+    assert(Appender.stateOf(spark, dir).isDefined)
+    for (f <- names(dir)) new File(dir, f).delete()
+    assert(new File(dir).delete())
+    assert(Subscriptions.endOffset(spark, dir, AllStreams) == 1L)
+    assert(Appender.stateOf(spark, dir).isEmpty)
+    assert(Appender.append(spark, dir, "s", events(1), NoStream) == AppendResult(0L, 0L, 1L, 1L))
+    assert(Appender.stateOf(spark, dir).exists(_.maxPos == 1L))
   }
 
   test("a redelivered LogSink micro-batch runs at most 2 jobs and writes nothing") {
