@@ -10,7 +10,14 @@
 # both sides alike. Both output lines of each run (the detail object and
 # the result) go to <side>.jsonl in that directory.
 # Prints, for each end-to-end metric of BENCHMARK.json, the median and
-# quartiles of each side and the number of pairs the change won, the
+# quartiles of each side and the number of pairs the change won, and a
+# verdict by the rules of a paired A/B: a gain when the change wins at
+# least 9/10 of the pairs and the medians differ by more than the
+# parent's interquartile range; a regression when the change's median is
+# worse than the parent's by more than the metric's BENCHMARK.json
+# `bound`, read as a fraction of the parent median; "unresolved" when the
+# parent's IQR exceeds that bound, unless every change run beats every
+# parent run. Then it prints the
 # median per side of the workload's own metrics (the detail line's
 # `metrics`) and of each number in its `context` (`jvm.jit_ms`,
 # `jvm.gc_ms`, `host.steal_pct`, ...), then the failed ops and incorrect
@@ -54,7 +61,7 @@ for ((i = 0; i < PAIRS; i++)); do
 done
 
 python3 - "$AB" <<'EOF'
-import json, statistics, sys
+import json, math, statistics, sys
 ab = sys.argv[1]
 spec = json.load(open("BENCHMARK.json"))
 runs = {s: {r["seed"]: r for r in map(json.loads, open(f"{ab}/{s}.jsonl"))} for s in ("parent", "change")}
@@ -77,6 +84,22 @@ for m in spec["end_to_end"]:
     print(f"{name} ({m['unit']}, {m['better']} is better): parent median {pm:.3f} [q1 {p1:.3f}, q3 {p3:.3f}]"
           f"  change median {cm:.3f} [q1 {c1:.3f}, q3 {c3:.3f}]  delta {100 * (cm - pm) / pm:+.1f}%"
           f"  change better in {wins}/{len(seeds)} pairs")
+    # a gain needs 9/10 of the pairs and a median gap above the parent's IQR;
+    # the no-regression rule reads BENCHMARK.json's bound as a fraction of the parent median
+    gap, iqr, bound = (pm - cm) if lower else (cm - pm), p3 - p1, m["bound"]
+    gain = wins >= 0.9 * len(seeds) and gap > iqr
+    beats_all = bool(seeds) and all((c < p) == lower and c != p
+                                    for c in (vals["change"][k] for k in seeds) for p in (vals["parent"][k] for k in seeds))
+    if beats_all:
+        regress = "no regression (every change run beats every parent run)"
+    elif iqr > bound * pm:
+        regress = f"unresolved (parent IQR {iqr:.3f} exceeds the bound, {bound:.0%} of the parent median = {bound * pm:.3f})"
+    elif -gap > bound * pm:
+        regress = f"REGRESSION (change worse by {-gap:.3f}, over {bound:.0%} of the parent median = {bound * pm:.3f})"
+    else:
+        regress = f"no regression (change worse by at most {bound:.0%} of the parent median = {bound * pm:.3f})"
+    print(f"verdict {name}: gain {'yes' if gain else 'no'} (change better in {wins}/{len(seeds)} pairs, needs"
+          f" {math.ceil(0.9 * len(seeds))}; median gap {gap:.3f} vs parent IQR {iqr:.3f}); {regress}")
 def number(v):  # a metric is {"value": x}, a context entry a bare x
     v = v.get("value") if isinstance(v, dict) else v
     return v if isinstance(v, (int, float)) and not isinstance(v, bool) else None

@@ -14,7 +14,6 @@ import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.execution.datasources.{FileFormat, HadoopFsRelation, InMemoryFileIndex, LogicalRelation, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions.lit
-import org.apache.spark.sql.sources
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -71,14 +70,22 @@ private[append] object SeedPart {
   private val tombstone = UTF8String.fromString(Appender.TombstoneMarker)
 
   /** The parts of `files`, one per file, folded in parallel on Scala's
-    * global execution context from Spark's parquet reader. Runs no Spark job. */
+    * global execution context from Spark's parquet reader, run on the
+    * driver over each whole file. Runs no Spark job. */
   def read(spark: SparkSession, files: Seq[FileStatus]): Seq[SeedPart] =
     if (files.isEmpty) Nil
     else {
       import scala.concurrent.ExecutionContext.Implicits.global
-      val open = IndexedRead.reader(spark, Subscriptions.eventSchema, columns, Nil, Map.empty)
-      Await.result(Future.traverse(files)(s => Future(IndexedRead.rowsOf(open, s)(fold(s.getPath.getName, _)))),
-        Duration.Inf)
+      val open = new ParquetFileFormat().buildReaderWithPartitionValues(spark, Subscriptions.eventSchema,
+        new StructType(), columns, Nil, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+        spark.sessionState.newHadoopConf())
+      Await.result(Future.traverse(files) { s =>
+        Future {
+          val rows = open(PartitionedFile(InternalRow.empty, SparkPath.fromFileStatus(s), 0L, s.getLen,
+            modificationTime = s.getModificationTime, fileSize = s.getLen))
+          try fold(s.getPath.getName, rows) finally rows match { case c: java.io.Closeable => c.close(); case _ => }
+        }
+      }, Duration.Inf)
     }
 
   /** Rows of [[columns]] from the file `file`, read as Spark's internal
@@ -116,6 +123,36 @@ private[append] object SeedPart {
   }
 }
 
+/** A file's min and max position, `lo` and `hi`, and the row that holds
+  * each of its positions: row p - lo in an ordered file, one whose row i
+  * holds position lo + i (`sorted` null); else `rows(i)` holds position
+  * `sorted(i)`. */
+private[append] final class Span private (val lo: Long, val hi: Long, sorted: Array[Long], rows: Array[Int]) {
+  /** The row that holds position `p`, or -1 when the file has none. */
+  def rowOf(p: Long): Int =
+    if (p < lo || p > hi) -1
+    else if (sorted == null) (p - lo).toInt
+    else {
+      val i = java.util.Arrays.binarySearch(sorted, p)
+      if (i >= 0) rows(i) else -1
+    }
+}
+
+private[append] object Span {
+  def ordered(lo: Long, hi: Long): Span = new Span(lo, hi, null, null)
+
+  /** The span of a part: free when the part is ordered, else a sorted
+    * position -> row lookup (12 bytes per row). */
+  def of(pt: SeedPart): Span = {
+    val pos = pt.position
+    if (pos.indices.forall(i => pos(i) == pt.lo + i)) ordered(pt.lo, pt.hi)
+    else {
+      val rows = pos.indices.sortBy(pos(_)).toArray
+      new Span(pt.lo, pt.hi, rows.map(pos(_)), rows)
+    }
+  }
+}
+
 /**
  * The read side of a writer state (the reference's `stream_index` and
  * `position_index`, backend.go:52-53), kept for a log whose per-stream
@@ -123,17 +160,19 @@ private[append] object SeedPart {
  * positions are dense from 1:
  *  - each stream's positions, in revision order;
  *  - one dictionary-coded event-type id per position;
- *  - each visible file's min and max position.
+ *  - each visible file's [[Span]]: its min and max position, and the row
+ *    of each position in it.
  * Costs 8 bytes per event (its position in its stream's array) plus 4
- * (its type id) on the driver, plus per-stream and per-file entries.
+ * (its type id) on the driver, plus per-stream and per-file entries, plus
+ * 12 per event of a file that is not ordered.
  */
 private[append] final class LogIndex {
   private val streams = mutable.HashMap.empty[String, Longs]
   private val typeNames = mutable.ArrayBuffer.empty[String]
   private val typeIds = mutable.HashMap.empty[String, Int]
   private val types = new Ints
-  /** File name -> (min, max) position. */
-  val spans = mutable.HashMap.empty[String, (Long, Long)]
+  /** File name -> its span. */
+  val spans = mutable.HashMap.empty[String, Span]
 
   private def maxPos: Long = types.size.toLong
 
@@ -162,7 +201,7 @@ private[append] final class LogIndex {
         j >= 0L && j < n && part(j.toInt) < 0 && { part(j.toInt) = k; row(j.toInt) = i; true }
       }
     }
-    for (pt <- parts if pt.position.nonEmpty) spans(pt.file) = (pt.lo, pt.hi)
+    for (pt <- parts if pt.position.nonEmpty) spans(pt.file) = Span.of(pt)
     dense && (0 until n).forall { j =>
       val (pt, i) = (parts(part(j)), row(j))
       add(pt.streams(pt.stream(i)), pt.types(pt.tpe(i)), pt.revision(i), base + j + 1L)
@@ -218,15 +257,17 @@ private[append] final class LogIndex {
 /**
  * Bounded reads of a log, answered on the driver with no Spark job: the
  * log's writer state, refreshed to the directory's listing, picks the rows
- * from its [[LogIndex]], and Spark's parquet reader fetches them from the
- * files that hold them.
+ * from its [[LogIndex]], whose file spans give each answer's row in its
+ * file, and parquet's row-range read ([[EventRows]]) materializes just
+ * those rows: one row per returned row. It skips the other rows of those
+ * files, and does not read a page that holds no answer row.
  */
 private[graft] object IndexedRead {
 
   /** The rows `EventLog.read(events, opts)` returns, or None when
     * `events` is not a bare parquet relation over one log directory whose
-    * listing snapshot is the writer state's after its refresh, or the
-    * read is unbounded. */
+    * listing snapshot is the writer state's after its refresh, the read is
+    * unbounded, or a file that holds an answer row cannot be read by rows. */
   def apply(events: DataFrame, opts: ReadOptions): Option[DataFrame] =
     for {
       n <- ((opts.direction, opts.from) match {
@@ -240,7 +281,7 @@ private[graft] object IndexedRead {
       snapshot = statuses.map(Appender.entry).toSet
       spark = events.sparkSession
       (filter, all) = predicates(spark, r.dataSchema, opts)
-      (wanted, spans) <- Appender.refreshed(spark, root.toString) { st =>
+      (st, wanted, spans) <- Appender.refreshed(spark, root.toString) { st =>
         Option(st.index).filter(_ => st.files == snapshot).map { idx =>
           val probe = new GenericInternalRow(r.dataSchema.length)
           val wanted = idx.pick(opts, n, (target, v) => {
@@ -248,10 +289,10 @@ private[graft] object IndexedRead {
             probe.update(r.dataSchema.fieldIndex(field), UTF8String.fromString(v))
             filter(probe)
           })
-          (wanted, idx.spans.toMap)
+          (st, wanted, idx.spans.toMap)
         }
       }.flatten
-      rows <- fetch(spark, r, statuses, spans, wanted)
+      rows <- fetch(spark, st, statuses, spans, wanted)
       if rows.forall(all)
     } yield {
       val toRow = CatalystTypeConverters.createToScalaConverter(events.schema)
@@ -290,44 +331,39 @@ private[graft] object IndexedRead {
     }
   }
 
-  /** Spark's parquet reader, run on the driver: each file's rows of
-    * `required`, one internal row at a time. */
-  private[append] def reader(spark: SparkSession, data: StructType, required: StructType,
-                             filters: Seq[sources.Filter], options: Map[String, String]): PartitionedFile => Iterator[InternalRow] =
-    new ParquetFileFormat().buildReaderWithPartitionValues(spark, data, new StructType(), required, filters,
-      options + (FileFormat.OPTION_RETURNING_BATCH -> "false"), spark.sessionState.newHadoopConfWithOptions(options))
-
-  /** `f` over the rows `read` yields for the whole file `s`; the file is
-    * closed when `f` returns. */
-  private[append] def rowsOf[T](read: PartitionedFile => Iterator[InternalRow], s: FileStatus)(f: Iterator[InternalRow] => T): T = {
-    val rows = read(PartitionedFile(InternalRow.empty, SparkPath.fromFileStatus(s), 0L, s.getLen,
-      modificationTime = s.getModificationTime, fileSize = s.getLen))
-    try f(rows) finally rows match { case c: java.io.Closeable => c.close(); case _ => }
-  }
-
-  /** The rows at `wanted`, in its order, read on the driver from the files
-    * whose position span holds one; None when one is missing. */
-  private def fetch(spark: SparkSession, r: HadoopFsRelation, statuses: Seq[FileStatus],
-                    spans: Map[String, (Long, Long)], wanted: Array[Long]): Option[Seq[InternalRow]] = {
-    val sorted = wanted.sorted
-    val files = statuses.filter { s =>
-      spans.get(s.getPath.getName).exists { case (lo, hi) =>
-        val i = java.util.Arrays.binarySearch(sorted, lo)
-        val at = if (i >= 0) i else -i - 1
-        at < sorted.length && sorted(at) <= hi
+  /** The rows at `wanted`, in its order, read on the driver: each file
+    * whose span holds some reads just those rows ([[EventRows]]). None
+    * when such a file cannot be read by rows, or a row holds another
+    * position. The read's counts are added to `st`'s. */
+  private def fetch(spark: SparkSession, st: Appender.WriterState, statuses: Seq[FileStatus],
+                    spans: Map[String, Span], wanted: Array[Long]): Option[Seq[InternalRow]] = {
+    val posField = Subscriptions.eventSchema.fieldIndex("position")
+    val conf = spark.sessionState.newHadoopConf()
+    val found = mutable.LongMap.empty[InternalRow]
+    var (files, materialized, skipped) = (0L, 0L, 0L)
+    val read = statuses.forall { s =>
+      // (row, position) of each wanted position in the file, in row order
+      val at = spans.get(s.getPath.getName).fold(Array.empty[(Long, Long)]) { span =>
+        wanted.flatMap(p => Some(span.rowOf(p)).filter(_ >= 0).map(r => (r.toLong, p))).sortBy(_._1)
+      }
+      at.isEmpty || {
+        files += 1
+        EventRows.read(conf, s, at.map(_._1)).exists { case (rows, n) =>
+          materialized += rows.length
+          skipped += n - rows.length
+          rows.indices.forall { i =>
+            val p = at(i)._2
+            !rows(i).isNullAt(posField) && rows(i).getLong(posField) == p && { found(p) = rows(i); true }
+          }
+        }
       }
     }
-    val found = mutable.LongMap.empty[InternalRow]
-    if (files.nonEmpty) {
-      val posField = r.dataSchema.fieldIndex("position")
-      val read = reader(spark, r.dataSchema, r.dataSchema,
-        Seq(sources.GreaterThanOrEqual("position", sorted.head), sources.LessThanOrEqual("position", sorted.last)),
-        r.options)
-      for (s <- files) rowsOf(read, s)(_.foreach { row =>
-        val p = row.getLong(posField)
-        if (java.util.Arrays.binarySearch(sorted, p) >= 0) found(p) = row.copy()
-      })
+    st.synchronized {
+      st.indexedReads += 1
+      st.filesOpened += files
+      st.rowsMaterialized += materialized
+      st.rowsSkipped += skipped
     }
-    if (wanted.forall(found.contains)) Some(wanted.toSeq.map(found)) else None
+    if (read && wanted.forall(found.contains)) Some(wanted.toSeq.map(found)) else None
   }
 }

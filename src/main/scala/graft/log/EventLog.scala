@@ -25,13 +25,14 @@ import graft.model._
  * this JVM builds and a new file extends, both by a fold on the driver.
  * When the state then covers the relation's listing snapshot, its index
  * picks the answer positions, evaluating [[predicates]]' server-side
- * filter once per distinct stream or event type, and the driver reads
- * only the files whose position span holds one, with the position range
- * pushed into Spark's parquet reader. The rows it decodes are those
- * files' rows, not the log's. Every other read (another relation, a
- * DataFrame opened before the log changed, an unbounded read), and a log
- * that breaks the dense-revision or dense-position invariant, runs the
- * plan below.
+ * filter once per distinct stream or event type. The state also knows
+ * each answer's row in its file, so the driver materializes just the
+ * rows it returns: parquet's row-range read skips the other rows of those
+ * files and does not read their pages that hold no answer. Every other
+ * read (another relation, a DataFrame opened before the log changed, an
+ * unbounded read, a file without a parquet offset index or of another
+ * column layout), and a log that breaks the dense-revision or
+ * dense-position invariant, runs the plan below.
  *
  * Scale notes (100 TB):
  *  - every predicate here is a plain comparison / StartsWith on a scan

@@ -3,6 +3,10 @@ package graft.append
 import java.io.File
 import java.nio.file.Files
 
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.spark.sql.{DataFrame, Row}
 
 import graft.SparkSpec
@@ -161,6 +165,108 @@ class IndexedReadSpec extends SparkSpec {
     val want = all.map(planned(dir, _))
     assert(jobsOf { for ((o, w) <- all.zip(want)) assert(rows(EventLog.read(Appender.readLog(spark, dir), o)) == w, s"$o") } == 0)
     assert(folded(dir) == 60L)
+  }
+
+  /** The state's indexed-read counters: reads, files opened, rows materialized, rows skipped. */
+  private def readCounts(dir: String): Seq[Long] =
+    Appender.stateOf(spark, dir).fold(Seq(0L, 0L, 0L, 0L))(st =>
+      Seq(st.indexedReads, st.filesOpened, st.rowsMaterialized, st.rowsSkipped))
+
+  test("a stream tail over three files materializes exactly the rows it returns, and runs no job") {
+    val dir = freshLog()
+    for (_ <- 0 until 3) Appender.batchAppend(spark, dir, Seq(("t", events("a", "b"), AnyRevision),
+      ("u", events("c", "c", "c"), AnyRevision)))
+    val opts = ReadOptions(OneStream("t"), Backwards, FromEnd, Some(5))
+    val want = planned(dir, opts)
+    val before = readCounts(dir)
+    var got: Seq[Row] = Nil
+    assert(jobsOf { got = rows(EventLog.read(Appender.readLog(spark, dir), opts)) } == 0)
+    assert(got == want && got.map(_.getAs[Long]("revision")) == Seq(5L, 4L, 3L, 2L, 1L))
+    // 3 files of 5 rows each: 5 rows materialized, the other 10 skipped
+    assert(readCounts(dir).zip(before).map { case (a, b) => a - b } == Seq(1L, 3L, 5L, 10L))
+  }
+
+  /** 600 events over 7 streams, dense revisions and positions, written by
+    * Spark's `df.write` as one file with its rows sorted by `order`, under
+    * the session confs `confs` and the write options `options`. */
+  private def sparkWritten(order: Seq[String], confs: Map[String, String] = Map.empty,
+                           options: Map[String, String] = Map.empty): String = {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val dir = freshLog()
+    val types = Seq("a", "b", "c", "d")
+    val old = confs.keys.map(k => k -> spark.conf.getOption(k))
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try (1L to 600L).map { p =>
+      val t = types((p % 4).toInt)
+      (s"s-${p % 7}", s"w-$p", t, s"""{"p":$p}""", Map("type" -> t, "content-type" -> "ct"),
+        if (p % 3 == 0) null else s"c-$p", (p - 1) / 7, p)
+    }.toDF("stream", "uuid", "event_type", "data", "metadata", "custom_metadata", "revision", "position")
+      .coalesce(1).sortWithinPartitions(order.map(col): _*).write.options(options).mode("append").parquet(dir)
+    finally old.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    dir
+  }
+
+  /** The parquet footer of each visible file of `dir`. */
+  private def footers(dir: String): Seq[ParquetMetadata] =
+    ParquetDirs.visibleParquet(spark, dir).map { s =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromStatus(s, spark.sessionState.newHadoopConf()))
+      try r.getFooter finally r.close()
+    }
+
+  /** The grid's 50-row reads, plus its $all reads from the middle of a 600-event log. */
+  private val wideGrid: Seq[ReadOptions] = {
+    val reads = grid.filter(_.count.contains(50L))
+    reads ++ reads.collect { case o @ ReadOptions(AllStreams, _, From(v), _, _) => o.copy(from = From(v * 31)) }
+  }
+
+  /** Every wide-grid read of `dir` equals the plan's, with no Spark job
+    * and one materialized row per returned row. */
+  private def assertRowExact(dir: String): Unit = {
+    val want = wideGrid.map(planned(dir, _))
+    val before = readCounts(dir)
+    var got: Seq[Seq[Row]] = Nil
+    assert(jobsOf { got = wideGrid.map(o => rows(EventLog.read(Appender.readLog(spark, dir), o))) } == 0)
+    for ((o, (g, w)) <- wideGrid.zip(got.zip(want))) assert(g == w, s"$o")
+    assert(want.exists(_.size > 1))
+    assert(readCounts(dir)(2) - before(2) == want.map(_.size).sum)
+  }
+
+  test("files of several row groups and pages, in position order or not, read as the plan does") {
+    val small = Map("parquet.block.size" -> "4096", "parquet.block.size.row.check.min" -> "20",
+      "parquet.page.row.count.limit" -> "16", "parquet.page.size.row.check.min" -> "8")
+    for (order <- Seq(Seq("position"), Seq("stream", "position"))) {
+      val dir = sparkWritten(order, options = small)
+      assert(footers(dir).forall(_.getBlocks.size > 1), s"$order")
+      assertRowExact(dir)
+    }
+  }
+
+  test("a file in Spark's legacy parquet format reads as the plan does") {
+    val dir = sparkWritten(Seq("position"), confs = Map("spark.sql.parquet.writeLegacyFormat" -> "true"))
+    // the legacy map layout annotates its repeated group MAP_KEY_VALUE, the standard one leaves it bare
+    assert(footers(dir).forall { f =>
+      val schema = f.getFileMetaData.getSchema
+      schema.getType(schema.getFieldIndex("metadata")).asGroupType.getType(0).getLogicalTypeAnnotation ==
+        LogicalTypeAnnotation.MapKeyValueTypeAnnotation.getInstance
+    }, footers(dir).map(_.getFileMetaData.getSchema))
+    assertRowExact(dir)
+  }
+
+  test("a file the plan reads but the row reader does not take makes the read take the plan, and stays correct") {
+    import spark.implicits._
+    val dir = freshLog()
+    // `revision` as int32: Spark's reader widens it to the schema's long, the row reader takes only int64
+    (1 to 12).map(p => (s"s-${p % 2}", s"n-$p", "a", "{}", Map("type" -> "a", "content-type" -> "ct"), null: String,
+      (p - 1) / 2, p.toLong))
+      .toDF("stream", "uuid", "event_type", "data", "metadata", "custom_metadata", "revision", "position")
+      .coalesce(1).write.mode("append").parquet(dir)
+    for (o <- Seq(ReadOptions(OneStream("s-1"), Backwards, FromEnd, Some(3)), ReadOptions(AllStreams, Forwards, From(4), Some(5)))) {
+      var got: Seq[Row] = Nil
+      assert(jobsOf { got = rows(EventLog.read(Appender.readLog(spark, dir), o)) } > 0, s"$o")
+      assert(got == planned(dir, o) && got.nonEmpty, s"$o")
+    }
+    assert(readCounts(dir).take(2) == Seq(2L, 2L))
   }
 
   test("a read of a log with a null position fails loudly, as a write does") {
